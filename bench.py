@@ -381,9 +381,7 @@ def main() -> None:
     from data_ingestion_service_spark.session import get_spark
 
     load_all_operators()
-    # 8 shuffle partitions at bench scale; AQE re-sizes upward when data
-    # demands it, so this does not bake in a small-data assumption.
-    spark = get_spark(app_name="ingestion-engine-bench", shuffle_partitions=8)
+    spark = get_spark(app_name="ingestion-engine-bench")
 
     keys = [k for k in HEADLINE if k in QUERIES]
     # Warm-up round: JIT/codegen + parquet footer caches (untimed). Also

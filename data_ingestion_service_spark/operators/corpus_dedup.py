@@ -33,6 +33,7 @@ from data_ingestion_service_spark.operators.llm_extended import (
     _EMBED_NEAR_DUP_ORACLE,
     _MH_COL_LIST,
     _MH_MIN_COLS,
+    embed_near_dup_pairs,
 )
 
 from data_ingestion_service_spark.registry import register
@@ -275,96 +276,136 @@ LIMIT 10
 )
 
 
+class PQCodebookError(LookupError):
+    """The probe row or a codebook seed row is missing from embeddings."""
+
+
+def _pq_codebook(spark: SparkSession, sf_dir: str):
+    """(K×64 seed matrix, 1×64 probe row) from the pq_codebook store: the
+    4 seed rows and probe row 0 as f64, persisted once per (session, sf).
+    The codebook is tiny by design; it rides the code kernel's closure,
+    and the probe's t-table is computed from it on the driver."""
+    import numpy as np
+
+    def build() -> DataFrame:
+        rows = (
+            load_table(spark, sf_dir, "embeddings")
+            .filter(F.col("vec_id").isin(0, *_PQ_SEEDS))
+            .select("vec_id", as_double("embedding").alias("v"))
+        )
+        found = {r.vec_id for r in rows.select("vec_id").collect()}
+        missing = sorted({0, *_PQ_SEEDS} - found)
+        if missing:
+            raise PQCodebookError(
+                f"embeddings under {sf_dir} lack vec_id {missing}: PQ needs "
+                f"probe 0 and codebook seeds {list(_PQ_SEEDS)}"
+            )
+        return rows
+
+    rows = {
+        r.vec_id: r.v
+        for r in session_persisted(spark, ("pq_codebook", sf_dir), build).collect()
+    }
+    cent_mat = np.array([rows[seed] for seed in _PQ_SEEDS], dtype=np.float64)
+    return cent_mat, np.array([rows[0]], dtype=np.float64)
+
+
+def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, pq_code, code0..code3) for every non-probe vector,
+    persisted once per (session, sf) — the PQ code table, the searchable
+    index. Built through the pq_codebook store.
+
+    The 16 per-row sub-distance folds run in ONE Arrow ``mapInPandas``
+    kernel emitting the RAW folds (functions/vector_kernels.py replays
+    the identical left-to-right IEEE fold per dimension), so each fold is
+    computed once instead of in interpreted ``aggregate(zip_with(...))``
+    HOFs that never codegen. Rounding and the argmin CASE stay JVM-side
+    on the kernel's plain columns, so codes stay bit-identical to the
+    DuckDB oracle."""
+
+    def build() -> DataFrame:
+        from data_ingestion_service_spark.functions import vector_kernels as vk
+
+        cent_mat, _ = _pq_codebook(spark, sf_dir)
+        dist_cols = [f"d{s}_{k}" for s in range(_PQ_M) for k in range(_PQ_K)]
+
+        def sub_dists(batches):
+            import pandas as pd
+
+            for pdf in batches:
+                if pdf.empty:
+                    continue
+                mat = vk.stack(pdf["v"])
+                out = {"vec_id": pdf["vec_id"].to_numpy()}
+                for s in range(_PQ_M):
+                    sub = mat[:, s * _PQ_D : (s + 1) * _PQ_D]
+                    for k in range(_PQ_K):
+                        out[f"d{s}_{k}"] = vk.fold_sq_l2(
+                            sub, cent_mat[k, s * _PQ_D : (s + 1) * _PQ_D]
+                        )
+                yield pd.DataFrame(out)
+
+        # Filter BEFORE the kernel so the vec_id predicate reaches the
+        # parquet scan (mapInPandas is a pushdown barrier).
+        raw = (
+            load_table(spark, sf_dir, "embeddings")
+            .filter(F.col("vec_id") != 0)
+            .select("vec_id", as_double("embedding").alias("v"))
+            .mapInPandas(
+                sub_dists,
+                schema="vec_id bigint, "
+                + ", ".join(f"{c} double" for c in dist_cols),
+            )
+        )
+
+        def rd(s: int, k: int):
+            # The SAME JVM round the HOF plan applied to the same raw double.
+            return F.round(F.col(f"d{s}_{k}"), 6)
+
+        def argmin(d):
+            return (
+                F.when((d[0] <= d[1]) & (d[0] <= d[2]) & (d[0] <= d[3]), 0)
+                .when((d[1] <= d[2]) & (d[1] <= d[3]), 1)
+                .when(d[2] <= d[3], 2)
+                .otherwise(3)
+            )
+
+        codes = raw.select(
+            "vec_id",
+            *[
+                argmin([rd(s, k) for k in range(_PQ_K)]).alias(f"code{s}")
+                for s in range(_PQ_M)
+            ],
+        )
+        return codes.select(
+            "vec_id",
+            (
+                F.col("code0") * 64
+                + F.col("code1") * 16
+                + F.col("code2") * 4
+                + F.col("code3")
+            ).alias("pq_code"),
+            *[f"code{s}" for s in range(_PQ_M)],
+        )
+
+    return session_persisted(spark, ("pq_codes", sf_dir), build)
+
+
 def _pq_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, pq_code, adc_dist) for every non-probe vector — the PQ
     code table scored against probe 0; shared by the plain PQ search
     and the re-ranked variant.
 
-    Round 8: the 16 per-row sub-distance folds moved from interpreted
-    ``aggregate(zip_with(...))`` HOFs (never codegen'd — the 100 TB
-    bottleneck VERDICT r7 flagged) into ONE Arrow ``mapInPandas``
-    kernel emitting the RAW folds (functions/vector_kernels.py replays
-    the identical left-to-right IEEE fold per dimension). Rounding and
-    the argmin CASE stay JVM-side on the kernel's plain columns — the
-    exact ``F.round(.., 6)`` + tie-break chain as before, now over
-    cheap column refs instead of 3-4 re-evaluations of each HOF — so
-    codes, t-tables and the DuckDB oracle stay bit-identical. (The r5
-    finding that exploded scalar codegen loses to compact-interpreted
-    no longer applies: the kernel computes each fold once.)"""
-    import numpy as np
-
+    Built once per session: the codebook (pq_codebook) and the code table
+    (pq_codes), neither of which depends on the probe. Each call computes
+    the probe's 16-entry t-table on the driver and scores the persisted
+    codes with a JVM-side ADC ``CASE`` — no Python stage, no broadcast."""
     from data_ingestion_service_spark.functions import vector_kernels as vk
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = as_double("embedding")
-
-    # Codebook: sub-vectors of the 4 seed rows PLUS the probe row,
-    # collected once (a 5x64-float bounded pull — the PQ codebook is
-    # tiny by design; it rides the kernel closure like q_label_noise's
-    # probe block). r12: the probe rides the same collect so its 16
-    # t-table values compute driver-side below — the old 1-row
-    # mapInPandas probe branch cost a broadcast job + an Arrow worker
-    # round-trip per action (same-session A/B: ~2.2 → ~1.4s warm).
-    seed_rows = {
-        r.vec_id: [float(x) for x in r.v]
-        for r in emb.filter(F.col("vec_id").isin(0, *_PQ_SEEDS))
-        .select("vec_id", e.alias("v"))
-        .collect()
-    }
-    cent_mat = np.array([seed_rows[seed] for seed in _PQ_SEEDS])  # K x 64
-    probe_mat = np.array([seed_rows[0]])  # 1 x 64
-
-    dist_cols = [f"d{s}_{k}" for s in range(_PQ_M) for k in range(_PQ_K)]
-
-    def sub_dists(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = vk.stack(pdf["v"])
-            out = {"vec_id": pdf["vec_id"].to_numpy()}
-            for s in range(_PQ_M):
-                sub = mat[:, s * _PQ_D : (s + 1) * _PQ_D]
-                for k in range(_PQ_K):
-                    out[f"d{s}_{k}"] = vk.fold_sq_l2(
-                        sub, cent_mat[k, s * _PQ_D : (s + 1) * _PQ_D]
-                    )
-            yield pd.DataFrame(out)
-
-    schema = "vec_id bigint, " + ", ".join(f"{c} double" for c in dist_cols)
-
-    def raw_for(pred):
-        # Filter BEFORE the kernel so the vec_id predicate reaches the
-        # parquet scan (mapInPandas is a pushdown barrier): the probe
-        # branch reads one row-group, not the corpus.
-        return emb.filter(pred).select("vec_id", e.alias("v")).mapInPandas(
-            sub_dists, schema=schema
-        )
-
-    def rd(s: int, k: int):
-        # The SAME JVM round the HOF plan applied to the same raw double.
-        return F.round(F.col(f"d{s}_{k}"), 6)
-
-    def argmin(d):
-        return (
-            F.when((d[0] <= d[1]) & (d[0] <= d[2]) & (d[0] <= d[3]), 0)
-            .when((d[1] <= d[2]) & (d[1] <= d[3]), 1)
-            .when(d[2] <= d[3], 2)
-            .otherwise(3)
-        )
-
-    codes = raw_for(F.col("vec_id") != 0).select(
-        "vec_id",
-        *[
-            argmin([rd(s, k) for k in range(_PQ_K)]).alias(f"code{s}")
-            for s in range(_PQ_M)
-        ],
-    )
+    cent_mat, probe_mat = _pq_codebook(spark, sf_dir)
     # Probe t-table: the SAME kernel fold (vk.fold_sq_l2) over the same
-    # f64 sub-vectors, run once on the driver's 1x64 probe row — the
-    # values are bit-identical to the former mapInPandas probe branch,
-    # and the JVM F.round(lit, 6) below is the identical rounding step.
+    # f64 sub-vectors the code kernel folds, and the JVM F.round(lit, 6)
+    # below is the identical rounding step.
     tvals = {
         (s, k): float(
             vk.fold_sq_l2(
@@ -388,20 +429,20 @@ def _pq_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(rt(s, 3))
         )
         adc = term if adc is None else adc + term
-    return codes.select(
-        "vec_id",
-        (
-            F.col("code0") * 64
-            + F.col("code1") * 16
-            + F.col("code2") * 4
-            + F.col("code3")
-        ).alias("pq_code"),
-        F.round(adc, 4).alias("adc_dist"),
+    return pq_codes(spark, sf_dir).select(
+        "vec_id", "pq_code", F.round(adc, 4).alias("adc_dist")
     )
 
 
 @register("q_knn_pq", oracle=_KNN_PQ_ORACLE)
 def q_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Product-quantization kNN: top 10 by ADC distance to probe 0.
+
+    Built once per session: the codebook rows and the code table (see
+    :func:`_pq_scored`). Each call derives the probe's t-table on the
+    driver and ranks the persisted codes JVM-side; the codes never
+    depend on the probe, so re-encoding the corpus per call repeats the
+    whole Python kernel for identical codes."""
     return (
         _pq_scored(spark, sf_dir)
         .orderBy(F.asc("adc_dist"), F.asc("vec_id"))
@@ -1772,9 +1813,9 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pruned-block-matmul engine (exact, threshold 0.45), so this key adds
 # the SemDeDup decision layer: within a cell, every vector with a
 # lower-id partner above threshold is dropped (keep-first). Reports
-# per-cell corpus reduction. Scale shape: the pair list is result-sized
-# and broadcasts through the two bucket joins; the bucket signature is
-# a map-only pass. At production scale cells come from k-means with
+# per-cell corpus reduction. Scale shape: the pair list is the
+# result-sized embed_near_dup_pairs session store and broadcasts through
+# the two bucket joins; the bucket signature is a map-only pass. At production scale cells come from k-means with
 # k ∝ N (q_knn_ivf_kmeans shows the assignment pass).
 # ---------------------------------------------------------------------------
 
@@ -1806,19 +1847,13 @@ GROUP BY s.bucket
 
 @register("q_semdedup", oracle=_SEMDEDUP_ORACLE)
 def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_ingestion_service_spark.registry import QUERIES
-
     emb = load_table(spark, sf_dir, "embeddings")
-    # Corpus-sized signature pass via the shared Arrow kernel (round 8).
-    # r11 optimization (guide §4/§5): sigs has three consumers (both
-    # bucket lookups and the report rollup) and pairs two — unpersisted,
-    # the Arrow kernel ran 3x and the near-dup pair pipeline 2x per call
-    # (11 steady-state jobs, 18 Python plan nodes). Persist both for the
-    # action: sigs is two ints per vector, pairs is result-sized.
+    # Corpus-sized signature pass via the shared Arrow kernel. sigs has
+    # three consumers (both bucket lookups and the report rollup);
+    # unpersisted, the kernel would run once per consumer. Persist it for
+    # the action: two ints per vector. The pair list is a session store.
     sigs = call_persisted(_lsh_sigs_arrow(emb).select("vec_id", "bucket"))
-    pairs = call_persisted(
-        QUERIES["q_embed_near_dup"](spark, sf_dir).select("vec_a", "vec_b")
-    )
+    pairs = embed_near_dup_pairs(spark, sf_dir).select("vec_a", "vec_b")
     sa = sigs.select(F.col("vec_id").alias("vec_a"), F.col("bucket").alias("b_a"))
     sb = sigs.select(F.col("vec_id").alias("vec_b"), F.col("bucket").alias("b_b"))
     # Result-sized pair list broadcasts through both bucket lookups; the

@@ -35,7 +35,7 @@ from data_ingestion_service_spark.operators.llm import (
 )
 from data_ingestion_service_spark.functions.vector import as_double, cosine
 from data_ingestion_service_spark.registry import register
-from data_ingestion_service_spark.session import call_persisted, session_persisted
+from data_ingestion_service_spark.session import session_persisted
 
 # `sh` is MATERIALIZED: DuckDB re-inlines a plain CTE once per
 # reference, and q_lsh_recall's oracle references sh ~6 times (sizes,
@@ -266,6 +266,9 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 #      Pandas UDF computes the whole 512×512 cosine matrix with one BLAS
 #      matmul per pair. ~50× faster than a per-pair higher-order-function
 #      dot product (measured 67s → this, sf0.1).
+# The qualifying pair list is itself a session store
+# (embed_near_dup_pairs), built once and read by q_embed_near_dup,
+# q_semdedup and q_dedup_modality_diff.
 #
 # Parity: the UDF prefilters on the raw value with a LOOSE bound
 # (threshold − 1e-3); the exact threshold is applied JVM-side on the
@@ -293,11 +296,9 @@ _NEAR_DUP_COS_THRESHOLD = 0.45
 def _embed_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vectors grouped into ~512-row blocks WITH per-block prune stats
     (centroid of the normalized vectors + covering radius) folded into
-    the same Arrow pass — one shuffle, one Python stage, instead of the
-    round-2 shape of a separate stats job over the block table.
-    Session-cached persisted (consumed twice per query: candidate-pair
-    prune + pair join; reused across invocations instead of leaking one
-    persisted copy per call)."""
+    the same Arrow pass — one shuffle, one Python stage, where a separate
+    stats job would scan the block table again. Session-persisted: the
+    pair build consumes it twice (candidate-pair prune + pair join)."""
 
     def build() -> DataFrame:
         import numpy as np
@@ -380,78 +381,96 @@ def _embed_candidate_pairs(blocks: DataFrame, loose: float) -> DataFrame:
     )
 
 
-@register("q_embed_near_dup", oracle=_EMBED_NEAR_DUP_ORACLE)
-def q_embed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
+def embed_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cosine ≥ threshold vector pairs (vec_a < vec_b, cos_sim at 4dp),
+    persisted once per (session, sf) — the embedding counterpart of
+    near_dup_pairs. Built through the embed_blocks store, so retiring
+    that store retires this one too."""
     import numpy as np
 
-    blocks = _embed_blocks(spark, sf_dir)
-    loose = _NEAR_DUP_COS_THRESHOLD - 1e-3
-    cand = _embed_candidate_pairs(blocks, loose)
-    # Explicit repartition over the full (blk_a, blk_b) pair key: the
-    # second join alone leaves the data partitioned by blk_b (≤ n_blocks
-    # busy partitions — the round-2 parallelism cap); hashing on the pair
-    # key spreads the B² matmul tasks across the cluster. Fixed partition
-    # count opts this exchange out of AQE coalescing (bytes-based
-    # coalescing would re-serialize the tiny-but-compute-heavy pairs).
-    par = spark.sparkContext.defaultParallelism
-    pairs = (
-        cand.join(
-            blocks.select(
-                F.col("blk").alias("blk_a"),
-                F.col("ids").alias("ids_a"),
-                F.col("mat").alias("mat_a"),
-            ),
-            "blk_a",
+    def build() -> DataFrame:
+        blocks = _embed_blocks(spark, sf_dir)
+        loose = _NEAR_DUP_COS_THRESHOLD - 1e-3
+        cand = _embed_candidate_pairs(blocks, loose)
+        # Explicit repartition over the full (blk_a, blk_b) pair key: the
+        # second join alone leaves the data partitioned by blk_b (≤
+        # n_blocks busy partitions); hashing on the pair key spreads the
+        # B² matmul tasks across the cluster. Fixed partition count opts
+        # this exchange out of AQE coalescing (bytes-based coalescing
+        # would re-serialize the tiny-but-compute-heavy pairs).
+        par = spark.sparkContext.defaultParallelism
+        pairs = (
+            cand.join(
+                blocks.select(
+                    F.col("blk").alias("blk_a"),
+                    F.col("ids").alias("ids_a"),
+                    F.col("mat").alias("mat_a"),
+                ),
+                "blk_a",
+            )
+            .join(
+                blocks.select(
+                    F.col("blk").alias("blk_b"),
+                    F.col("ids").alias("ids_b"),
+                    F.col("mat").alias("mat_b"),
+                ),
+                "blk_b",
+            )
+            .repartition(par, "blk_a", "blk_b")
         )
-        .join(
-            blocks.select(
-                F.col("blk").alias("blk_b"),
-                F.col("ids").alias("ids_b"),
-                F.col("mat").alias("mat_b"),
-            ),
-            "blk_b",
+
+        def block_cosine(batches):
+            from data_ingestion_service_spark.chaos import maybe_fail
+
+            maybe_fail("block_cosine")  # retry rung (no-op unless enabled)
+            for pdf in batches:
+                out_a, out_b, out_s = [], [], []
+                for ia_l, ma_l, ib_l, mb_l in zip(
+                    pdf["ids_a"], pdf["mat_a"], pdf["ids_b"], pdf["mat_b"]
+                ):
+                    ids_a = np.asarray(ia_l, dtype=np.int64)
+                    ids_b = np.asarray(ib_l, dtype=np.int64)
+                    ma = np.array([np.asarray(v) for v in ma_l], dtype=np.float64)
+                    mb = np.array([np.asarray(v) for v in mb_l], dtype=np.float64)
+                    ma /= np.linalg.norm(ma, axis=1, keepdims=True)
+                    mb /= np.linalg.norm(mb, axis=1, keepdims=True)
+                    sims = ma @ mb.T
+                    ia, ib = np.nonzero(sims >= loose)
+                    keep = ids_a[ia] < ids_b[ib]
+                    out_a.append(ids_a[ia][keep])
+                    out_b.append(ids_b[ib][keep])
+                    out_s.append(sims[ia[keep], ib[keep]])
+                import pandas as pd
+
+                if out_a:
+                    yield pd.DataFrame(
+                        {
+                            "vec_a": np.concatenate(out_a),
+                            "vec_b": np.concatenate(out_b),
+                            "raw_sim": np.concatenate(out_s),
+                        }
+                    )
+
+        scored = pairs.mapInPandas(
+            block_cosine, schema="vec_a bigint, vec_b bigint, raw_sim double"
         )
-        .repartition(par, "blk_a", "blk_b")
-    )
+        return scored.select(
+            "vec_a", "vec_b", F.round(F.col("raw_sim"), 4).alias("cos_sim")
+        ).filter(F.col("cos_sim") >= _NEAR_DUP_COS_THRESHOLD)
 
-    def block_cosine(batches):
-        from data_ingestion_service_spark.chaos import maybe_fail
+    return session_persisted(spark, ("embed_near_dup_pairs", sf_dir), build)
 
-        maybe_fail("block_cosine")  # retry rung (no-op unless enabled)
-        for pdf in batches:
-            out_a, out_b, out_s = [], [], []
-            for ia_l, ma_l, ib_l, mb_l in zip(
-                pdf["ids_a"], pdf["mat_a"], pdf["ids_b"], pdf["mat_b"]
-            ):
-                ids_a = np.asarray(ia_l, dtype=np.int64)
-                ids_b = np.asarray(ib_l, dtype=np.int64)
-                ma = np.array([np.asarray(v) for v in ma_l], dtype=np.float64)
-                mb = np.array([np.asarray(v) for v in mb_l], dtype=np.float64)
-                ma /= np.linalg.norm(ma, axis=1, keepdims=True)
-                mb /= np.linalg.norm(mb, axis=1, keepdims=True)
-                sims = ma @ mb.T
-                ia, ib = np.nonzero(sims >= loose)
-                keep = ids_a[ia] < ids_b[ib]
-                out_a.append(ids_a[ia][keep])
-                out_b.append(ids_b[ib][keep])
-                out_s.append(sims[ia[keep], ib[keep]])
-            import pandas as pd
 
-            if out_a:
-                yield pd.DataFrame(
-                    {
-                        "vec_a": np.concatenate(out_a),
-                        "vec_b": np.concatenate(out_b),
-                        "raw_sim": np.concatenate(out_s),
-                    }
-                )
+@register("q_embed_near_dup", oracle=_EMBED_NEAR_DUP_ORACLE)
+def q_embed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-cosine near-dup pairs, read from a session store.
 
-    cand = pairs.mapInPandas(
-        block_cosine, schema="vec_a bigint, vec_b bigint, raw_sim double"
-    )
-    return cand.select(
-        "vec_a", "vec_b", F.round(F.col("raw_sim"), 4).alias("cos_sim")
-    ).filter(F.col("cos_sim") >= _NEAR_DUP_COS_THRESHOLD)
+    Built once per session: the block table (embed_blocks) and the
+    pruned block matmul (embed_near_dup_pairs). Each call only scans the
+    persisted pair list — the pairs depend on nothing but the table and
+    the fixed threshold, so recomputing them per call repeats the whole
+    Python matmul for an identical answer."""
+    return embed_near_dup_pairs(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -1116,54 +1135,79 @@ def _argmax_centroid_arrow(vecs: DataFrame, cent_rows) -> DataFrame:
     return raw.select("vec_id", assign.alias("cid"), "emb")
 
 
+def _ivf_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double("embedding").alias("emb")
+    )
+
+
+def ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(cid, c): the k learned IVF centroids, persisted once per
+    (session, sf). The build collects the k init rows (vec_id < 4) to
+    ride the assignment kernel's closure; the persisted plan is one Arrow
+    assignment pass and the relational recenter ((cid, dim) average at
+    6dp)."""
+
+    def build() -> DataFrame:
+        vecs = _ivf_vecs(spark, sf_dir)
+        init_rows = (
+            vecs.filter(F.col("vec_id") < 4)
+            .select(F.col("vec_id").alias("cid"), F.col("emb").alias("c"))
+            .collect()
+        )
+        return (
+            _argmax_centroid_arrow(vecs, init_rows)
+            .select("cid", F.posexplode("emb").alias("p0", "v"))
+            .groupBy("cid", (F.col("p0") + 1).alias("p"))
+            .agg(F.round(F.avg("v"), 6).alias("cv"))
+            .groupBy("cid")
+            .agg(
+                F.transform(
+                    F.sort_array(F.collect_list(F.struct("p", "cv"))),
+                    lambda s: s["cv"],
+                ).alias("c")
+            )
+        )
+
+    return session_persisted(spark, ("ivf_centroids", sf_dir), build)
+
+
+def ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, cid, emb): every vector's IVF cell from the second
+    assignment pass against :func:`ivf_centroids`, persisted once per
+    (session, sf). Built through the centroid store, so retiring the
+    centroids retires the assignment too."""
+
+    def build() -> DataFrame:
+        cent_rows = ivf_centroids(spark, sf_dir).collect()
+        return _argmax_centroid_arrow(_ivf_vecs(spark, sf_dir), cent_rows)
+
+    return session_persisted(spark, ("ivf_assign", sf_dir), build)
+
+
 @register("q_knn_ivf_kmeans", oracle=_KNN_KMEANS_ORACLE)
 def q_knn_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF with one learned-centroid iteration. Round 8: both assignment
-    passes run through _argmax_centroid_arrow (collected k×64 centroids
-    ride the kernel closure — two bounded driver round-trips, the MLlib
-    shape), replacing the N×k crossJoin + vec_id window shuffle with a
-    map-only Arrow pass. Recentering stays relational ((cid, dim) agg).
-    Same oracle, bit-identical assignment (4dp round stays JVM-side)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    # r11 optimization (guide §5): vecs feeds the init collect, the a1
-    # kernel and both probe lookups, and a1 feeds the recenter collect
-    # AND the a2 kernel — unpersisted, the first Arrow assignment ran
-    # twice and the scan four times (2.8s noop wall). Persist both
-    # |embeddings|-bounded tables per call; each pass now runs once.
-    vecs = call_persisted(emb.select("vec_id", as_double("embedding").alias("emb")))
-    init_rows = (
-        vecs.filter(F.col("vec_id") < 4)
-        .select(F.col("vec_id").alias("cid"), F.col("emb").alias("c"))
-        .collect()
-    )
-    a1 = call_persisted(_argmax_centroid_arrow(vecs, init_rows))
-    cent = (
-        a1.select("cid", F.posexplode("emb").alias("p0", "v"))
-        .groupBy("cid", (F.col("p0") + 1).alias("p"))
-        .agg(F.round(F.avg("v"), 6).alias("cv"))
-        .groupBy("cid")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("p", "cv"))), lambda s: s["cv"]
-            ).alias("c")
-        )
-    )
-    cent_rows = cent.collect()
-    a2 = _argmax_centroid_arrow(a1.select("vec_id", "emb"), cent_rows)
-    probe = vecs.filter(F.col("vec_id") == 0).select(F.col("emb").alias("pe"))
-    # The collected k-row centroid table re-enters as a local relation so
-    # `best` doesn't recompute the whole a1→recenter lineage; its cosine
-    # + 4dp round stay JVM-side, identical to before.
-    cent_small = spark.createDataFrame(cent_rows, schema=cent.schema)
+    """IVF search with one learned-centroid iteration, probed per call.
+
+    Built once per session: the centroids (ivf_centroids: init collect,
+    first Arrow assignment, recenter) and every vector's cell
+    (ivf_assign: second Arrow assignment). Neither depends on the probe,
+    so a call only picks the probe's best cell and ranks that cell's
+    vectors — JVM-side over the two persisted tables, with no Python
+    stage. Assignment rounding stays JVM-side (4dp), so cells match the
+    oracle bit-for-bit."""
+    cent = ivf_centroids(spark, sf_dir)
+    assign = ivf_assign(spark, sf_dir)
+    probe = assign.filter(F.col("vec_id") == 0).select(F.col("emb").alias("pe"))
     best = (
-        cent_small.crossJoin(F.broadcast(probe))
+        cent.crossJoin(F.broadcast(probe))
         .select("cid", F.round(cosine(F.col("c"), F.col("pe")), 4).alias("csim"))
         .orderBy(F.desc("csim"), F.asc("cid"))
         .limit(1)
         .select("cid")
     )
     return (
-        a2.join(F.broadcast(best), "cid", "left_semi")
+        assign.join(F.broadcast(best), "cid", "left_semi")
         .filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(probe))
         .select(
@@ -1177,14 +1221,14 @@ def q_knn_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # q_knn_ivf_arrow — the SAME learned-centroid IVF search as
-# q_knn_ivf_kmeans, executed on the Arrow path: centroids (tiny: k×64)
-# are computed relationally and collected once, then a mapInPandas
-# kernel scores whole Arrow batches against them with one numpy matmul —
-# assignment, cell filter and cosine in vectorized float64 — and the JVM
-# does the exact top-k. This is the execution shape for wide fan-out ANN
-# at 100 TB: broadcast small centroids, stream vector batches through
-# BLAS, never materialize per-pair rows. Same oracle as the DataFrame
-# variant (identical algorithm, 4dp rounding pins the cell assignment).
+# q_knn_ivf_kmeans, executed on the Arrow path: the k×64 centroids come
+# from the shared ivf_centroids store, then a mapInPandas kernel scores
+# whole Arrow batches against them with one numpy matmul — assignment,
+# cell filter and cosine in vectorized float64 — and the JVM does the
+# exact top-k. This is the execution shape for wide fan-out ANN at
+# 100 TB: broadcast small centroids, stream vector batches through BLAS,
+# never materialize per-pair rows. Same oracle as the DataFrame variant
+# (identical algorithm, 4dp rounding pins the cell assignment).
 # ---------------------------------------------------------------------------
 
 
@@ -1192,26 +1236,8 @@ def q_knn_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_knn_ivf_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", as_double("embedding").alias("emb"))
-    init_rows = (
-        vecs.filter(F.col("vec_id") < 4)
-        .select(F.col("vec_id").alias("cid"), F.col("emb").alias("c"))
-        .collect()
-    )
-    a1 = _argmax_centroid_arrow(vecs, init_rows)
-    cent_rows = (
-        a1.select("cid", F.posexplode("emb").alias("p0", "v"))
-        .groupBy("cid", (F.col("p0") + 1).alias("p"))
-        .agg(F.round(F.avg("v"), 6).alias("cv"))
-        .groupBy("cid")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("p", "cv"))), lambda s: s["cv"]
-            ).alias("c")
-        )
-        .collect()
-    )
+    vecs = _ivf_vecs(spark, sf_dir)
+    cent_rows = ivf_centroids(spark, sf_dir).collect()
     cids = np.array([r.cid for r in cent_rows])
     cents = np.array([r.c for r in cent_rows], dtype=np.float64)  # k × 64
     probe = np.array(
@@ -1256,9 +1282,7 @@ def q_knn_ivf_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
             out["cos_sim"] = np.round(_cos(mat[mask], probe), 4)
             yield out
 
-    scored = a1.select("vec_id", "emb").mapInPandas(
-        search_cell, schema="vec_id bigint, cos_sim double"
-    )
+    scored = vecs.mapInPandas(search_cell, schema="vec_id bigint, cos_sim double")
     return scored.orderBy(F.desc("cos_sim"), F.asc("vec_id")).limit(5)
 
 

@@ -1386,7 +1386,7 @@ SELECT
 def q_dedup_modality_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_ingestion_service_spark.operators.llm import near_dup_pairs
     from data_ingestion_service_spark.operators.llm_extended import (
-        q_embed_near_dup,
+        embed_near_dup_pairs,
     )
 
     emb_ids = load_table(spark, sf_dir, "embeddings").select(
@@ -1404,7 +1404,7 @@ def q_dedup_modality_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.broadcast(ids.select(F.col("doc_id").alias("doc_b"))), "doc_b"
         )
     )
-    ep = q_embed_near_dup(spark, sf_dir).select(
+    ep = embed_near_dup_pairs(spark, sf_dir).select(
         F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
     )
     ep = ep.join(

@@ -10,8 +10,7 @@ Two contexts use this module:
 
 Scale posture (100 TB / 1000 executors): all tuning here is *declarative*
 (AQE, broadcast thresholds, partition sizing) so the same plan text scales
-with cluster size; nothing below hard-codes local-mode assumptions except
-the test-only shuffle-partition count in :func:`get_spark`.
+with cluster size; nothing below hard-codes local-mode assumptions.
 """
 
 from __future__ import annotations
@@ -66,7 +65,8 @@ RUNTIME_CONFS: dict[str, str] = {
 _CONFIGURED_SESSIONS: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 
 # Session-scoped registry of build-once persisted DataFrames (index-like
-# intermediates: LSH band index, embed blocks, dedup labels). Bounds
+# intermediates: LSH band index, dedup labels, and the embedding family's
+# blocks, near-dup pairs, IVF centroids/assignment and PQ codebook/codes). Bounds
 # persist lifetime: repeated operator invocations reuse the one persisted
 # copy per (session, key) instead of stacking a fresh persisted DataFrame
 # per call — over a 161-query bench session those copies accumulate into
@@ -324,21 +324,16 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
 def get_spark(
     app_name: str = "data-ingestion-service-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a tuned local session for tests and bench runs."""
+    """Build (or reuse) a tuned local session for tests and bench runs.
+
+    The shuffle-partition count comes from RUNTIME_CONFS like every other
+    runtime conf, so a session built here and the driver's session agree."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # Local fixtures are tiny; AQE coalesces upward-sized shuffles at
-        # runtime, so a small static number keeps per-query overhead low
-        # while the same code on a real cluster would set this ~2-3x cores.
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))),
-        )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         # Arrow for any pandas_udf / toPandas path (vectorized transfer).

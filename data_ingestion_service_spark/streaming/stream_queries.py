@@ -70,9 +70,8 @@ def stream_session(spark: SparkSession) -> SparkSession:
             child._ingest_stream_child = True
             ensure_session_confs(child)
             # Respect a caller-level override of the drain-relevant conf
-            # (get_spark(shuffle_partitions=N), test-set values): the
-            # child starts from the parent's CURRENT value, not the
-            # RUNTIME_CONFS default (ADVICE r9).
+            # (a value set on the parent session): the child starts from
+            # the parent's CURRENT value, not the RUNTIME_CONFS default.
             try:
                 child.conf.set(
                     "spark.sql.shuffle.partitions",

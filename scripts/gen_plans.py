@@ -61,7 +61,7 @@ def main() -> None:
     from data_ingestion_service_spark.session import get_spark
 
     load_all_operators()
-    spark = get_spark(app_name="plan-audit", shuffle_partitions=8)
+    spark = get_spark(app_name="plan-audit")
     out = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "docs",

@@ -45,7 +45,7 @@ def main() -> None:
     from data_ingestion_service_spark.session import get_spark
 
     load_all_operators()
-    spark = get_spark(app_name="profile-keys", shuffle_partitions=8)
+    spark = get_spark(app_name="profile-keys")
     sc = spark.sparkContext
     tracker = sc.statusTracker()
 

@@ -36,7 +36,7 @@ SKEW_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.stress/sf1skew"
 
 def main() -> int:
     load_all_operators()
-    spark = get_spark(app_name="skew-check", shuffle_partitions=32)
+    spark = get_spark(app_name="skew-check")
     ok = True
 
     # -- 1. AQE skew-split on the hot-user join ---------------------------

@@ -19,7 +19,7 @@ TEST_SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="ingestion-engine-tests", shuffle_partitions=8)
+    s = get_spark(app_name="ingestion-engine-tests")
     yield s
 
 

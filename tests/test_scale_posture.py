@@ -282,6 +282,95 @@ def test_store_invalidation_cascades_to_dependents(spark, sf_dir):
     assert "InMemoryTableScan" in plan
 
 
+def _plan_nodes_outside_cache(df) -> list[str]:
+    """Physical node names of ``df``'s plan, not descending into cached
+    relations (an InMemoryTableScan has no children; its cached plan is
+    a field, built once). AQE wrappers and query stages are unwrapped."""
+    nodes, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name.startswith("AdaptiveSparkPlan"):
+            stack.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStage"):
+            stack.append(node.plan())
+            continue
+        nodes.append(name)
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return nodes
+
+
+@pytest.mark.parametrize(
+    "key", ["q_knn_ivf_kmeans", "q_knn_pq", "q_embed_near_dup"]
+)
+def test_embedding_index_built_once_per_session(spark, sf_dir, key):
+    """The probe-independent half of each embedding operator (IVF cells,
+    PQ codes, cosine pair list) is a session store: a repeat call adds no
+    store and runs its Python kernel only inside the cached relation."""
+    from data_ingestion_service_spark import session as sess
+
+    QUERIES[key](spark, sf_dir).collect()
+    stores = set(sess._DF_CACHE.get(spark, {}))
+    df = QUERIES[key](spark, sf_dir)
+    df.collect()
+    assert set(sess._DF_CACHE.get(spark, {})) == stores, "repeat call built a store"
+    nodes = _plan_nodes_outside_cache(df)
+    assert "InMemoryTableScan" in nodes, nodes
+    assert "MapInPandas" not in nodes, f"{key} runs a kernel per call: {nodes}"
+    assert "MapInPandas" in formatted_plan(df), "kernel missing from the store"
+
+
+def test_embedding_store_invalidation_cascades(spark, sf_dir):
+    """Retiring a base embedding store retires the stores built through
+    it: the IVF assignment depends on the centroids, the PQ codes on the
+    codebook, the cosine pair list on the block table."""
+    from data_ingestion_service_spark import session as sess
+
+    for key in ("q_knn_ivf_kmeans", "q_knn_pq", "q_embed_near_dup"):
+        QUERIES[key](spark, sf_dir).collect()
+    for base, dep in (
+        ("ivf_centroids", "ivf_assign"),
+        ("pq_codebook", "pq_codes"),
+        ("embed_blocks", "embed_near_dup_pairs"),
+    ):
+        assert (dep, sf_dir) in sess._DF_CACHE.get(spark, {}), dep
+        assert sess.session_invalidate(spark, (base, sf_dir))
+        assert (dep, sf_dir) not in sess._DF_CACHE.get(spark, {}), (
+            f"{dep} survived {base} invalidation"
+        )
+    # Rebuild path is clean: the next call re-registers both stores.
+    QUERIES["q_knn_ivf_kmeans"](spark, sf_dir).collect()
+    assert ("ivf_assign", sf_dir) in sess._DF_CACHE.get(spark, {})
+
+
+def test_pq_missing_codebook_row_is_named(spark, tmp_path):
+    """An embeddings table without the probe row raises PQCodebookError
+    naming the missing vec_id, and caches nothing."""
+    import pandas as pd
+
+    from data_ingestion_service_spark import session as sess
+    from data_ingestion_service_spark.operators.corpus_dedup import (
+        PQCodebookError,
+    )
+
+    sf_dir = str(tmp_path)
+    pdf = pd.DataFrame(
+        {
+            "vec_id": list(range(1, 9)),
+            "embedding": [[float(i + d) for d in range(64)] for i in range(8)],
+            "label": [0] * 8,
+        }
+    )
+    spark.createDataFrame(
+        pdf, schema="vec_id bigint, embedding array<float>, label int"
+    ).write.parquet(f"{sf_dir}/embeddings.parquet")
+    with pytest.raises(PQCodebookError, match=r"vec_id \[0\]"):
+        QUERIES["q_knn_pq"](spark, sf_dir)
+    assert ("pq_codebook", sf_dir) not in sess._DF_CACHE.get(spark, {})
+
+
 def test_stream_shuffle_sized_to_replay_input(spark, sf_dir):
     """Streaming state-store partition count must follow the replay
     INPUT size, not the session's batch default (r9): a streaming
@@ -294,13 +383,22 @@ def test_stream_shuffle_sized_to_replay_input(spark, sf_dir):
     from data_ingestion_service_spark.session import RUNTIME_CONFS
     from data_ingestion_service_spark.streaming import stream_queries as sq
 
-    sq._note_stream_input(table_path(sf_dir, "events"))
-    parts = sq._stream_partitions(spark)
-    assert parts == "4", f"test-tier replay should floor at 4, got {parts}"
-    # A >100TB input must clamp to the session setting (returns None ->
-    # conf untouched).
-    sq._STREAM_INPUT.nbytes = 200 << 40
-    assert sq._stream_partitions(spark) is None
+    # The session value derives from the host's core count; on a 4-core
+    # host it already sits at the floor and nothing would be lowered. Set
+    # a value above the floor while the sizing rule is checked.
+    conf = "spark.sql.shuffle.partitions"
+    entered = spark.conf.get(conf)
+    spark.conf.set(conf, "32")
+    try:
+        sq._note_stream_input(table_path(sf_dir, "events"))
+        parts = sq._stream_partitions(spark)
+        assert parts == "4", f"test-tier replay should floor at 4, got {parts}"
+        # A >100TB input must clamp to the session setting (returns None
+        # -> conf untouched).
+        sq._STREAM_INPUT.nbytes = 200 << 40
+        assert sq._stream_partitions(spark) is None
+    finally:
+        spark.conf.set(conf, entered)
     # End-to-end: a drain lowers then restores the session conf.
     sq._note_stream_input(table_path(sf_dir, "events"))
     QUERIES["q_events_tumbling"](spark, sf_dir).collect()
