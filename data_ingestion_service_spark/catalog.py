@@ -46,12 +46,13 @@ def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
 
 
-# Analyzed-DataFrame cache, per live session (weak keys: a restarted
-# session drops its entries; id-reuse can't alias a dead one). Re-running
-# spark.read.parquet per query re-lists files and re-reads footers
-# (~60-80ms/table, the dominant cost of ms-scale queries); a real
-# ingestion service registers its catalog once. Execution still scans
-# fresh data — only the *plan* (schema + file listing) is reused.
+# Analyzed-DataFrame cache, per session. Weak keys stop id-reuse from
+# aliasing a dead session, but each cached DataFrame holds its session, so
+# entries stay for the life of the process. Re-running spark.read.parquet
+# per query re-lists files and re-reads footers (~60-80ms/table, the
+# dominant cost of ms-scale queries); a real ingestion service registers
+# its catalog once. Execution still scans fresh data — only the *plan*
+# (schema + file listing) is reused.
 _TABLE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = (
     weakref.WeakKeyDictionary()
 )

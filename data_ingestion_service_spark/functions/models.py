@@ -1,19 +1,19 @@
-"""Shared batch↔stream model definitions (the alerts.py pattern, r5
-verdict item 7, applied to learned models): a model computed by a batch
-key and SCORED inside a streaming plan must have exactly one definition,
-or the batch audit and the live monitor silently drift apart.
+"""Shared batch↔stream model definitions (the alerts.py pattern, applied
+to learned models): a model computed by a batch key and SCORED inside a
+streaming plan must have exactly one definition, or the batch audit and
+the live monitor silently drift apart.
 
-Currently: the per-event-type discrete-p99 threshold model. The batch
-form is q_latency_percentiles' rank selection (operators/mining.py);
-the streaming consumer is q_stream_model_score, which broadcast-joins
-this table into a live plan. Both engines and both execution modes
-derive from the construction here — integer cents, rank ceil(q·n),
-event_id tiebreak — so the threshold is bit-identical everywhere.
+Currently: the exact per-type cents percentile (also q_latency_percentiles
+and q_winsorized_stats in operators/mining.py) and the discrete-p99
+threshold model built on it, which q_stream_model_score broadcast-joins
+into a live plan. Both engines and both execution modes derive from the
+construction here — integer cents, rank ceil(q·n), event_id tiebreak — so
+the threshold is bit-identical everywhere.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 # Quantile of the threshold model (discrete — the element at rank
@@ -25,25 +25,44 @@ def value_cents() -> "F.Column":
     return F.round(F.col("value") * 100).cast("bigint")
 
 
-def p99_threshold_model(events: DataFrame) -> DataFrame:
-    """(event_type, p99_cents) learned from a batch of events."""
-    v = events.select("event_type", "event_id", value_cents().alias("cents"))
-    w = Window.partitionBy("event_type").orderBy("cents", "event_id")
-    wn = Window.partitionBy("event_type")
-    ranked = v.select(
+def cents_histogram(events: DataFrame) -> DataFrame:
+    """(event_type, cents, c, cum, n): per-type bucket counts, cumulative
+    counts and type totals. Equal cents occupy one contiguous rank run
+    [cum-c+1, cum] under (cents, event_id), so an exact rank pick reads
+    this domain-sized table instead of sorting the event stream."""
+    cnt = (
+        events.select("event_type", value_cents().alias("cents"))
+        .groupBy("event_type", "cents")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    w_all = Window.partitionBy("event_type")
+    w_cum = w_all.orderBy("cents").rowsBetween(Window.unboundedPreceding, 0)
+    return cnt.select(
         "event_type",
         "cents",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(wn).alias("n"),
+        "c",
+        F.sum("c").over(w_cum).alias("cum"),
+        F.sum("c").over(w_all).alias("n"),
     )
-    return ranked.groupBy("event_type").agg(
-        F.min(
-            F.when(
-                F.col("rn")
-                == F.ceil(F.lit(SCORE_QUANTILE) * F.col("n")).cast("bigint"),
-                F.col("cents"),
-            )
-        ).alias("p99_cents")
+
+
+def cents_at_rank(rank: Column) -> Column:
+    """Aggregate over :func:`cents_histogram` rows: the cents at ``rank``."""
+    covers = (rank > F.col("cum") - F.col("c")) & (rank <= F.col("cum"))
+    return F.min(F.when(covers, F.col("cents")))
+
+
+def quantile_rank(q: float) -> Column:
+    """Discrete quantile rank ceil(q·n) over :func:`cents_histogram` rows."""
+    return F.ceil(F.lit(q) * F.col("n")).cast("bigint")
+
+
+def p99_threshold_model(events: DataFrame) -> DataFrame:
+    """(event_type, p99_cents) learned from a batch of events."""
+    return (
+        cents_histogram(events)
+        .groupBy("event_type")
+        .agg(cents_at_rank(quantile_rank(SCORE_QUANTILE)).alias("p99_cents"))
     )
 
 

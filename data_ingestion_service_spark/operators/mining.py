@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_ingestion_service_spark.catalog import load_table
+from data_ingestion_service_spark.functions import models
 from data_ingestion_service_spark.functions.text import shingle_rows
 from data_ingestion_service_spark.registry import register
 from data_ingestion_service_spark.session import call_persisted
@@ -935,8 +936,8 @@ def q_embed_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # select the same physical row. Values quantize to cents once (they are
 # 2dp-positive by fixture construction).
 #
-# Scale: one window shuffle partitioned by event_type + a per-type
-# aggregate. (At 100 TB with few types the same statistic is computed
+# Scale: one (type, cents) histogram shuffle + rank windows over the
+# histogram. (At 100 TB with few types the same statistic is computed
 # per salt shard and merged by a second exact selection over shard
 # boundaries, or approximated with KLL — this key is the exact tier.)
 # ---------------------------------------------------------------------------
@@ -969,55 +970,15 @@ GROUP BY event_type
 
 @register("q_latency_percentiles", oracle=_PCTL_ORACLE)
 def q_latency_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r12: histogram form of the exact rank pick (the documented §5 swap).
-    # The old shape shuffled EVERY event row by type and ran a full
-    # in-group sort (row_number over the stream) — at 100 TB one sort
-    # task per event type spills unboundedly. Ranks over (cents,
-    # event_id) assign all rows of equal cents a contiguous rank run, so
-    # the cents value at rank r is a pure function of per-cents counts:
-    # it is the bucket whose cumulative count first reaches r. The
-    # groupBy(type, cents) histogram partial-aggregates map-side, the
-    # rank arithmetic runs as windows over the DOMAIN-sized histogram
-    # (cents domain is bounded by construction), and no event-stream
-    # sort exists anywhere. Result-identical by the run-contiguity
-    # argument (oracle-verified).
-    ev = load_table(spark, sf_dir, "events")
-    cnt = (
-        ev.select(
-            "event_type",
-            F.round(F.col("value") * 100).cast("bigint").alias("cents"),
-        )
-        .groupBy("event_type", "cents")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    w_cum = (
-        Window.partitionBy("event_type")
-        .orderBy("cents")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_all = Window.partitionBy("event_type")
-    h = cnt.select(
-        "event_type",
-        "cents",
-        "c",
-        F.sum("c").over(w_cum).alias("cum"),
-        F.sum("c").over(w_all).alias("n"),
-    )
-
-    def pick(q: float):
-        rank = F.ceil(F.lit(q) * F.col("n")).cast("bigint")
-        return F.min(
-            F.when(
-                (rank > F.col("cum") - F.col("c")) & (rank <= F.col("cum")),
-                F.col("cents"),
-            )
-        )
-
+    # Histogram form of the exact rank pick (models.cents_histogram): no
+    # event-stream sort, so no per-type sort task that spills at scale.
+    h = models.cents_histogram(load_table(spark, sf_dir, "events"))
     return h.groupBy("event_type").agg(
         F.any_value("n").alias("n_events"),
-        pick(0.5).alias("p50_cents"),
-        pick(0.9).alias("p90_cents"),
-        pick(0.99).alias("p99_cents"),
+        *(
+            models.cents_at_rank(models.quantile_rank(q)).alias(f"p{p}_cents")
+            for q, p in ((0.5, 50), (0.9, 90), (0.99, 99))
+        ),
     )
 
 
@@ -2342,48 +2303,11 @@ GROUP BY 1
 
 @register("q_winsorized_stats", oracle=_WINSOR_ORACLE)
 def q_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r12: histogram form (the documented §5 swap, same argument as
-    # q_latency_percentiles). The old shape ranked the FULL event stream
-    # per type AND evaluated that window subtree twice more (the bounds
-    # broadcast job plus the clamped probe side re-ran it per action —
-    # 3 corpus window passes per call). Ranks over (cents, event_id) are
-    # contiguous per cents value, so the percentile-bound cents at rank
-    # r is the histogram bucket whose cumulative count spans r, and the
-    # winsorized moments are exact integer folds of the per-bucket
-    # counts (sum(v) = Σ c·clamp(cents), etc.). One corpus exchange
-    # (map-side combined groupBy), bounds as windows over the
-    # domain-sized histogram — no broadcast-job subtree re-run, no
-    # event-stream sort. Result-identical (oracle-verified).
-    t = load_table(spark, sf_dir, "events").select(
-        "event_type",
-        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
-    )
-    cnt = t.groupBy("event_type", "cents").agg(
-        F.count(F.lit(1)).cast("bigint").alias("c")
-    )
-    w_cum = (
-        Window.partitionBy("event_type")
-        .orderBy("cents")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+    # Histogram form (models.cents_histogram): bounds are rank picks over
+    # the histogram and the moments are exact integer folds of the
+    # per-bucket counts (sum(v) = Σ c·clamp(cents)); no event-stream sort.
+    h = models.cents_histogram(load_table(spark, sf_dir, "events"))
     w_all = Window.partitionBy("event_type")
-    h = cnt.select(
-        "event_type",
-        "cents",
-        "c",
-        F.sum("c").over(w_cum).alias("cum"),
-        F.sum("c").over(w_all).alias("n"),
-    )
-
-    def at_rank(rank):
-        # cents value whose contiguous rank run [cum-c+1, cum] covers rank
-        return F.min(
-            F.when(
-                (rank > F.col("cum") - F.col("c")) & (rank <= F.col("cum")),
-                F.col("cents"),
-            )
-        ).over(w_all)
-
     r_lo = F.greatest(F.lit(1).cast("bigint"), F.expr("(n * 5) div 100"))
     r_hi = F.least(F.col("n"), F.expr("(n * 95) div 100 + 1"))
     b = h.select(
@@ -2391,8 +2315,8 @@ def q_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cents",
         "c",
         "n",
-        at_rank(r_lo).alias("lo"),
-        at_rank(r_hi).alias("hi"),
+        models.cents_at_rank(r_lo).over(w_all).alias("lo"),
+        models.cents_at_rank(r_hi).over(w_all).alias("hi"),
     )
     v = F.least(F.greatest(F.col("cents"), F.col("lo")), F.col("hi"))
     clamped = b.select(

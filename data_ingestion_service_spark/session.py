@@ -21,6 +21,21 @@ import weakref
 
 from pyspark.sql import SparkSession
 
+
+def shuffle_partitions() -> str:
+    """``SPARK_GRAFT_SHUFFLE`` if set, else ``SPARK_GRAFT_CPUS`` (default
+    32); a non-integer core count (``*`` for ``local[*]``) means this host's."""
+    override = os.environ.get("SPARK_GRAFT_SHUFFLE")
+    if override:
+        if not override.isdecimal() or int(override) == 0:
+            raise ValueError(
+                f"SPARK_GRAFT_SHUFFLE must be a positive integer, got {override!r}"
+            )
+        return override
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    return cpus if cpus.isdecimal() and int(cpus) > 0 else str(os.cpu_count() or 1)
+
+
 # Confs that are safe (and necessary) to set on a live session.
 RUNTIME_CONFS: dict[str, str] = {
     # Legacy fixture vintages store events.ts as TIMESTAMP(NANOS); Spark's
@@ -45,10 +60,7 @@ RUNTIME_CONFS: dict[str, str] = {
     # signal. On a real cluster this is sized ~2-3x total cores by the
     # submitter, and AQE coalescing absorbs the difference either way.
     # Runtime-settable, so safe on a live session.
-    "spark.sql.shuffle.partitions": (
-        os.environ.get("SPARK_GRAFT_SHUFFLE")
-        or os.environ.get("SPARK_GRAFT_CPUS", "32")
-    ),
+    "spark.sql.shuffle.partitions": shuffle_partitions(),
     # Single-file fixtures make scan parallelism = ceil(bytes / this).
     # The default 128MB leaves even the sf1 stress tier's 80MB lineitem
     # in ONE scan task; 16MB splits it ~5-way while leaving the graded
@@ -70,8 +82,11 @@ _CONFIGURED_SESSIONS: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 # persist lifetime: repeated operator invocations reuse the one persisted
 # copy per (session, key) instead of stacking a fresh persisted DataFrame
 # per call — over a 161-query bench session those copies accumulate into
-# executor-memory pressure (the round-2 llm-ops slowdown). Weak session
-# keys: entries die with their session.
+# executor-memory pressure. A stored DataFrame holds its session
+# (``DataFrame._session``), so the weak key never dies with the session:
+# an entry stays for the life of the process and its cached data until
+# ``spark.catalog.clearCache()`` or context stop. A caller that wants
+# fresh stores uses a fresh session (``spark.newSession()``).
 _DF_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
 
 # PER-KEY locks: some builds are no longer lazy-plan-only (q_pagerank's
@@ -84,19 +99,6 @@ _DF_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDict
 # keys take different locks, same-key re-entry is the RLock case).
 _DF_CACHE_LOCK = threading.Lock()
 _KEY_LOCKS: dict = {}
-
-# Reverse-dependency edges between store keys: _DEPENDENTS[child] is the
-# set of parent keys whose cached DataFrames were built THROUGH child's
-# copy (near_dup_pairs's plan embeds doc_shingles' cached relation).
-# Recorded on every nested registry access — also when the child was
-# already cached, because the parent's lineage captures the child's copy
-# either way. session_invalidate cascades through these edges: dropping
-# a base store while a dependent's plan still routes through its
-# unpersisted copy would silently turn the dependent's probes into full
-# corpus rescans (found by the band-tuning posture test: invalidating
-# doc_shingles left the signature/pair stores re-scanning parquet).
-_DEPENDENTS: dict = {}
-_BUILD_STACK = threading.local()
 
 
 def _key_lock(key) -> "threading.RLock":
@@ -162,142 +164,22 @@ def call_persisted(df):
 def session_persisted(spark: SparkSession, key, build):
     """Return the persisted DataFrame for ``key``, building it once.
 
-    Double-checked under a lock so concurrent first calls (the bench's
-    thread pool) cannot double-build and leak an orphan persisted copy.
-    Callers must NOT ``unpersist()`` the returned DataFrame — use
-    :func:`session_invalidate`, which owns removal from the registry.
+    Double-checked under the key's lock so concurrent first calls (the
+    bench's thread pool) cannot double-build and leak an orphan persisted
+    copy. Its cached data lives until ``spark.catalog.clearCache()`` or
+    context stop; callers must not ``unpersist()`` it, and a caller that
+    wants fresh stores uses a fresh session (``spark.newSession()``).
     """
     key = _norm_key(key)
-    stack = getattr(_BUILD_STACK, "keys", None)
-    per_session = _DF_CACHE.setdefault(spark, {})
-    # Edge-record and cache-read are ATOMIC vs session_invalidate's
-    # snapshot+pop (ADVICE r8, medium): recording the edge in one critical
-    # section and reading the cache in another left a window where a
-    # parent build could grab the child's copy after the cascade's
-    # closure snapshot but before its pop — the parent then cached a plan
-    # routed through the just-unpersisted child with no edge in the
-    # snapshot to catch it. With both under _DF_CACHE_LOCK, either the
-    # edge is visible to the snapshot (cascade's phase-2 key-lock sweep
-    # then waits out the in-flight build and retires the stale parent) or
-    # the pop already happened (this read misses and rebuilds fresh).
     with _DF_CACHE_LOCK:
-        if stack:
-            # A parent store's build is consuming this key — its cached
-            # plan routes through this copy whether built or reused.
-            _DEPENDENTS.setdefault(key, set()).add(stack[-1])
-        df = per_session.get(key)
+        per_session = _DF_CACHE.setdefault(spark, {})
+    df = per_session.get(key)
     if df is None:
         with _key_lock(key):
-            with _DF_CACHE_LOCK:
-                df = per_session.get(key)
+            df = per_session.get(key)
             if df is None:
-                if stack is None:
-                    stack = _BUILD_STACK.keys = []
-                stack.append(key)
-                try:
-                    df = build()
-                finally:
-                    stack.pop()
-                df.persist()
-                with _DF_CACHE_LOCK:
-                    per_session[key] = df
+                df = per_session[key] = build().persist()
     return df
-
-
-def session_invalidate(spark: SparkSession, key) -> bool:
-    """Unpersist and drop one cached entry plus every dependent entry
-    whose cached plan routes through it; returns True if ``key`` existed.
-
-    The sanctioned way to retire a :func:`session_persisted` DataFrame —
-    a caller-side ``unpersist()`` would leave a cached-but-unpersisted
-    entry behind for every later caller of the same key. The cascade is
-    required for correctness of the SHAPE contract, not just hygiene:
-    a dependent built through the retired copy keeps the whole build
-    lineage in its plan, so after the base unpersists, its probes would
-    re-scan the corpus on every action (while still LOOKING like cheap
-    store reads at the call site).
-
-    Two phases (ADVICE r8, medium — the in-flight-build race): phase 1
-    snapshots the closure AND pops every cached closure entry in ONE
-    _DF_CACHE_LOCK critical section, so no thread can be handed a stale
-    copy after the snapshot (session_persisted's cache-read is in the
-    same lock). Phase 2 then sweeps the closure under each key's build
-    lock: a dependent whose build was in flight at snapshot time (edge
-    recorded, DF not yet cached) finishes its build holding that lock,
-    so acquiring it here waits the build out and retires the
-    freshly-cached stale entry. A fresh REBUILD racing the sweep can be
-    retired too — over-invalidation rebuilds once more and is benign;
-    under-invalidation (the old bug) silently served full rescans.
-    Never holds _DF_CACHE_LOCK while acquiring a key lock, so builds of
-    unrelated keys cannot deadlock against the cascade.
-
-    The two phases LOOP until a full pass retires nothing (ADVICE r9):
-    a parent build whose nested child access happens entirely after the
-    phase-1 snapshot records its edge too late to join that snapshot's
-    closure — phase 2 can then retire its freshly rebuilt child
-    mid-build, leaving the parent cached with a plan routed through an
-    unpersisted child. The next pass recomputes the closure from the
-    now-visible edge and retires that parent too. Bounded: each extra
-    pass requires a concurrent build to have slipped in; the cap only
-    guards a pathological steady stream of them (over-invalidation
-    stays benign either way)."""
-    key = _norm_key(key)
-    existed = False
-    for _pass in range(8):
-        with _DF_CACHE_LOCK:
-            # Dependents-first closure over the reverse-dependency edges.
-            closure: list = []
-            frontier = [key]
-            seen = {key}
-            while frontier:
-                k = frontier.pop()
-                closure.append(k)
-                for parent in _DEPENDENTS.get(k, ()):  # parents depend on k
-                    if parent not in seen:
-                        seen.add(parent)
-                        frontier.append(parent)
-            per_session = _DF_CACHE.get(spark)
-            dropped = []
-            if per_session:
-                for k in reversed(closure):  # leaves of the tree first
-                    df = per_session.pop(k, None)
-                    if df is not None:
-                        dropped.append((k, df))
-            # Prune the closure's edges (ADVICE r8, low: _DEPENDENTS grew
-            # forever — keys embed sf_dir strings). A rebuilt entry
-            # re-records its edges on the next nested access, so dropping
-            # them with the cache entry loses nothing; stale survivors
-            # would only cause benign over-invalidation, but unbounded
-            # growth in a long-lived service is a real leak.
-            for k in closure:
-                _DEPENDENTS.pop(k, None)
-            closure_set = set(closure)
-            for parents in _DEPENDENTS.values():
-                parents -= closure_set
-        existed = existed or any(k == key for k, _ in dropped)
-        retired = bool(dropped)
-        for _, df in dropped:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        # Phase 2: wait out in-flight builds of closure keys and retire
-        # any entry they cached after the phase-1 snapshot.
-        for k in reversed(closure):
-            with _key_lock(k):
-                with _DF_CACHE_LOCK:
-                    per_session = _DF_CACHE.get(spark)
-                    df = per_session.pop(k, None) if per_session else None
-            if df is None:
-                continue
-            retired = True
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        if not retired:
-            break
-    return existed
 
 
 def ensure_session_confs(spark: SparkSession) -> SparkSession:

@@ -9,6 +9,7 @@ import os
 import duckdb
 import pytest
 
+from data_ingestion_service_spark import session as session_mod
 from data_ingestion_service_spark.catalog import TABLES
 from data_ingestion_service_spark.session import get_spark
 
@@ -21,6 +22,16 @@ TEST_SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001"
 def spark():
     s = get_spark(app_name="ingestion-engine-tests")
     yield s
+
+
+@pytest.fixture
+def fresh_spark(spark):
+    """A new session on the shared context: its session stores start
+    empty. Teardown unpersists and drops the stores it built."""
+    s = spark.newSession()
+    yield s
+    for df in session_mod._DF_CACHE.pop(s, {}).values():
+        df.unpersist()
 
 
 @pytest.fixture(scope="session")

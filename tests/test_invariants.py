@@ -270,7 +270,7 @@ def test_hot_shingle_cap_inactive(spark, sf_dir):
     )
 
 
-def test_embed_block_prune_lossless(spark, tmp_path):
+def test_embed_block_prune_lossless(fresh_spark, tmp_path):
     """On clustered embeddings (every real corpus) the centroid+radius
     triangle-inequality prune must drop block pairs, and the pruned
     result must equal brute force exactly — lossless by construction.
@@ -304,11 +304,11 @@ def test_embed_block_prune_lossless(spark, tmp_path):
         {"vec_id": ids, "embedding": list(vecs), "label": [0] * n + [1] * n}
     )
     sf_dir = str(tmp_path)
-    spark.createDataFrame(
+    fresh_spark.createDataFrame(
         pdf, schema="vec_id bigint, embedding array<float>, label int"
     ).write.parquet(f"{sf_dir}/embeddings.parquet")
 
-    blocks = _embed_blocks(spark, sf_dir)
+    blocks = _embed_blocks(fresh_spark, sf_dir)
     cand = {
         (r.blk_a, r.blk_b)
         for r in _embed_candidate_pairs(
@@ -319,7 +319,7 @@ def test_embed_block_prune_lossless(spark, tmp_path):
 
     got = {
         (r.vec_a, r.vec_b)
-        for r in QUERIES["q_embed_near_dup"](spark, sf_dir).collect()
+        for r in QUERIES["q_embed_near_dup"](fresh_spark, sf_dir).collect()
     }
     m = vecs.astype(np.float64)
     m /= np.linalg.norm(m, axis=1, keepdims=True)
@@ -330,11 +330,6 @@ def test_embed_block_prune_lossless(spark, tmp_path):
         (int(id_arr[a]), int(id_arr[b])) for a, b in zip(ia, ib) if id_arr[a] < id_arr[b]
     }
     assert got == want
-    # Retire via the registry (a direct blocks.unpersist() would leave a
-    # cached-but-unpersisted entry for later callers of the same key).
-    from data_ingestion_service_spark.session import session_invalidate
-
-    assert session_invalidate(spark, ("embed_blocks", sf_dir))
 
 
 def test_stream_late_drop_is_observable(spark, sf_dir):

@@ -255,33 +255,6 @@ def test_rank_filter_pushes_window_group_limit(spark, sf_dir):
     assert "WindowGroupLimit" in plan
 
 
-def test_store_invalidation_cascades_to_dependents(spark, sf_dir):
-    """Retiring a base store must also retire every store whose cached
-    plan was built through it — otherwise the dependents keep the
-    unpersisted copy's lineage and silently re-scan the corpus on every
-    action (the exact interaction that broke the band-tuning posture
-    check when another test invalidated doc_shingles mid-session)."""
-    from data_ingestion_service_spark import session as sess
-    from data_ingestion_service_spark.operators.llm import (
-        doc_shingles,
-        near_dup_pairs,
-    )
-
-    near_dup_pairs(spark, sf_dir)  # registers the dependent chain
-    per_session = sess._DF_CACHE.get(spark, {})
-    dep_keys = [
-        k for k in per_session if k[0] in ("near_dup_pairs", "scored_pairs")
-    ]
-    assert len(dep_keys) == 2, "expected dependent stores registered"
-    sess.session_invalidate(spark, ("doc_shingles", sf_dir))
-    per_session = sess._DF_CACHE.get(spark, {})
-    stale = [k for k in dep_keys if k in per_session]
-    assert not stale, f"dependents survived base invalidation: {stale}"
-    # Rebuild path is clean: a fresh call re-registers and re-persists.
-    plan = formatted_plan(near_dup_pairs(spark, sf_dir))
-    assert "InMemoryTableScan" in plan
-
-
 def _plan_nodes_outside_cache(df) -> list[str]:
     """Physical node names of ``df``'s plan, not descending into cached
     relations (an InMemoryTableScan has no children; its cached plan is
@@ -320,29 +293,6 @@ def test_embedding_index_built_once_per_session(spark, sf_dir, key):
     assert "InMemoryTableScan" in nodes, nodes
     assert "MapInPandas" not in nodes, f"{key} runs a kernel per call: {nodes}"
     assert "MapInPandas" in formatted_plan(df), "kernel missing from the store"
-
-
-def test_embedding_store_invalidation_cascades(spark, sf_dir):
-    """Retiring a base embedding store retires the stores built through
-    it: the IVF assignment depends on the centroids, the PQ codes on the
-    codebook, the cosine pair list on the block table."""
-    from data_ingestion_service_spark import session as sess
-
-    for key in ("q_knn_ivf_kmeans", "q_knn_pq", "q_embed_near_dup"):
-        QUERIES[key](spark, sf_dir).collect()
-    for base, dep in (
-        ("ivf_centroids", "ivf_assign"),
-        ("pq_codebook", "pq_codes"),
-        ("embed_blocks", "embed_near_dup_pairs"),
-    ):
-        assert (dep, sf_dir) in sess._DF_CACHE.get(spark, {}), dep
-        assert sess.session_invalidate(spark, (base, sf_dir))
-        assert (dep, sf_dir) not in sess._DF_CACHE.get(spark, {}), (
-            f"{dep} survived {base} invalidation"
-        )
-    # Rebuild path is clean: the next call re-registers both stores.
-    QUERIES["q_knn_ivf_kmeans"](spark, sf_dir).collect()
-    assert ("ivf_assign", sf_dir) in sess._DF_CACHE.get(spark, {})
 
 
 def test_pq_missing_codebook_row_is_named(spark, tmp_path):
@@ -408,98 +358,64 @@ def test_stream_shuffle_sized_to_replay_input(spark, sf_dir):
     )
 
 
-def test_store_invalidation_catches_in_flight_dependent(spark):
-    """ADVICE r8 (medium): a dependent whose build is IN FLIGHT when the
-    base store is invalidated (edge recorded, DataFrame not yet cached)
-    must still be retired — the cascade's phase-2 key-lock sweep waits
-    the build out and drops the freshly-cached stale entry. Before the
-    fix, the closure snapshot missed it and the dependent kept a plan
-    routed through the unpersisted base forever."""
-    import threading
+def test_memory_sink_view_dropped(fresh_spark, oracle_con, sf_dir):
+    """A memory-sink drain leaves no sink_* temp view on the stream child
+    session (one per call would keep every streamed result alive), and the
+    returned DataFrame still collects to the oracle's canonical hash."""
+    import importlib.util
+    from pathlib import Path
 
-    from data_ingestion_service_spark import session as sess
-    from data_ingestion_service_spark.session import (
-        session_invalidate,
-        session_persisted,
-    )
+    from data_ingestion_service_spark.registry import ORACLES
+    from data_ingestion_service_spark.streaming.stream_queries import stream_session
 
-    base_key = ("test_race_base", "x")
-    dep_key = ("test_race_dep", "x")
-    session_invalidate(spark, dep_key)
-    session_invalidate(spark, base_key)
-    consumed = threading.Event()
-    release = threading.Event()
+    path = Path(__file__).resolve().parents[1] / "scripts" / "driver_sim.py"
+    spec = importlib.util.spec_from_file_location("driver_sim", path)
+    driver_sim = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(driver_sim)
 
-    def build_dep():
-        # Consume the base (records the edge, grabs its cached copy)...
-        session_persisted(spark, base_key, lambda: spark.range(5))
-        consumed.set()
-        # ...then stall mid-build until the invalidate is underway.
-        release.wait(timeout=30)
-        return spark.range(10)
-
-    t = threading.Thread(
-        target=lambda: session_persisted(spark, dep_key, build_dep)
-    )
-    t.start()
-    assert consumed.wait(timeout=30)
-    # Invalidate the base while the dependent's build is in flight; the
-    # cascade blocks on the dependent's build lock, so release it from a
-    # helper thread after the cascade has started.
-    releaser = threading.Timer(0.3, release.set)
-    releaser.start()
-    session_invalidate(spark, base_key)
-    t.join(timeout=30)
-    releaser.cancel()
-    per_session = sess._DF_CACHE.get(spark, {})
-    assert dep_key not in per_session, (
-        "in-flight dependent survived base invalidation with stale lineage"
-    )
-    session_invalidate(spark, dep_key)
-    session_invalidate(spark, base_key)
+    df = QUERIES["q_events_tumbling"](fresh_spark, sf_dir)
+    views = [
+        t.name
+        for t in stream_session(fresh_spark).catalog.listTables()
+        if t.name.startswith("sink_")
+    ]
+    assert not views, f"memory-sink views left behind: {views}"
+    want = oracle_con.execute(ORACLES["q_events_tumbling"]).df()
+    assert driver_sim.canon_hash(df.toPandas()) == driver_sim.canon_hash(want)
 
 
-def test_dependency_edges_pruned_on_invalidate(spark):
-    """ADVICE r8 (low): _DEPENDENTS edges must be pruned when their
-    entries are retired — keys embed sf_dir strings, so a long-lived
-    service otherwise accumulates edges forever."""
-    from data_ingestion_service_spark import session as sess
-    from data_ingestion_service_spark.session import (
-        session_invalidate,
-        session_persisted,
-    )
+def test_shuffle_partitions_from_star_cpus(monkeypatch):
+    """SPARK_GRAFT_CPUS='*' is valid for the local[*] master but not as a
+    partition count: the count then comes from the host's cores."""
+    import os
 
-    base_key = ("test_prune_base", "x")
-    dep_key = ("test_prune_dep", "x")
+    from data_ingestion_service_spark.session import shuffle_partitions
 
-    def build_dep():
-        session_persisted(spark, base_key, lambda: spark.range(3))
-        return spark.range(6)
-
-    session_persisted(spark, dep_key, build_dep)
-    assert dep_key in sess._DEPENDENTS.get(base_key, set())
-    session_invalidate(spark, base_key)
-    assert base_key not in sess._DEPENDENTS
-    assert not any(
-        dep_key in parents or base_key in parents
-        for parents in sess._DEPENDENTS.values()
-    ), "retired keys still referenced by dependency edges"
+    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "*")
+    assert shuffle_partitions() == str(os.cpu_count())
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "6")
+    assert shuffle_partitions() == "6"
 
 
-def test_doc_shingles_map_stage_is_parallel(spark, sf_dir):
+@pytest.mark.parametrize("value", ["0", "-4", "*", "eight"])
+def test_shuffle_override_must_be_positive_int(monkeypatch, value):
+    from data_ingestion_service_spark.session import shuffle_partitions
+
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", value)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_SHUFFLE"):
+        shuffle_partitions()
+
+
+def test_doc_shingles_map_stage_is_parallel(fresh_spark, sf_dir):
     """The shingle explode must run cluster-wide, not in the single task
-    a one-file fixture scan yields (the round-3 verdict's one perf
-    defect): the plan must repartition the docs scan to the cluster's
-    parallelism BEFORE the explode."""
+    a one-file fixture scan yields: the plan must repartition the docs
+    scan to the cluster's parallelism BEFORE the explode."""
     from data_ingestion_service_spark.operators.llm import doc_shingles
-    from data_ingestion_service_spark.session import session_invalidate
 
-    # Fresh build (the session cache would hide the plan).
-    session_invalidate(spark, ("doc_shingles", sf_dir))
-    plan = formatted_plan(doc_shingles(spark, sf_dir))
-    par = spark.sparkContext.defaultParallelism
+    plan = formatted_plan(doc_shingles(fresh_spark, sf_dir))
+    par = fresh_spark.sparkContext.defaultParallelism
     assert f"RoundRobinPartitioning({par})" in plan, plan.split("\n\n")[0]
-    session_invalidate(spark, ("doc_shingles", sf_dir))
 
 
 def test_bucketed_tables_cached_per_session(spark, sf_dir):
@@ -515,36 +431,42 @@ def test_bucketed_tables_cached_per_session(spark, sf_dir):
     assert first == second, "bucketed tables rewritten on repeat call"
 
 
-def test_session_persisted_concurrent_single_build(spark):
-    """Concurrent first calls must build exactly once (the pre-round-4
-    race double-built and leaked one persisted copy)."""
+def test_session_persisted_concurrent_single_build(fresh_spark):
+    """Concurrent first calls must build exactly once (a racing double
+    build leaks one persisted copy)."""
+    import sys
     import threading
     import time as _time
 
-    from data_ingestion_service_spark.session import (
-        session_invalidate,
-        session_persisted,
-    )
+    from data_ingestion_service_spark.session import session_persisted
 
     key = ("test_concurrent_build", "x")
-    session_invalidate(spark, key)
     builds = []
 
     def build():
         builds.append(1)
         _time.sleep(0.2)  # widen the race window
-        return spark.range(10)
+        return fresh_spark.range(10)
 
+    got = []
     threads = [
-        threading.Thread(target=lambda: session_persisted(spark, key, build))
+        threading.Thread(
+            target=lambda: got.append(session_persisted(fresh_spark, key, build))
+        )
         for _ in range(8)
     ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads), "a build never returned"
     assert len(builds) == 1, f"built {len(builds)} times under concurrency"
-    assert session_invalidate(spark, key)
+    assert len(got) == 8 and all(df is got[0] for df in got)
 
 
 def test_pack_sequences_window_is_sharded(spark, sf_dir):
@@ -1037,6 +959,20 @@ def test_winsorized_stats_histogram_single_pass(spark, sf_dir):
     assert "row_number" not in plan, "event-stream rank window came back"
     assert "partial_count" in plan, "histogram partial aggregation missing"
     assert "Join" not in plan, "bounds join-back came back"
+
+
+def test_p99_threshold_model_histogram_no_stream_sort(spark, sf_dir):
+    """q_stream_model_score's batch-learned threshold model picks its rank
+    from the same (type, cents) histogram as q_latency_percentiles: no
+    row_number over the event stream."""
+    from data_ingestion_service_spark.catalog import load_table
+    from data_ingestion_service_spark.functions import models
+
+    plan = formatted_plan(
+        models.p99_threshold_model(load_table(spark, sf_dir, "events"))
+    )
+    assert "row_number" not in plan, "event-stream rank window came back"
+    assert "partial_count" in plan, "histogram partial aggregation missing"
 
 
 def test_psi_model_broadcast(spark, sf_dir):
