@@ -8,8 +8,10 @@ line (round-6's single ~6KB line arrived truncated: "parsed": null).
 
 Methodology: one reused SparkSession (per-query session setup would swamp
 ms-scale queries — SURVEY.md §6); a full untimed warm-up round JIT-compiles
-the codegen paths (steady-state throughput is what a long-running ingestion
-service sees — cold-start adds ~50% to round one); inputs stay on parquet
+the codegen paths, and ``get_spark`` sizes the codegen cache so the classes
+it compiled are still cached when the timed rounds run (steady-state
+throughput is what a long-running ingestion service sees — cold-start adds
+~50% to round one); inputs stay on parquet
 (no pre-caching, scans are part of the measurement). Streaming queries
 rebuild their stream each run, so their replay + drain cost is always
 included. Measured on this box: AQE overhead at this scale is <2%, so the
@@ -384,7 +386,8 @@ def main() -> None:
     spark = get_spark(app_name="ingestion-engine-bench")
 
     keys = [k for k in HEADLINE if k in QUERIES]
-    # Warm-up round: JIT/codegen + parquet footer caches (untimed). Also
+    # Warm-up round: JIT, generated classes (kept by get_spark's codegen
+    # cache size) + parquet footer caches (untimed). Also
     # spin up the Python/Arrow worker pool: the first Python stage in a
     # session pays ~5s of one-time worker forks, which would otherwise
     # land entirely on whichever single query happens to hit Python first

@@ -1,7 +1,9 @@
 """Simulate the driver's verify flow end-to-end (the repo's real surface).
 
 Mirrors the protocol in __spark_entry__.py's docstring: a plain
-SparkSession (none of our tuned confs), entry() smoke at sf0.001, then
+SparkSession (none of our tuned confs; deliberately not even the static
+codegen cache size ``get_spark`` sets, since the driver's session lacks it
+too), entry() smoke at sf0.001, then
 every queries()[k] vs oracle_sql()[k] via DuckDB at sf0.01 — row count,
 column-name schema, and an order-insensitive value hash over columns
 sorted by name. Prints one line per query and a final summary.

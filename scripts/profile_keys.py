@@ -4,7 +4,9 @@ For each key named on argv: capture `.explain("formatted")` to
 plans/r11/<key>_<tag>.txt, run the query twice (cold then warm wall via
 the bench's .collect() methodology, plus a warm noop-sink wall per guide
 §1.4), and record the Spark job count per run via setJobGroup +
-statusTracker. Prints one JSON line per key.
+statusTracker and the generated classes each run compiled
+(``codegen_compiles``: cold call, last warm call; a warm count above 0
+means the key recompiles on every call). Prints one JSON line per key.
 
 Usage:
     python scripts/profile_keys.py [--tag before|after] key [key ...]
@@ -48,6 +50,7 @@ def main() -> None:
     spark = get_spark(app_name="profile-keys")
     sc = spark.sparkContext
     tracker = sc.statusTracker()
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
 
     # Warm the Python worker pool once (same rationale as bench.py).
     cpus = sc.defaultParallelism
@@ -60,10 +63,12 @@ def main() -> None:
         # --- cold run (session stores empty) ---
         group = f"prof_cold_{key}"
         sc.setJobGroup(group, key)
+        c0 = compiles.getCount()
         t0 = time.monotonic()
         df = fn(spark, SF_DIR)
         df.collect()
         cold = round(time.monotonic() - t0, 4)
+        cold_compiles = compiles.getCount() - c0
         time.sleep(0.2)
         cold_jobs = len(tracker.getJobIdsForGroup(group))
 
@@ -84,9 +89,11 @@ def main() -> None:
         for i in range(3):
             group = f"prof_warm{i}_{key}"
             sc.setJobGroup(group, key)
+            c0 = compiles.getCount()
             t0 = time.monotonic()
             fn(spark, SF_DIR).collect()
             walls.append(time.monotonic() - t0)
+            warm_compiles = compiles.getCount() - c0
             time.sleep(0.1)
             warm_jobs = max(warm_jobs, len(tracker.getJobIdsForGroup(group)))
         walls.sort()
@@ -101,6 +108,7 @@ def main() -> None:
             "key": key, "tag": TAG, "cold_sec": cold, "warm_med_sec": warm,
             "noop_sec": noop, "cold_jobs": cold_jobs, "warm_jobs": warm_jobs,
             "exchanges": n_exchange, "python_nodes": n_python,
+            "codegen_compiles": {"cold": cold_compiles, "warm": warm_compiles},
         }), flush=True)
     try:
         sc.setLocalProperty("spark.jobGroup.id", None)

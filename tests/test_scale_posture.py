@@ -469,6 +469,39 @@ def test_session_persisted_concurrent_single_build(fresh_spark):
     assert len(got) == 8 and all(df is got[0] for df in got)
 
 
+# perfbench's corpus_cold keys: the dedup, index and scoring family.
+CORPUS_KEYS = [
+    "q_near_dedup",
+    "q_minhash_pairs",
+    "q_simhash",
+    "q_dup_clusters",
+    "q_substring_dup",
+    "q_knn_ivf_kmeans",
+    "q_knn_pq",
+    "q_bm25",
+    "q_embed_near_dup",
+    "q_quality_score",
+    "q_repetition_score",
+    "q_lang_id",
+]
+
+
+def test_codegen_cache_keeps_working_set(spark, sf_dir):
+    """Generated classes stay compiled across calls: once the corpus keys
+    have run cold and warm, a repeat pass compiles nothing. Spark's
+    default cache (100 entries) evicts the classes a pass needs, so every
+    call recompiled them."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = metrics.METRIC_COMPILATION_TIME()
+    for _ in range(2):
+        for key in CORPUS_KEYS:
+            QUERIES[key](spark, sf_dir).collect()
+    before = compiles.getCount()
+    for key in CORPUS_KEYS:
+        QUERIES[key](spark, sf_dir).collect()
+    assert compiles.getCount() - before == 0
+
+
 def test_pack_sequences_window_is_sharded(spark, sf_dir):
     """The packing prefix-sum must window PER (source, shard): source
     alone funnels a dominant crawl source through one task (the r4
