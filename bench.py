@@ -428,9 +428,10 @@ def main() -> None:
             t0 = time.monotonic()
             QUERIES[key](spark, sf_dir).collect()
             samples[key].append(time.monotonic() - t0)
-            if key == "q_events_tumbling" and _sq.LAST_STREAM_TIMINGS:
-                stream_setup.append(_sq.LAST_STREAM_TIMINGS["setup_sec"])
-                stream_drain.append(_sq.LAST_STREAM_TIMINGS["drain_sec"])
+            if key == "q_events_tumbling":
+                drain = _sq.LAST_DRAIN.record
+                stream_setup.append(drain["setup_sec"])
+                stream_drain.append(drain["drain_sec"])
         round_totals.append(round(time.monotonic() - rt0, 4))
     timings = {k: round(_median(v), 4) for k, v in samples.items()}
 

@@ -3,12 +3,17 @@
 PAPERS.md).
 
 Verification strategy: the oracle cannot run a stream, so each streaming
-query replays ``events.parquet`` through ``readStream``, drains it with
-``processAllAvailable()`` into an in-memory sink, and returns the final
-sink state — which, for these operators, provably equals the batch
-query the oracle runs (SURVEY.md §2.9). Window/session operators that are
-identical batch/streaming by construction (same ``window()`` /
-``session_window()`` expression) run in whichever mode verifies strongest.
+query replays ``events.parquet`` through ``readStream``, drains it into
+a sink, and returns the final sink state — which, for these operators,
+provably equals the batch query the oracle runs (SURVEY.md §2.9). Every
+query drains through one function, ``_drain``: it starts the query,
+waits with ``processAllAvailable()``, ``awaitTermination()`` under an
+``availableNow`` trigger, or a bounded poll until a memory sink holds N
+rows, and stops it. ``run_to_memory`` and ``run_to_parquet`` wrap it
+for the two common sinks; ``foreachBatch`` keys pass their own writer.
+Window/session operators that are identical batch/streaming by
+construction (same ``window()`` / ``session_window()`` expression) run in
+whichever mode verifies strongest.
 
 State & scale: tumbling windows keep one row of state per (window, type);
 dedup state is bounded by ``withWatermark`` in production (unbounded here
@@ -19,6 +24,7 @@ same plans run with RocksDB state store and watermarked eviction.
 from __future__ import annotations
 
 import atexit
+import contextlib
 import functools
 import importlib.util
 import os
@@ -31,6 +37,7 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from data_ingestion_service_spark.catalog import load_table, table_path
 from data_ingestion_service_spark.functions import alerts, models
@@ -50,7 +57,7 @@ from data_ingestion_service_spark.session import ensure_session_confs
 # are invisible outside this module. One child per parent session
 # (weak-keyed — dies with the parent); drains racing each other INSIDE
 # the child remain the documented benign-perf trade, bounded by
-# _sized_stream_shuffle's restore-to-entered-value.
+# _drain_confs' restore-to-entered-value.
 # ---------------------------------------------------------------------------
 
 _STREAM_SESSIONS: "weakref.WeakKeyDictionary[SparkSession, SparkSession]" = (
@@ -84,13 +91,10 @@ def stream_session(spark: SparkSession) -> SparkSession:
             # provider (what a production 100 TB cluster runs) instead of
             # the default in-memory HDFS-backed map. Session-scoped on
             # the drain child, so batch plans never observe it; keys that
-            # pin their own provider (q_stream_rocksdb, TWS) still win —
-            # they set the conf after this.
+            # pin their own provider (q_stream_rocksdb, TWS) set it again
+            # for their drain.
             if os.environ.get("SPARK_GRAFT_STATE_PROVIDER") == "rocksdb":
-                child.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass",
-                    _ROCKSDB_PROVIDER,
-                )
+                child.conf.set(_PROVIDER_CONF, _ROCKSDB_PROVIDER)
             _STREAM_SESSIONS[spark] = child
     return child
 
@@ -229,7 +233,7 @@ def _value_cents(col: str = "value"):
 # for batch. At replay scale the session's 32 partitions mean 32 state
 # commits per stateful operator per micro-batch, and that bookkeeping IS
 # the drain wall (q_stream_outer_join at sf0.1: 14.9s at 32 partitions,
-# 4.7s at 8 — same rows). The drain helpers therefore size partitions to
+# 4.7s at 8 — same rows). _drain therefore sizes partitions to
 # the replay INPUT (~8 MB/partition, floor 4), clamped to the session
 # value, so a 100 TB run still gets the submitter's full setting while a
 # megabyte-scale replay stops paying hundredfold state overhead. The
@@ -299,32 +303,33 @@ def _stream_partitions(spark: SparkSession) -> str | None:
     return str(want) if want < cur else None
 
 
-class _sized_stream_shuffle:
-    """Context manager: lower shuffle partitions for one stream drain.
+_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
+_ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
+
+
+@contextlib.contextmanager
+def _drain_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on the drain session for one drain.
 
     Runs against the isolated drain session (see :func:`stream_session`),
-    so the write is invisible to batch plans on the caller's session.
-    Restores the value OBSERVED at ``__enter__`` — not the RUNTIME_CONFS
-    default — so session-specific overrides survive a drain (ADVICE r9).
+    so the writes are invisible to batch plans on the caller's session.
+    Each conf goes back to the value OBSERVED on entry — not the
+    RUNTIME_CONFS default, so session-specific overrides survive a drain
+    (ADVICE r9) — or is unset if it had none.
     """
-
-    def __init__(self, spark: SparkSession) -> None:
-        self._spark = spark
-        self._parts = _stream_partitions(spark)
-        self._entered: str | None = None
-
-    def __enter__(self):
-        if self._parts is not None:
-            self._entered = self._spark.conf.get("spark.sql.shuffle.partitions")
-            self._spark.conf.set("spark.sql.shuffle.partitions", self._parts)
-        return self
-
-    def __exit__(self, *exc):
-        if self._parts is not None and self._entered is not None:
-            self._spark.conf.set(
-                "spark.sql.shuffle.partitions", self._entered
-            )
-        return False
+    entered = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in entered.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def events_stream(spark: SparkSession, sf_dir: str, copies: int = 1) -> DataFrame:
@@ -595,30 +600,90 @@ def _stage_chunk_dir(
     )
 
 
-# Bench telemetry (VERDICT r6 item 4): a streamed headline query's wall time
-# conflates replay-harness cost (query start/teardown) with engine cost (the
-# micro-batch drain). run_to_memory records its last setup/drain split here
-# so bench.py can report them as additive detail — the headline definition
-# (total wall) is unchanged.
-LAST_STREAM_TIMINGS: dict[str, float] = {}
-
-
 _SINK_DIRS: list[str] = []
 
 
 def _reap_sink_dirs(keep_last: int = 0) -> None:
     """Delete drained parquet-sink temp dirs (ADVICE r7: three bench
     samples of a ~36M-row skewed-sf1 join otherwise accumulate in /tmp).
-    Called with keep_last=2 at the start of each new drain — every
-    consumer in the driver/bench/test protocols fully reads a result
-    before the next streaming query starts, and the 2-dir slack covers a
-    caller still holding the immediately-previous table — and with 0 at
-    interpreter exit for the stragglers."""
+    Called with keep_last=2 at the start of each new drain and with 0 at
+    interpreter exit for the stragglers. The 2-dir slack assumes a caller
+    reads a result before two more drains start. Sequential callers
+    (``driver_sim.py``, the tests) do; concurrent ones do not:
+    ``bench.py``'s 8-thread pool and perfbench's clients can have a third
+    drain reap a dir another thread is still reading."""
     while len(_SINK_DIRS) > keep_last:
         shutil.rmtree(_SINK_DIRS.pop(0), ignore_errors=True)
 
 
 atexit.register(_reap_sink_dirs)
+
+
+class _LastDrain(threading.local):
+    """The calling thread's last drain: ``record`` is None or
+    ``{"setup_sec", "drain_sec", "query_id"}``, written in one assignment
+    by :func:`_drain`. Setup is ``start()``'s wall, drain the wait's; a
+    streamed key's wall conflates the two, so ``bench.py`` reports them
+    as additive detail. Per thread, so concurrent drains (the bench's
+    thread pool) never mix one call's setup with another's drain."""
+
+    record: dict | None = None
+
+
+LAST_DRAIN = _LastDrain()
+
+
+def _drain(
+    writer: DataStreamWriter,
+    spark: SparkSession,
+    *,
+    available_now: bool = False,
+    until_rows: int | None = None,
+    rocksdb: bool = False,
+) -> None:
+    """Start ``writer``'s query on the drain session, wait, stop it.
+
+    The one place a stream query in this module starts, waits and
+    stops. The conf scope sizes the shuffle to the replay input and, with
+    ``rocksdb``, routes state through the RocksDB provider. Three waits:
+    ``processAllAvailable()`` by default; ``awaitTermination()`` under an
+    ``availableNow`` trigger (set here); or, with ``until_rows``, a bounded
+    poll until the memory sink holds that many rows — for sources that
+    never quiesce (an unbounded rate source, processing-time timeouts).
+    """
+    confs = {}
+    parts = _stream_partitions(spark)
+    if parts is not None:
+        confs["spark.sql.shuffle.partitions"] = parts
+    if rocksdb:
+        confs[_PROVIDER_CONF] = _ROCKSDB_PROVIDER
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    t0 = time.monotonic()
+    with _drain_confs(spark, confs):
+        q = writer.start()
+        t1 = time.monotonic()
+        try:
+            if available_now:
+                q.awaitTermination()
+            elif until_rows is None:
+                q.processAllAvailable()
+            else:
+                deadline = t1 + 180
+                while (n := spark.table(q.name).count()) < until_rows:
+                    if time.monotonic() > deadline:
+                        raise TimeoutError(
+                            f"stream stalled: {n}/{until_rows} rows in sink"
+                        )
+                    time.sleep(0.2)
+            t2 = time.monotonic()
+        finally:
+            q.stop()
+    LAST_DRAIN.record = {
+        "setup_sec": round(t1 - t0, 4),
+        "drain_sec": round(t2 - t1, 4),
+        "query_id": str(q.id),
+    }
 
 
 def run_to_parquet(df: DataFrame, spark: SparkSession) -> DataFrame:
@@ -633,54 +698,52 @@ def run_to_parquet(df: DataFrame, spark: SparkSession) -> DataFrame:
     _reap_sink_dirs(keep_last=2)
     work = tempfile.mkdtemp(prefix="ingest_sink_")
     _SINK_DIRS.append(work)
-    t0 = time.monotonic()
-    with _sized_stream_shuffle(spark):
-        q = (
-            df.writeStream.format("parquet")
-            .option("path", f"{work}/out")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .outputMode("append")
-            .start()
-        )
-        t1 = time.monotonic()
-        try:
-            q.processAllAvailable()
-            t2 = time.monotonic()
-        finally:
-            q.stop()
-    LAST_STREAM_TIMINGS["setup_sec"] = round(t1 - t0, 4)
-    LAST_STREAM_TIMINGS["drain_sec"] = round(t2 - t1, 4)
+    _drain(
+        df.writeStream.format("parquet")
+        .option("path", f"{work}/out")
+        .option("checkpointLocation", f"{work}/ckpt")
+        .outputMode("append"),
+        spark,
+    )
     # Explicit schema: a zero-row drain leaves only _spark_metadata and
     # schema inference would fail; the streaming DF's schema is the
     # sink's schema by construction (ADVICE r7).
     return spark.read.schema(df.schema).parquet(f"{work}/out")
 
 
-def run_to_memory(df: DataFrame, output_mode: str) -> DataFrame:
-    """Drain a streaming DataFrame into a memory sink; return final state."""
+def run_to_memory(
+    df: DataFrame,
+    output_mode: str,
+    *,
+    checkpoint: str | None = None,
+    available_now: bool = False,
+    until_rows: int | None = None,
+    rocksdb: bool = False,
+) -> DataFrame:
+    """Drain a streaming DataFrame into a memory sink; return final state.
+
+    ``checkpoint`` pins the query's checkpoint dir (state inspection,
+    restarts); the other keywords pass through to :func:`_drain`. The
+    sink view is dropped even when the drain fails.
+    """
     name = f"sink_{uuid.uuid4().hex[:12]}"
     spark = df.sparkSession
-    t0 = time.monotonic()
-    with _sized_stream_shuffle(spark):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .start()
+    writer = df.writeStream.format("memory").queryName(name).outputMode(output_mode)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    try:
+        _drain(
+            writer,
+            spark,
+            available_now=available_now,
+            until_rows=until_rows,
+            rocksdb=rocksdb,
         )
-        t1 = time.monotonic()
-        try:
-            q.processAllAvailable()
-            t2 = time.monotonic()
-        finally:
-            q.stop()
-    LAST_STREAM_TIMINGS["setup_sec"] = round(t1 - t0, 4)
-    LAST_STREAM_TIMINGS["drain_sec"] = round(t2 - t1, 4)
-    # The resolved DataFrame keeps the sink's rows; the view would pin
-    # them on the session for as long as the session lives.
-    out = spark.table(name)
-    spark.catalog.dropTempView(name)
-    return out
+        # The resolved DataFrame keeps the sink's rows; the view would
+        # pin them on the session for as long as the session lives.
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 # ---------------------------------------------------------------------------
@@ -933,16 +996,11 @@ def q_stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(f"{out}/data")
         )
 
-    with _sized_stream_shuffle(spark):
-        q = (
-            ev.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", f"{out}/checkpoint")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain(
+        ev.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", f"{out}/checkpoint"),
+        spark,
+    )
     back = spark.read.parquet(f"{out}/data")
     # Exact-cents avg (r10 float-sum audit): sum cents, divide once.
     return back.groupBy("event_type").agg(
@@ -1069,18 +1127,13 @@ def q_stream_to_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "event_type", "value"
     )
     out = tempfile.mkdtemp(prefix="ingest_stream_sink_")
-    with _sized_stream_shuffle(spark):
-        q = (
-            filtered.writeStream.format("parquet")
-            .option("path", f"{out}/data")
-            .option("checkpointLocation", f"{out}/checkpoint")
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain(
+        filtered.writeStream.format("parquet")
+        .option("path", f"{out}/data")
+        .option("checkpointLocation", f"{out}/checkpoint")
+        .outputMode("append"),
+        spark,
+    )
     back = spark.read.parquet(f"{out}/data")
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -1250,16 +1303,11 @@ def q_stream_ivm_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged.write.mode("overwrite").parquet(f"{work}/snap_v{batch_id}")
         snap_state["version"] = batch_id
 
-    with _sized_stream_shuffle(spark):
-        q = (
-            ev.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", f"{work}/checkpoint")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain(
+        ev.writeStream.foreachBatch(merge_batch)
+        .option("checkpointLocation", f"{work}/checkpoint"),
+        spark,
+    )
     final = spark.read.parquet(f"{work}/snap_v{snap_state['version']}")
     return final.select(
         F.col("hour_start").cast("timestamp_ntz").alias("hour_start"),
@@ -1290,10 +1338,6 @@ FROM events
 GROUP BY 1, 2
 """
 
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
 
 @register("q_stream_rocksdb", oracle=_ROCKSDB_ORACLE)
 def q_stream_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1315,26 +1359,14 @@ def q_stream_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.max("value").alias("max_val"))
     )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER)
-    name = f"sink_{uuid.uuid4().hex[:12]}"
-    try:
-        with _sized_stream_shuffle(spark):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", f"{work}/checkpoint")
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    return spark.table(name).select(
+    final = run_to_memory(
+        agg,
+        "complete",
+        checkpoint=f"{work}/checkpoint",
+        available_now=True,
+        rocksdb=True,
+    )
+    return final.select(
         F.col("window.start").cast("timestamp_ntz").alias("hour_start"),
         "event_type",
         "n",
@@ -1524,26 +1556,10 @@ def q_stream_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("advanceMillisPerBatch", 1000)
         .load()
     )
-    name = f"sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        src.select("value")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        # Unbounded source: drain until the deterministic prefix is in the
-        # sink (4+ triggers), then stop. Bounded wait so a scheduler stall
-        # fails loudly instead of hanging the driver.
-        deadline = time.monotonic() + 60
-        while spark.table(name).count() < _RATE_TARGET:
-            if time.monotonic() > deadline:
-                raise TimeoutError("rate-micro-batch source stalled")
-            time.sleep(0.2)
-    finally:
-        q.stop()
-    rows = spark.table(name).filter(F.col("value") < _RATE_TARGET)
+    # Unbounded source: drain until the deterministic prefix is in the
+    # sink (4+ triggers), then stop.
+    sink = run_to_memory(src.select("value"), "append", until_rows=_RATE_TARGET)
+    rows = sink.filter(F.col("value") < _RATE_TARGET)
     return rows.groupBy((F.col("value") % 10).alias("bucket")).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("value").cast("bigint").alias("total"),
@@ -1576,19 +1592,7 @@ def q_stream_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"), F.sum(_value_cents()).alias("sv")
     )
     out = tempfile.mkdtemp(prefix="ingest_state_inspect_")
-    name = f"state_sink_{uuid.uuid4().hex[:12]}"
-    with _sized_stream_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", out)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    run_to_memory(agg, "complete", checkpoint=out)
     # Not the sink: the OPERATOR STATE itself, keyed by group, one
     # struct per (key, partition).
     state = spark.read.format("statestore").load(out)
@@ -1703,18 +1707,13 @@ def q_stream_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame
             "event_type",
             F.round(F.col("value") * 100).cast("long").alias("value_cents"),
         )
-        with _sized_stream_shuffle(spark):
-            q = (
-                proj.writeStream.format("parquet")
-                .option("path", f"{work}/sink")
-                .option("checkpointLocation", f"{work}/checkpoint")
-                .outputMode("append")
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+        _drain(
+            proj.writeStream.format("parquet")
+            .option("path", f"{work}/sink")
+            .option("checkpointLocation", f"{work}/checkpoint")
+            .outputMode("append"),
+            spark,
+        )
 
     run_pass()  # first half drains, query stops (planned "crash" point)
     shutil.copy(h2, f"{work}/replay/b_half.parquet")
@@ -1768,32 +1767,19 @@ def q_stream_state_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(f"{work}/replay")
     shutil.copy(h1, f"{work}/replay/a_half.parquet")
 
-    def run_agg(aggs: list, ckpt: str, name: str) -> DataFrame:
+    def run_agg(aggs: list, ckpt: str) -> DataFrame:
         ev = _normalize_ts(
             spark.readStream.schema(schema).parquet(f"{work}/replay"), kind
         )
         agg = ev.groupBy("event_type").agg(*aggs)
-        with _sized_stream_shuffle(spark):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        return spark.table(name)
+        return run_to_memory(agg, "complete", checkpoint=ckpt)
 
     count_only = [F.count(F.lit(1)).alias("n")]
     evolved = [
         F.count(F.lit(1)).alias("n"),
         F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
     ]
-    sink1 = f"evo_{uuid.uuid4().hex[:12]}"
-    phase1 = run_agg(count_only, f"{work}/ckpt", sink1).select(
+    phase1 = run_agg(count_only, f"{work}/ckpt").select(
         "event_type", F.col("n").alias("n_first_half")
     )
     # Freeze phase 1's final state batch-side: the memory sink table is
@@ -1804,13 +1790,11 @@ def q_stream_state_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.copy(h2, f"{work}/replay/b_half.parquet")
     refused = False
     try:
-        run_agg(evolved, f"{work}/ckpt", f"evo_{uuid.uuid4().hex[:12]}")
+        run_agg(evolved, f"{work}/ckpt")
     except StreamingQueryException as e:
         # The precise refusal matters: anything else is a different bug.
         refused = "STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE" in str(e)
-    rebuilt = run_agg(
-        evolved, f"{work}/ckpt_v2", f"evo_{uuid.uuid4().hex[:12]}"
-    )
+    rebuilt = run_agg(evolved, f"{work}/ckpt_v2")
     # Right join on the rebuilt (full-history) side: an event_type whose
     # events all carry odd event_ids has NO phase-1 row but the oracle
     # still emits it with n_first_half = 0 — an inner join would drop it
@@ -1930,30 +1914,13 @@ def _transform_with_state_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Update",
         timeMode="ProcessingTime",
     )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
+    updates = run_to_memory(
+        out,
+        "update",
+        checkpoint=f"{work}/checkpoint",
+        available_now=True,
+        rocksdb=True,
     )
-    name = f"tws_{uuid.uuid4().hex[:12]}"
-    try:
-        with _sized_stream_shuffle(spark):
-            q = (
-                out.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", f"{work}/checkpoint")
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-    updates = spark.table(name)
     # One update per (user, batch-with-activity); n_events is strictly
     # increasing per user, so the final state is the max-n row.
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
@@ -2160,28 +2127,8 @@ def q_stream_stateful_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
     )
-    name = f"sto_{uuid.uuid4().hex[:12]}"
-    with _sized_stream_shuffle(spark):
-        q = (
-            flushed.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            deadline = time.monotonic() + 180
-            while time.monotonic() < deadline:
-                if spark.table(name).count() >= n_users:
-                    break
-                time.sleep(0.25)
-            else:
-                raise TimeoutError(
-                    f"stateful-timeout flush incomplete: "
-                    f"{spark.table(name).count()}/{n_users} users"
-                )
-        finally:
-            q.stop()
-    return spark.table(name).select(
+    final = run_to_memory(flushed, "append", until_rows=n_users)
+    return final.select(
         "user_id",
         "n_events",
         F.round(F.col("total_value"), 2).alias("total_value"),
@@ -2240,16 +2187,11 @@ def q_stream_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             batch_df.unpersist()
 
-    with _sized_stream_shuffle(spark):
-        q = (
-            ev.writeStream.foreachBatch(fan_out)
-            .option("checkpointLocation", f"{out}/checkpoint")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain(
+        ev.writeStream.foreachBatch(fan_out)
+        .option("checkpointLocation", f"{out}/checkpoint"),
+        spark,
+    )
     raw = spark.read.parquet(f"{out}/raw")
     agg = spark.read.parquet(f"{out}/agg")
     from_raw = raw.groupBy("event_type").agg(
@@ -2343,16 +2285,11 @@ def q_stream_dim_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         if batch_id == 0:
             write_dim("v2")  # the refresh lands between batches
 
-    with _sized_stream_shuffle(spark):
-        q = (
-            ev.writeStream.foreachBatch(enrich)
-            .option("checkpointLocation", f"{work}/checkpoint")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain(
+        ev.writeStream.foreachBatch(enrich)
+        .option("checkpointLocation", f"{work}/checkpoint"),
+        spark,
+    )
     sink = spark.read.parquet(f"{work}/sink")
     return sink.groupBy("segment").agg(
         F.count(F.lit(1)).alias("n"),
@@ -2392,18 +2329,13 @@ def q_stream_medallion(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="ingest_medal_")
 
     def drain(df: DataFrame, path: str, ckpt: str) -> None:
-        with _sized_stream_shuffle(spark):
-            q = (
-                df.writeStream.format("parquet")
-                .option("path", path)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+        _drain(
+            df.writeStream.format("parquet")
+            .option("path", path)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append"),
+            spark,
+        )
 
     # bronze: raw landing zone (append-only, source schema preserved).
     # Directory-shaped tables stream directly; single-file fixtures
@@ -2443,20 +2375,7 @@ def q_stream_medallion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.sum("value_cents").cast("long").alias("value_cents"),
     )
-    name = f"gold_{uuid.uuid4().hex[:12]}"
-    with _sized_stream_shuffle(spark):
-        q = (
-            gold.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", f"{work}/ckpt_gold")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return run_to_memory(gold, "complete", checkpoint=f"{work}/ckpt_gold")
 
 
 # ---------------------------------------------------------------------------
@@ -2510,16 +2429,11 @@ def q_stream_idempotent_batchid(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev = _normalize_ts(
             spark.readStream.schema(schema).parquet(f"{work}/replay"), kind
         )
-        with _sized_stream_shuffle(spark):
-            q = (
-                ev.writeStream.foreachBatch(write_batch)
-                .option("checkpointLocation", f"{work}/checkpoint")
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+        _drain(
+            ev.writeStream.foreachBatch(write_batch)
+            .option("checkpointLocation", f"{work}/checkpoint"),
+            spark,
+        )
 
     run_pass()  # batch 0 lands
     # The RETRY: re-deliver batch 0's exact payload (post-commit crash →
@@ -2650,33 +2564,23 @@ def q_stream_listener(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev = spark.readStream.schema(schema).option(
             "maxFilesPerTrigger", 1
         ).parquet(f"{work}/replay")
-        name = f"sink_{uuid.uuid4().hex[:12]}"
-        q = (
-            ev.select("event_id")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        watched = str(q.id)
-        try:
-            q.processAllAvailable()
-            # The listener bus is asynchronous: progress events can trail
-            # processAllAvailable(). Convergence-poll (bounded) until all
-            # non-empty batches have been delivered to the Python side.
-            deadline = time.monotonic() + 60
-            while (
-                sum(1 for i, _, n in progress if i == watched and n > 0)
-                < _LISTENER_CHUNKS
-            ):
-                if time.monotonic() > deadline:
-                    raise TimeoutError(
-                        "listener progress events did not arrive: "
-                        f"{progress!r}"
-                    )
-                time.sleep(0.2)
-        finally:
-            q.stop()
+        run_to_memory(ev.select("event_id"), "append")
+        watched = LAST_DRAIN.record["query_id"]
+        # The listener bus is asynchronous: progress events can trail the
+        # drain (each is posted before its batch signals the drain, then
+        # delivered later). Convergence-poll (bounded) until all non-empty
+        # batches have been delivered to the Python side.
+        deadline = time.monotonic() + 60
+        while (
+            sum(1 for i, _, n in progress if i == watched and n > 0)
+            < _LISTENER_CHUNKS
+        ):
+            if time.monotonic() > deadline:
+                raise TimeoutError(
+                    "listener progress events did not arrive: "
+                    f"{progress!r}"
+                )
+            time.sleep(0.2)
     finally:
         spark.streams.removeListener(listener)
     rows = [(b, n) for i, b, n in progress if i == watched and n > 0]
@@ -2845,16 +2749,11 @@ def q_stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged.write.mode("overwrite").parquet(f"{work}/sketch_v{batch_id}")
         snap_state["version"] = batch_id
 
-    with _sized_stream_shuffle(spark):
-        q = (
-            raw.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", f"{work}/checkpoint")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain(
+        raw.writeStream.foreachBatch(merge_batch)
+        .option("checkpointLocation", f"{work}/checkpoint"),
+        spark,
+    )
     sketch = spark.read.parquet(f"{work}/sketch_v{snap_state['version']}")
     uc = (
         spark.read.schema(schema)
@@ -2992,16 +2891,11 @@ def q_stream_out_of_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.append((len(rows), int(agg["n"]), int(agg["n_late"]), int(running)))
         state["max_s"] = running
 
-    with _sized_stream_shuffle(spark):
-        q = (
-            ev.writeStream.foreachBatch(audit_batch)
-            .option("checkpointLocation", f"{work}/checkpoint")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain(
+        ev.writeStream.foreachBatch(audit_batch)
+        .option("checkpointLocation", f"{work}/checkpoint"),
+        spark,
+    )
     return spark.createDataFrame(
         rows, "batch_id bigint, n_events bigint, n_late bigint, running_max_s bigint"
     )
@@ -3111,20 +3005,17 @@ def q_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(f"{out_dir}/b{batch_id}")
         )
 
-    with _sized_stream_shuffle(spark):
-        q = (
+    try:
+        _drain(
             ev.writeStream.foreachBatch(enrich)
-            .option("checkpointLocation", f"{work}/ckpt")
-            .start()
+            .option("checkpointLocation", f"{work}/ckpt"),
+            spark,
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            # The drain is this operator's terminal action and the
-            # returned DataFrame reads the sink parquet, not the dim —
-            # retire the per-call dim cache eagerly (ADVICE r11 medium).
-            dim.unpersist()
+    finally:
+        # The drain is this operator's terminal action and the
+        # returned DataFrame reads the sink parquet, not the dim —
+        # retire the per-call dim cache eagerly (ADVICE r11 medium).
+        dim.unpersist()
     # Explicit schema (zero-row drains have no footer to infer from) +
     # recursive lookup over the per-batch subdirs.
     from pyspark.sql.types import StructField, StructType

@@ -1993,3 +1993,35 @@ def test_no_unguarded_money_sums():
     assert not bad, f"unguarded money aggregates (see audit.py): {bad}"
     stale = set(audit.JUSTIFIED) - set(hits)
     assert not stale, f"JUSTIFIED entries with no remaining hit: {stale}"
+
+
+def test_stream_queries_drain_in_one_place():
+    """Every stream query in stream_queries.py starts, waits and stops in
+    ``_drain``: one ``.start()`` call in the module, and no
+    ``processAllAvailable``/``awaitTermination``/``stop`` call outside it.
+    A new stream key that hand-writes its own drain fails here; route it
+    through ``run_to_memory``, ``run_to_parquet`` or ``_drain``."""
+    import ast
+    from pathlib import Path
+
+    from data_ingestion_service_spark.streaming import stream_queries as sq
+
+    lifecycle = {"start", "processAllAvailable", "awaitTermination", "stop"}
+    calls: list[tuple[str | None, str]] = []  # (enclosing def, method)
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr in lifecycle
+            ):
+                calls.append((fn, child.func.attr))
+            inner = child.name if isinstance(child, ast.FunctionDef) else fn
+            visit(child, inner)
+
+    visit(ast.parse(Path(sq.__file__).read_text()), None)
+    starts = [c for c in calls if c[1] == "start"]
+    assert starts == [("_drain", "start")], f"stream starts: {starts}"
+    outside = [c for c in calls if c[0] != "_drain"]
+    assert not outside, f"stream lifecycle calls outside _drain: {outside}"

@@ -358,30 +358,121 @@ def test_stream_shuffle_sized_to_replay_input(spark, sf_dir):
     )
 
 
-def test_memory_sink_view_dropped(fresh_spark, oracle_con, sf_dir):
-    """A memory-sink drain leaves no sink_* temp view on the stream child
-    session (one per call would keep every streamed result alive), and the
-    returned DataFrame still collects to the oracle's canonical hash."""
+# Every key that drains into a memory sink: the run_to_memory keys that
+# always went through the helper, then the ones that built their own sink.
+_MEMORY_SINK_KEYS = [
+    "q_events_tumbling",
+    "q_stream_dedup",
+    "q_stream_stateful",
+    "q_stream_dedup_watermark",
+    "q_stream_sliding",
+    "q_stream_topk",
+    "q_stream_static_join",
+    "q_stream_watermark",
+    "q_stream_session_window",
+    "q_stream_late_drop",
+    "src_python_stream_source",
+    "q_stream_error_rate",
+    "q_stream_model_score",
+    "q_stream_rocksdb",
+    "q_stream_rate_source",
+    "q_stream_state_inspect",
+    "q_stream_state_evolution",
+    pytest.param(
+        "q_stream_transform_with_state",
+        marks=pytest.mark.skipif(
+            "q_stream_transform_with_state" not in QUERIES,
+            reason="registered only where google.protobuf is importable",
+        ),
+    ),
+    "q_stream_stateful_timeout",
+    "q_stream_medallion",
+    "q_stream_listener",
+]
+
+
+@pytest.mark.parametrize("key", _MEMORY_SINK_KEYS)
+def test_memory_sink_view_dropped(fresh_spark, oracle_con, sf_dir, key):
+    """A memory-sink drain leaves no temp view on the stream child session
+    (one per call would keep every streamed result alive) and no active
+    query; q_events_tumbling's returned DataFrame still collects to the
+    oracle's canonical hash."""
     import importlib.util
     from pathlib import Path
 
     from data_ingestion_service_spark.registry import ORACLES
     from data_ingestion_service_spark.streaming.stream_queries import stream_session
 
+    child = stream_session(fresh_spark)
+
+    def temp_views() -> set:
+        return {t.name for t in child.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    df = QUERIES[key](fresh_spark, sf_dir)
+    left = temp_views() - before
+    assert not left, f"{key} left temp views behind: {left}"
+    assert not child.streams.active, f"{key} left a stream query running"
+    if key != "q_events_tumbling":
+        return
     path = Path(__file__).resolve().parents[1] / "scripts" / "driver_sim.py"
     spec = importlib.util.spec_from_file_location("driver_sim", path)
     driver_sim = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(driver_sim)
-
-    df = QUERIES["q_events_tumbling"](fresh_spark, sf_dir)
-    views = [
-        t.name
-        for t in stream_session(fresh_spark).catalog.listTables()
-        if t.name.startswith("sink_")
-    ]
-    assert not views, f"memory-sink views left behind: {views}"
-    want = oracle_con.execute(ORACLES["q_events_tumbling"]).df()
+    want = oracle_con.execute(ORACLES[key]).df()
     assert driver_sim.canon_hash(df.toPandas()) == driver_sim.canon_hash(want)
+
+
+def test_drain_conf_scope_restores_entered_values(fresh_spark, sf_dir):
+    """The drain's one conf scope puts each conf back as it found it:
+    q_stream_rocksdb switches the child's state-store provider to RocksDB
+    for its drain only, whether the provider was unset or set on entry."""
+    from data_ingestion_service_spark.streaming import stream_queries as sq
+
+    child = sq.stream_session(fresh_spark)
+    conf = "spark.sql.streaming.stateStore.providerClass"
+    hdfs = (
+        "org.apache.spark.sql.execution.streaming.state."
+        "HDFSBackedStateStoreProvider"
+    )
+    entered = child.conf.get(conf, None)
+    QUERIES["q_stream_rocksdb"](fresh_spark, sf_dir)
+    assert child.conf.get(conf, None) == entered
+    child.conf.set(conf, hdfs)
+    try:
+        QUERIES["q_stream_rocksdb"](fresh_spark, sf_dir)
+        assert child.conf.get(conf, None) == hdfs
+    finally:
+        if entered is None:
+            child.conf.unset(conf)
+        else:
+            child.conf.set(conf, entered)
+
+
+def test_drain_record_is_per_thread(spark, sf_dir):
+    """A drain writes its setup/drain split to its own thread's record: a
+    drain on a second thread must not change the first thread's."""
+    import threading
+
+    from data_ingestion_service_spark.streaming import stream_queries as sq
+
+    QUERIES["q_events_tumbling"](spark, sf_dir)
+    mine = sq.LAST_DRAIN.record
+    assert mine is not None and mine["drain_sec"] >= 0
+    theirs = {}
+
+    def drain_elsewhere():
+        theirs["before"] = sq.LAST_DRAIN.record
+        QUERIES["q_stream_topk"](spark, sf_dir)
+        theirs["after"] = sq.LAST_DRAIN.record
+
+    t = threading.Thread(target=drain_elsewhere)
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive(), "drain on the second thread did not finish"
+    assert theirs["before"] is None
+    assert theirs["after"]["query_id"] != mine["query_id"]
+    assert sq.LAST_DRAIN.record is mine
 
 
 def test_shuffle_partitions_from_star_cpus(monkeypatch):
