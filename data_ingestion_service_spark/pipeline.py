@@ -350,7 +350,12 @@ class Pipeline:
         to one sink and run_stream() to another, compare (the declared
         sink path is deployment config, not part of the transform
         semantics; without the override a batch run followed by a
-        streaming run would append a second copy into the same files)."""
+        streaming run would append a second copy into the same files).
+
+        The query runs on the caller's session with its confs as they
+        are: unlike the registered stream keys' drain, it neither sizes
+        ``spark.sql.shuffle.partitions`` to the input nor switches the
+        checkpoint file manager, so the caller's settings for both hold."""
         src, sink = self._require()
         if sink_path is not None:
             sink = _Sink(

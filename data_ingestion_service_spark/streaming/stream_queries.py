@@ -231,12 +231,18 @@ def _value_cents(col: str = "value"):
 # partition count is fixed at query start and becomes the state-store
 # partition count — AQE cannot coalesce it at runtime the way it does
 # for batch. At replay scale the session's 32 partitions mean 32 state
-# commits per stateful operator per micro-batch, and that bookkeeping IS
-# the drain wall (q_stream_outer_join at sf0.1: 14.9s at 32 partitions,
-# 4.7s at 8 — same rows). _drain therefore sizes partitions to
-# the replay INPUT (~8 MB/partition, floor 4), clamped to the session
-# value, so a 100 TB run still gets the submitter's full setting while a
-# megabyte-scale replay stops paying hundredfold state overhead. The
+# commits per stateful operator per micro-batch (q_stream_outer_join at
+# sf0.1: 14.9s at 32 partitions, 4.7s at 8 — same rows). Each commit
+# writes a delta file and its .crc, and the measured cost of a commit is
+# mostly child processes, not I/O: without the native Hadoop library the
+# local filesystem forks `chmod` per created file and, under Spark's
+# default checkpoint manager, `readlink` 4 times per rename (see
+# _CKPT_MANAGER_CONF; JFR counted 2,094 spawns per pass of perfbench's
+# stream_write keys, 601 with the FileSystem manager). _drain therefore
+# sizes partitions to the replay INPUT (~8 MB/partition, floor 4),
+# clamped to the session value, so a 100 TB run still gets the
+# submitter's full setting while a megabyte-scale replay stops paying
+# hundredfold state overhead. The
 # input size is noted per-thread by events_stream/replay_stage; the conf
 # write lands on the isolated drain session only (stream_session above)
 # and is restored to its entered value after, so batch plans on the
@@ -306,6 +312,19 @@ def _stream_partitions(spark: SparkSession) -> str | None:
 _PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 _ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
+# Checkpoint files (offsets, commits, sink metadata, state deltas, RocksDB
+# uploads) are written through CheckpointFileManager.create, which reads
+# this conf. Spark's default FileContext manager renames through
+# AbstractFileSystem, whose link check on the local filesystem runs
+# `readlink` in a child process when no native Hadoop library is loaded:
+# 4 spawns per checkpoint file (source, destination, both .crc files).
+# The FileSystem manager writes the same temp file and renames it with
+# FileSystem.rename (the same rename(2) locally) without the link check.
+_CKPT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_CKPT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
 )
 
 
@@ -644,8 +663,10 @@ def _drain(
     """Start ``writer``'s query on the drain session, wait, stop it.
 
     The one place a stream query in this module starts, waits and
-    stops. The conf scope sizes the shuffle to the replay input and, with
-    ``rocksdb``, routes state through the RocksDB provider. Three waits:
+    stops. The conf scope sizes the shuffle to the replay input, writes
+    checkpoint files through the FileSystem manager unless the session
+    names its own and, with ``rocksdb``, routes state through the RocksDB
+    provider. Three waits:
     ``processAllAvailable()`` by default; ``awaitTermination()`` under an
     ``availableNow`` trigger (set here); or, with ``until_rows``, a bounded
     poll until the memory sink holds that many rows — for sources that
@@ -655,6 +676,8 @@ def _drain(
     parts = _stream_partitions(spark)
     if parts is not None:
         confs["spark.sql.shuffle.partitions"] = parts
+    if spark.conf.get(_CKPT_MANAGER_CONF, None) is None:
+        confs[_CKPT_MANAGER_CONF] = _FS_CKPT_MANAGER
     if rocksdb:
         confs[_PROVIDER_CONF] = _ROCKSDB_PROVIDER
     if available_now:

@@ -27,11 +27,13 @@ def spark():
 @pytest.fixture
 def fresh_spark(spark):
     """A new session on the shared context: its session stores start
-    empty. Teardown unpersists and drops the stores it built."""
+    empty. Teardown drops the session's store entries without
+    unpersisting them: sessions share one CacheManager, so an unpersist
+    would also uncache the equal-plan stores the shared ``spark`` session
+    still holds."""
     s = spark.newSession()
     yield s
-    for df in session_mod._DF_CACHE.pop(s, {}).values():
-        df.unpersist()
+    session_mod._DF_CACHE.pop(s, None)
 
 
 @pytest.fixture(scope="session")

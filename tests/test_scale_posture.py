@@ -426,7 +426,8 @@ def test_memory_sink_view_dropped(fresh_spark, oracle_con, sf_dir, key):
 def test_drain_conf_scope_restores_entered_values(fresh_spark, sf_dir):
     """The drain's one conf scope puts each conf back as it found it:
     q_stream_rocksdb switches the child's state-store provider to RocksDB
-    for its drain only, whether the provider was unset or set on entry."""
+    and its checkpoint manager to the FileSystem one for its drain only,
+    whether the provider was unset or set on entry."""
     from data_ingestion_service_spark.streaming import stream_queries as sq
 
     child = sq.stream_session(fresh_spark)
@@ -436,8 +437,10 @@ def test_drain_conf_scope_restores_entered_values(fresh_spark, sf_dir):
         "HDFSBackedStateStoreProvider"
     )
     entered = child.conf.get(conf, None)
+    entered_manager = child.conf.get(sq._CKPT_MANAGER_CONF, None)
     QUERIES["q_stream_rocksdb"](fresh_spark, sf_dir)
     assert child.conf.get(conf, None) == entered
+    assert child.conf.get(sq._CKPT_MANAGER_CONF, None) == entered_manager
     child.conf.set(conf, hdfs)
     try:
         QUERIES["q_stream_rocksdb"](fresh_spark, sf_dir)
@@ -447,6 +450,47 @@ def test_drain_conf_scope_restores_entered_values(fresh_spark, sf_dir):
             child.conf.unset(conf)
         else:
             child.conf.set(conf, entered)
+
+
+def test_drain_checkpoints_through_filesystem_manager(fresh_spark, sf_dir, tmp_path):
+    """Inside a drain, checkpoint files go through Hadoop's FileSystem API.
+    Spark's default FileContext manager renames through a link check that,
+    on a local filesystem without the native Hadoop library, runs
+    `readlink` in a child process 4 times per checkpoint file. A drain
+    session that names its own manager keeps it."""
+    from data_ingestion_service_spark.streaming import stream_queries as sq
+
+    child = sq.stream_session(fresh_spark)
+    pkg = "org.apache.spark.sql.execution.streaming.checkpointing."
+    seen = []
+
+    def manager_of(batch, _epoch):
+        jvm = batch.sparkSession._jvm
+        hadoop_conf = batch.sparkSession._jsparkSession.sessionState().newHadoopConf()
+        mgr = getattr(jvm, pkg + "CheckpointFileManager").create(
+            jvm.org.apache.hadoop.fs.Path(str(tmp_path / "probe")), hadoop_conf
+        )
+        seen.append(mgr.getClass().getName())
+
+    def drain() -> list:
+        seen.clear()
+        sq._drain(
+            sq.events_stream(child, sf_dir).writeStream.foreachBatch(manager_of),
+            child,
+            available_now=True,
+        )
+        return sorted(set(seen))
+
+    assert child.conf.get(sq._CKPT_MANAGER_CONF, None) is None
+    assert drain() == [pkg + "FileSystemBasedCheckpointFileManager"]
+    assert child.conf.get(sq._CKPT_MANAGER_CONF, None) is None
+    own = pkg + "FileContextBasedCheckpointFileManager"
+    child.conf.set(sq._CKPT_MANAGER_CONF, own)
+    try:
+        assert drain() == [own]
+        assert child.conf.get(sq._CKPT_MANAGER_CONF) == own
+    finally:
+        child.conf.unset(sq._CKPT_MANAGER_CONF)
 
 
 def test_drain_record_is_per_thread(spark, sf_dir):
@@ -1975,13 +2019,20 @@ def test_stream_drain_conf_isolated_from_batch(spark, sf_dir):
     # The child inherits the PARENT's current value (here the test
     # fixture's override, 8 — not RUNTIME_CONFS' 32): ADVICE r9.
     assert child.conf.get("spark.sql.shuffle.partitions") == expect
+    # Sampled too: the drain's checkpoint manager.
+    manager = spark.conf.get(sq._CKPT_MANAGER_CONF, None)
 
     observed: set = set()
     done = threading.Event()
 
     def sample():
         while not done.is_set():
-            observed.add(spark.conf.get("spark.sql.shuffle.partitions"))
+            observed.add(
+                (
+                    spark.conf.get("spark.sql.shuffle.partitions"),
+                    spark.conf.get(sq._CKPT_MANAGER_CONF, None),
+                )
+            )
             _time.sleep(0.002)
 
     t = threading.Thread(target=sample, daemon=True)
@@ -1993,7 +2044,7 @@ def test_stream_drain_conf_isolated_from_batch(spark, sf_dir):
     finally:
         done.set()
         t.join(timeout=10)
-    assert observed == {expect}, f"batch session saw drain conf: {observed}"
+    assert observed == {(expect, manager)}, f"batch session saw drain conf: {observed}"
     # Restore-to-entered-value on the child: the drain sized it down
     # (megabyte replay -> floor 4) and must put back what it observed.
     assert child.conf.get("spark.sql.shuffle.partitions") == expect
