@@ -7,20 +7,33 @@ Round 10 closed the class systematically: every ``sum``/``avg`` over a
 money/value expression must run in exact fixed point — snap each row to
 integer cents (``CAST(floor(x * 100 + 0.5) AS BIGINT)``; e4 for 2dp×2dp
 products), sum the integers (associative — order cannot matter), and
-divide/round once at the final projection.
+divide/round once at the final projection. Engine code builds those
+expressions with ``functions/money.py`` (``cents``, ``cents_floor``,
+``vol_e4``, ``money_sum`` and the SQL twins), the one module that spells
+the snap out.
 
-This module is the mechanical tripwire: it walks every registered
-oracle's SQL (Spark and oracle are written in pairs, so an unguarded
-oracle implies an unguarded plan — and a Spark-only regression fails the
-driver's value hash at the next gate) and flags any ``sum(``/``avg(``
-whose argument references a money column without the fixed-point guard.
-``tests/test_invariants.py::test_no_unguarded_money_sums`` fails on new
-hits; ``scripts/audit_float_sums.py`` prints the full report.
+This module holds two mechanical tripwires:
+
+- :func:`find_unguarded` walks every registered oracle's SQL (Spark and
+  oracle are written in pairs, so an unguarded oracle implies an
+  unguarded plan — and a Spark-only regression fails the driver's value
+  hash at the next gate) and flags any ``sum(``/``avg(`` whose argument
+  references a money column without the fixed-point guard;
+- :func:`find_handwritten_cents` walks the package's Python and flags a
+  cents snap, ``F.round(x * 100)`` or ``F.floor(x * 100 + 0.5)``, outside
+  ``functions/money.py``. A truncation such as ``F.floor(x * 100)`` is
+  not a snap and passes.
+
+``tests/test_invariants.py`` (``test_no_unguarded_money_sums``,
+``test_no_handwritten_cents``) fails on new hits;
+``scripts/audit_float_sums.py`` prints both reports.
 """
 
 from __future__ import annotations
 
+import ast
 import re
+from pathlib import Path
 
 # Double-typed fixed-decimal (2dp) columns across the fixture tables —
 # the columns whose double sums are NOT exact. Integer-valued doubles
@@ -92,3 +105,67 @@ JUSTIFIED: dict[str, str] = {
     # operator's docstring and pinned by its oracle-parity test.
     "q_grouped_map": "O(1) z-score rounded to 6dp; stddev has no exact form",
 }
+
+
+_PACKAGE = Path(__file__).resolve().parent
+_MONEY_MODULE = _PACKAGE / "functions" / "money.py"
+
+
+def engine_sources() -> list[Path]:
+    """The package's Python files that must not spell the cents snap:
+    all of them except ``functions/money.py``."""
+    return [p for p in sorted(_PACKAGE.rglob("*.py")) if p != _MONEY_MODULE]
+
+
+def _is_const(node: ast.AST, value) -> bool:
+    return (
+        isinstance(node, ast.Constant)
+        and type(node.value) is type(value)
+        and node.value == value
+    )
+
+
+def _is_times_100(node: ast.AST) -> bool:
+    """``node`` is ``x * 100`` (either operand order)."""
+    return (
+        isinstance(node, ast.BinOp)
+        and isinstance(node.op, ast.Mult)
+        and (_is_const(node.left, 100) or _is_const(node.right, 100))
+    )
+
+
+def _is_snap(call: ast.Call) -> bool:
+    """``call`` is ``F.round(x * 100, ...)`` or ``F.floor(x * 100 + 0.5)``."""
+    if not (
+        isinstance(call.func, ast.Attribute)
+        and isinstance(call.func.value, ast.Name)
+        and call.func.value.id == "F"
+        and call.args
+    ):
+        return False
+    arg = call.args[0]
+    if call.func.attr == "round":
+        return _is_times_100(arg)
+    if call.func.attr == "floor":
+        return (
+            isinstance(arg, ast.BinOp)
+            and isinstance(arg.op, ast.Add)
+            and any(
+                _is_times_100(a) and _is_const(b, 0.5)
+                for a, b in ((arg.left, arg.right), (arg.right, arg.left))
+            )
+        )
+    return False
+
+
+def find_handwritten_cents(paths) -> list[tuple[str, int, str]]:
+    """``(path, line, source)`` for every cents snap in ``paths`` —
+    ``F.round(x * 100)`` or ``F.floor(x * 100 + 0.5)`` written by hand
+    instead of through ``functions/money.py``."""
+    hits = []
+    for path in paths:
+        tree = ast.parse(Path(path).read_text(), filename=str(path))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and _is_snap(node):
+                hits.append((str(path), node.lineno, ast.unparse(node)))
+    return sorted(hits)

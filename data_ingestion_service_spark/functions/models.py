@@ -16,13 +16,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_ingestion_service_spark.functions import money
+
 # Quantile of the threshold model (discrete — the element at rank
 # ceil(q*n), never an interpolated blend).
 SCORE_QUANTILE = 0.99
-
-
-def value_cents() -> "F.Column":
-    return F.round(F.col("value") * 100).cast("bigint")
 
 
 def cents_histogram(events: DataFrame) -> DataFrame:
@@ -31,7 +29,7 @@ def cents_histogram(events: DataFrame) -> DataFrame:
     [cum-c+1, cum] under (cents, event_id), so an exact rank pick reads
     this domain-sized table instead of sorting the event stream."""
     cnt = (
-        events.select("event_type", value_cents().alias("cents"))
+        events.select("event_type", money.cents("value").alias("cents"))
         .groupBy("event_type", "cents")
         .agg(F.count(F.lit(1)).alias("c"))
     )

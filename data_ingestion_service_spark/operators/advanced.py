@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_ingestion_service_spark.catalog import load_table
+from data_ingestion_service_spark.functions import money
 from data_ingestion_service_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -108,7 +109,7 @@ GROUP BY o_custkey
 @register("q_minmax_by", oracle=_MINMAX_BY_ORACLE)
 def q_minmax_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
+    cents = money.cents("o_totalprice")
     return orders.groupBy("o_custkey").agg(
         F.max_by("o_orderkey", cents * 1000000000 + F.col("o_orderkey")).alias(
             "biggest_order"
@@ -170,9 +171,7 @@ def q_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     avg_per_cust = orders.groupBy(F.col("o_custkey").alias("ac_custkey")).agg(
         (
-            F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")).cast(
-                "double"
-            )
+            F.sum(money.cents_floor("o_totalprice")).cast("double")
             / 100
             / F.count(F.lit(1))
         ).alias("avg_price")

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_service_spark.catalog import load_table
+from data_ingestion_service_spark.functions import money
 from data_ingestion_service_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -39,11 +40,7 @@ def q_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         # Exact-cents sum (q19 lesson): per-type groups are 1M+ rows
         # at stress tiers; value is exactly 2dp by fixture construction.
-        F.round(
-            F.sum(F.round(F.col("value") * 100).cast("long")).cast("double")
-            / 100,
-            2,
-        ).alias("total_value"),
+        money.money_sum(money.cents("value")).alias("total_value"),
     )
 
 
@@ -118,9 +115,7 @@ def q_rollup_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # summation order diverges in the last ulp on rounding boundaries.
     return orders.rollup("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        F.round(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")) / 100, 2
-        ).alias("total_price"),
+        money.money_sum(money.cents("o_totalprice")).alias("total_price"),
     )
 
 
@@ -142,7 +137,7 @@ def q_cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return orders.cube("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.round(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
+            F.sum(money.cents("o_totalprice"))
             / 100
             / F.count(F.lit(1)),
             4,
@@ -172,11 +167,7 @@ def q_having(spark: SparkSession, sf_dir: str) -> DataFrame:
         # addition order is partition-dependent; integer cents are not.
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            F.round(
-                F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long"))
-                / 100,
-                2,
-            ).alias("spend"),
+            money.money_sum(money.cents_floor("o_totalprice")).alias("spend"),
         )
         .filter(F.col("n_orders") >= 15)
     )
@@ -381,7 +372,7 @@ GROUP BY 1
 @register("q_percentile_cont", oracle=_PCTL_CONT_ORACLE)
 def q_percentile_cont(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    cents = "cast(round(value * 100) as bigint)"
+    cents = money.cents_sql("value")
     return ev.groupBy("event_type").agg(
         F.expr(f"round(percentile({cents}, 0.5), 4)").alias("p50_cents"),
         F.expr(f"round(percentile({cents}, 0.9), 4)").alias("p90_cents"),
@@ -437,7 +428,7 @@ def q_equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     o = load_table(spark, sf_dir, "orders").select(
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+        money.cents("o_totalprice").alias("cents"),
         "o_orderkey",
     )
     w = Window.orderBy("cents", "o_orderkey")

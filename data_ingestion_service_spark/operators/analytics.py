@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_service_spark.catalog import load_table
+from data_ingestion_service_spark.functions import money
 from data_ingestion_service_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -131,7 +132,7 @@ def q_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     salted = li.withColumn("salt", F.pmod(F.xxhash64("l_orderkey", "l_linenumber"), F.lit(16)))
     partial = salted.groupBy("l_returnflag", "salt").agg(
         F.count(F.lit(1)).alias("pn"),
-        F.sum(F.round(F.col("l_extendedprice") * 100, 0).cast("bigint")).alias("pc"),
+        F.sum(money.cents("l_extendedprice")).alias("pc"),
     )
     return partial.groupBy("l_returnflag").agg(
         F.sum("pn").alias("n_items"), F.sum("pc").alias("price_cents")
@@ -594,7 +595,7 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.year("o_orderdate") * 12 + F.month("o_orderdate"))
         .cast("bigint")
         .alias("m"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+        money.cents("o_totalprice").alias("cents"),
     )
     cohort = o.groupBy("o_custkey").agg(F.min("m").alias("m0"))
     return (

@@ -10,7 +10,6 @@ tests/test_scale_posture.py).
 
 from __future__ import annotations
 
-import atexit
 import os
 import threading
 import weakref
@@ -19,7 +18,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_ingestion_service_spark.catalog import load_table
+from data_ingestion_service_spark.functions import money
 from data_ingestion_service_spark.registry import register
+from data_ingestion_service_spark.session import work_dir
 
 # ---------------------------------------------------------------------------
 # q_sql_frontend — the same engine through its SQL API (spark.sql over
@@ -315,12 +316,12 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("event_type") == "error", "D")
             .otherwise("U")
             .alias("op"),
-            F.round(F.col("value") * 100).cast("bigint").alias("new_cents"),
+            money.cents("value").alias("new_cents"),
         )
     )
     tgt = load_table(spark, sf_dir, "customer").select(
         "c_custkey",
-        F.round(F.col("c_acctbal") * 100).cast("bigint").alias("old_cents"),
+        money.cents("c_acctbal").alias("old_cents"),
     )
     merged = tgt.join(cdc, tgt.c_custkey == cdc.user_id, "full_outer").select(
         F.when(F.col("c_custkey").isNull() & (F.col("op") == "U"), "inserted")
@@ -380,9 +381,7 @@ def q_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frame DOUBLE sum's addition order is engine-implementation-defined
     # (segment tree vs sliding accumulator); integer sums are associative.
     daily = orders.groupBy("o_orderdate").agg(
-        F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")).alias(
-            "daily_cents"
-        )
+        F.sum(money.cents_floor("o_totalprice")).alias("daily_cents")
     ).withColumn(
         "epoch_day",
         F.datediff(
@@ -466,9 +465,7 @@ def _partitioned_orders(spark: SparkSession, sf_dir: str) -> str:
     """Write (once per sf_dir per process) orders partitioned by month."""
     out = _DPP_CACHE.get(sf_dir)
     if out is None:
-        import tempfile
-
-        out = tempfile.mkdtemp(prefix="ingest_dpp_")
+        out = work_dir("dpp_")
         (
             load_table(spark, sf_dir, "orders")
             .withColumn("order_month", F.date_format("o_orderdate", "yyyy-MM"))
@@ -503,9 +500,7 @@ def q_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("order_month")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-            .cast("long")
-            .alias("price_cents"),
+            F.sum(money.cents("o_totalprice")).cast("long").alias("price_cents"),
         )
     )
 
@@ -637,7 +632,7 @@ WHERE o.o_orderkey IS NULL OR n.o_orderkey IS NULL
 @register("q_snapshot_diff", oracle=_SNAPSHOT_DIFF_ORACLE)
 def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
+    cents = money.cents("o_totalprice")
     old_snap = orders.select("o_orderkey", cents.alias("price_cents"))
     new_snap = (
         orders.filter(F.col("o_orderkey") % 97 != 0)
@@ -825,9 +820,7 @@ def q_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = observed.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-        .cast("long")
-        .alias("total_cents"),
+        F.sum(money.cents("o_totalprice")).cast("long").alias("total_cents"),
     )
     # Materialize once — the observation is populated by this job.
     rows = agg.collect()
@@ -1035,9 +1028,9 @@ def q_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_suppkey",
-        F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100)
-        .cast("bigint")
-        .alias("rev_cents"),
+        money.cents(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+            "rev_cents"
+        ),
         _bloom_h("l_suppkey", 1).alias("h1"),
         _bloom_h("l_suppkey", 9).alias("h2"),
     )
@@ -1315,24 +1308,13 @@ FROM packed GROUP BY 1
 
 _COMPACTION_STAGE: dict[tuple, str] = {}
 _COMPACTION_LOCK = threading.Lock()
-_COMPACTION_DIRS: list[str] = []
-
-
-def _reap_compaction_dirs() -> None:
-    import shutil
-
-    while _COMPACTION_DIRS:
-        shutil.rmtree(_COMPACTION_DIRS.pop(), ignore_errors=True)
-
-
-atexit.register(_reap_compaction_dirs)
 
 
 def _bucket_files(spark: SparkSession, sf_dir: str) -> str:
     """Write (once per process per fixture vintage) orders as 40
     hash-bucket files. Keyed by the orders fixture's (path, mtime, size)
     so an in-process regeneration gets a fresh stage instead of a stale
-    file layout, and staged dirs are reaped at exit (ADVICE r8)."""
+    file layout; the staged dirs live in ``session.work_dir``'s root."""
     src = f"{sf_dir.rstrip('/')}/orders.parquet"
     try:
         st = os.stat(src)
@@ -1342,10 +1324,7 @@ def _bucket_files(spark: SparkSession, sf_dir: str) -> str:
     with _COMPACTION_LOCK:
         out = _COMPACTION_STAGE.get(key)
         if out is None:
-            import tempfile
-
-            out = tempfile.mkdtemp(prefix="ingest_compactplan_")
-            _COMPACTION_DIRS.append(out)
+            out = work_dir("compactplan_")
             (
                 load_table(spark, sf_dir, "orders")
                 .select("o_orderkey", (F.col("o_orderkey") % 40).alias("file_key"))

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_ingestion_service_spark.catalog import load_table
+from data_ingestion_service_spark.functions import money
 from data_ingestion_service_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -74,14 +75,8 @@ def q_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             # Exact cents sum (l_extendedprice is 2dp-exact): plain double
             # summation diverged from DuckDB in the last ulp on a rounding
             # boundary at the sf1 stress tier (6M rows).
-            F.round(
-                F.sum(
-                    F.round(F.coalesce(F.col("l_extendedprice"), F.lit(0.0)) * 100).cast(
-                        "long"
-                    )
-                )
-                / 100,
-                2,
+            money.money_sum(
+                money.cents(F.coalesce(F.col("l_extendedprice"), F.lit(0.0)))
             ).alias("total_price"),
         )
     )
@@ -121,12 +116,7 @@ def q_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_items"),
             # Exact-cents sum (q19 lesson): ~50 size bands over matched
             # lineitem are 100k+-row groups at stress tiers.
-            F.round(
-                F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
-                .cast("double")
-                / 100,
-                2,
-            ).alias("band_price"),
+            money.money_sum(money.cents("l_extendedprice")).alias("band_price"),
         )
     )
 
@@ -222,9 +212,7 @@ def q_skew_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_items"),
         F.sum(
-            F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100, 0).cast(
-                "bigint"
-            )
+            money.cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
         ).alias("revenue_cents"),
     )
 
@@ -285,9 +273,7 @@ def q_null_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-            .cast("long")
-            .alias("total_cents"),
+            F.sum(money.cents("o_totalprice")).cast("long").alias("total_cents"),
         )
     )
 

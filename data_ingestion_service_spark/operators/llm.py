@@ -112,9 +112,9 @@ def doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Deliberately NOT distinct'd: within-doc duplicate shingles are <0.2%
     of rows here, so a .distinct() is a full shuffle that removes almost
-    nothing — and every consumer can dedup inside its own aggregation
-    for free (MIN is duplicate-blind; posting lists use collect_set;
-    sizes use countDistinct). Skipping it keeps the persist a pipelined
+    nothing. Consumers must therefore be duplicate-blind (MIN) or dedup
+    inside their own aggregation, where it is free (posting lists use
+    collect_set; sizes use countDistinct). Skipping it keeps the persist a pipelined
     map-only pass (measured 2.3× faster cold at sf0.1).
 
     The docs scan is repartitioned to the cluster's parallelism first:

@@ -61,15 +61,6 @@ sh AS MATERIALIZED (
 """
 
 
-def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Shared session-persisted RAW shingle rows (built 32-way, not
-    # distinct'd; see llm.doc_shingles) — one build serves minhash,
-    # fingerprint, near-dup and dup-clusters. Consumers must be
-    # duplicate-blind (MIN) or dedup in their own agg (collect_set /
-    # countDistinct).
-    return doc_shingles(spark, sf_dir)
-
-
 # ---------------------------------------------------------------------------
 # Shared MinHash signature store (r5 verdict item 4): the 16-minhash
 # signature table and the 8-band LSH index are each session-persisted
@@ -120,7 +111,7 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     join. At 100 TB the shuffle volume drops from 16×|shingles| to
     |docs|×16 hashes. Built once per (session, sf); every signature
     consumer probes this persisted copy."""
-    sh = _doc_shingles(spark, sf_dir)
+    sh = doc_shingles(spark, sf_dir)
     return session_persisted(
         spark,
         ("minhash_sigs", sf_dir),
@@ -226,7 +217,7 @@ JOIN (
 @register("q_fingerprint", oracle=_FINGERPRINT_ORACLE)
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    sh = _doc_shingles(spark, sf_dir)
+    sh = doc_shingles(spark, sf_dir)
     agg = sh.groupBy("doc_id").agg(
         # MIN is duplicate-blind; the count must dedup because
         # doc_shingles carries raw (non-distinct'd) rows.

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_ingestion_service_spark.catalog import load_table
-from data_ingestion_service_spark.functions import models
+from data_ingestion_service_spark.functions import models, money
 from data_ingestion_service_spark.functions.text import shingle_rows
 from data_ingestion_service_spark.registry import register
 from data_ingestion_service_spark.session import call_persisted
@@ -303,9 +303,7 @@ def q_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_custkey", F.col("n_regionkey").alias("rk"))
         .agg(
             (
-                F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).cast(
-                    "bigint"
-                )
+                F.sum(money.cents("o_totalprice")).cast("bigint")
                 / 100
             )
             .cast("bigint")
@@ -393,7 +391,7 @@ def q_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(F.date_trunc("day", "o_orderdate").alias("day")).agg(
         (
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).cast("bigint")
+            F.sum(money.cents("o_totalprice")).cast("bigint")
             / 100000
         )
         .cast("bigint")
@@ -1113,7 +1111,7 @@ def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     priced = part.select(
         "p_partkey",
         "p_name",
-        F.round(F.col("p_retailprice") * 100).cast("bigint").alias("price_cents"),
+        money.cents("p_retailprice").alias("price_cents"),
         F.col("p_size").cast("bigint").alias("p_size"),
     )
     w = (
@@ -1259,7 +1257,7 @@ def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = ev.select(
         "user_id",
         F.unix_timestamp("ts").cast("bigint").alias("t"),
-        F.round(F.col("value") * 100).cast("bigint").alias("v"),
+        money.cents("value").alias("v"),
         "event_id",
     )
     w = Window.partitionBy("user_id").orderBy("t", "event_id")
@@ -2084,7 +2082,7 @@ def q_weighted_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = li.select(
         F.col("l_returnflag").alias("flag"),
         F.year("l_shipdate").cast("int").alias("yr"),
-        F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents"),
+        money.cents("l_extendedprice").alias("cents"),
         F.round("l_quantity").cast("bigint").alias("w"),
         "l_orderkey",
         "l_linenumber",
@@ -2185,7 +2183,7 @@ FROM sq CROSS JOIN eq
 def q_sample_quantile_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+        money.cents("o_totalprice").alias("cents"),
         F.md5(F.col("o_orderkey").cast("string").cast("binary")).alias("h"),
     )
     samp = (

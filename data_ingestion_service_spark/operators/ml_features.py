@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_ingestion_service_spark.catalog import load_table
+from data_ingestion_service_spark.functions import money
 from data_ingestion_service_spark.functions.vector import as_double, cosine
 from data_ingestion_service_spark.registry import register
 from data_ingestion_service_spark.session import call_persisted, session_persisted
@@ -82,9 +83,7 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_cust = orders.groupBy(F.col("o_custkey").alias("ck")).agg(
         F.max("o_orderdate").alias("last_order"),
         F.count(F.lit(1)).alias("frequency"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("monetary_cents"),
+        F.sum(money.cents("o_totalprice")).cast("bigint").alias("monetary_cents"),
     )
     # The corpus max date is a 1-row aggregate broadcast into the scan —
     # not a driver-side collect.
@@ -170,7 +169,7 @@ def q_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
-        F.round(F.col("value") * 100).cast("bigint").alias("v_cents"),
+        money.cents("value").alias("v_cents"),
     )
     stats = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -345,7 +344,7 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "orders")
         .select(
             "o_orderkey",
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+            money.cents("o_totalprice").alias("cents"),
         )
         .repartition(par)
     )
@@ -461,9 +460,7 @@ def q_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = events.groupBy(
         F.date_trunc("day", "ts").cast("timestamp_ntz").alias("day")
     ).agg(
-        F.sum(F.round(F.col("value") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("cents")
+        F.sum(money.cents("value")).cast("bigint").alias("cents")
     )
     w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
     wall = Window.orderBy("day").rowsBetween(
@@ -1897,7 +1894,7 @@ GROUP BY event_type
 @register("q_trimmed_mean", oracle=_TRIMMED_ORACLE)
 def q_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("bigint")
+    cents = money.cents("value")
     w = Window.partitionBy("event_type").orderBy(cents.asc(), F.col("event_id").asc())
     wn = Window.partitionBy("event_type")
     ranked = events.select(

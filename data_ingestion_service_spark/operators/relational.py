@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_service_spark.catalog import load_table
+from data_ingestion_service_spark.functions import money
 from data_ingestion_service_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -60,7 +61,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (bit-identical across engines), without Spark round()'s per-row
     # BigDecimal cost (~2x q1 wall at sf0.1). sum/avg of l_quantity stay
     # raw — the column is integral, so its double sum is exact anyway.
-    cents = F.sum(F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long"))
+    cents = F.sum(money.cents_floor("l_extendedprice"))
     disc_e4 = F.sum(F.floor(disc_price * 10000 + 0.5).cast("long"))
     charge_e4 = F.sum(
         F.floor(disc_price * (1 + F.col("l_tax")) * 10000 + 0.5).cast("long")
@@ -355,7 +356,7 @@ def q_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(
                     F.when(
                         F.col("o_orderstatus") == "F",
-                        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long"),
+                        money.cents_floor("o_totalprice"),
                     )
                 ).cast("double")
                 / 100

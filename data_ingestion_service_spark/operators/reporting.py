@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_ingestion_service_spark.catalog import load_table
-from data_ingestion_service_spark.functions import alerts
+from data_ingestion_service_spark.functions import alerts, money
 from data_ingestion_service_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -81,7 +81,7 @@ GROUP BY decile, total_cents
 def q_decile_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     spend = orders.groupBy("o_custkey").agg(
-        F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint")).alias("cents")
+        F.sum(money.cents("o_totalprice")).alias("cents")
     )
     ranked = spend.withColumn(
         "decile", F.ntile(10).over(Window.orderBy(F.desc("cents"), F.asc("o_custkey")))
@@ -253,7 +253,7 @@ def q_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.round(F.col("value") * 100, 0).cast("bigint")).alias("cents"),
+            F.sum(money.cents("value")).alias("cents"),
         )
     )
     w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
@@ -356,7 +356,7 @@ def q_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.round(F.col("value") * 100, 0).cast("bigint")).alias("cents"),
+            F.sum(money.cents("value")).alias("cents"),
         )
     )
     g = (
@@ -424,7 +424,7 @@ def q_weekday_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         orders.select(
             weekday.alias("weekday"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("c"),
+            money.cents("o_totalprice").alias("c"),
         )
         .groupBy("weekday")
         .agg(
@@ -499,7 +499,7 @@ def q_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     hourly = ev.groupBy(F.date_trunc("hour", "ts").alias("h")).agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
+        F.sum(money.cents("value")).alias("cents"),
     )
     daily = hourly.groupBy(F.date_trunc("day", "h").alias("d")).agg(
         F.sum("n").alias("n"), F.sum("cents").alias("cents")
@@ -542,7 +542,7 @@ def q_ship_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.datediff(
                 F.col("l_shipdate").cast("date"), F.col("o_orderdate").cast("date")
             ).alias("latency_days"),
-            F.round(F.col("l_extendedprice") * 100).cast("long").alias("c"),
+            money.cents("l_extendedprice").alias("c"),
         )
         .groupBy("latency_days")
         .agg(
@@ -925,7 +925,7 @@ GROUP BY digit, n_total
 @register("q_benford_audit", oracle=_BENFORD_ORACLE)
 def q_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
+    cents = money.cents("o_totalprice")
     digits = orders.select(
         F.substring(cents.cast("string"), 1, 1).cast("bigint").alias("digit")
     )

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_service_spark.catalog import load_table
+from data_ingestion_service_spark.functions import money
 from data_ingestion_service_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -246,7 +247,7 @@ FROM lineitem
 def q_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     quotient = F.expr(
-        "try_divide(cast(round(l_extendedprice * 100) as bigint) * 12L, "
+        f"try_divide({money.cents_sql('l_extendedprice')} * 12L, "
         "cast(l_linenumber - 3 as bigint))"
     )
     castable = F.expr(

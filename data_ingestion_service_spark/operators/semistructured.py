@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from data_ingestion_service_spark.catalog import load_table
+from data_ingestion_service_spark.functions import money
 from data_ingestion_service_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -116,9 +117,7 @@ def q_date_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Exact-cents daily revenue (r10 float-sum audit).
     daily = orders.groupBy(F.col("o_orderdate").alias("d")).agg(
         F.count(F.lit(1)).alias("n"),
-        F.round(
-            F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")) / 100, 2
-        ).alias("rev"),
+        money.money_sum(money.cents_floor("o_totalprice")).alias("rev"),
     )
     return spine.join(daily, spine.day == daily.d, "left").select(
         "day",

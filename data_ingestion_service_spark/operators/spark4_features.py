@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_service_spark.catalog import load_table
+from data_ingestion_service_spark.functions import money
 from data_ingestion_service_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -101,9 +102,7 @@ def q_collated_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_name")
         .agg(
             F.count(F.lit(1)).alias("n_customers"),
-            F.sum(F.round(F.col("c_acctbal") * 100).cast("long"))
-            .cast("long")
-            .alias("acctbal_cents"),
+            F.sum(money.cents("c_acctbal")).cast("long").alias("acctbal_cents"),
         )
     )
 

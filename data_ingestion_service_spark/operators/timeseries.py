@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_ingestion_service_spark.catalog import load_table
+from data_ingestion_service_spark.functions import money
 from data_ingestion_service_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -81,9 +82,7 @@ FROM feat
 def q_lag_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("revenue_cents")
+        F.sum(money.cents("o_totalprice")).cast("bigint").alias("revenue_cents")
     )
     # Calendar-bounded single window (see module docstring).
     w = Window.orderBy("d")
@@ -161,7 +160,7 @@ FROM cell
 @register("q_seasonal_dow", oracle=_SEASONAL_DOW_ORACLE)
 def q_seasonal_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("bigint")
+    cents = money.cents("value")
     e = ev.select(
         "event_type",
         (
@@ -232,7 +231,7 @@ def q_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(-4, 0)
     )
     arr = F.array_sort(
-        F.collect_list(F.round(F.col("value") * 100).cast("bigint")).over(w)
+        F.collect_list(money.cents("value")).over(w)
     )
     return ev.select(
         "event_id",
@@ -302,8 +301,7 @@ def q_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(F.to_date("o_orderdate").alias("d")).agg(
         F.expr(
-            "cast(sum(cast(round(o_totalprice * 100) as bigint))"
-            " div 100000 as bigint)"
+            f"cast(sum({money.cents_sql('o_totalprice')}) div 100000 as bigint)"
         ).alias("x"),
         F.count(F.lit(1)).cast("bigint").alias("y"),
     )
@@ -409,7 +407,7 @@ def q_seasonal_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.datediff(F.to_date("ts"), F.lit("1970-01-01").cast("date")).alias(
             "epoch_day"
         ),
-        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
+        money.cents("value").alias("cents"),
     ).withColumn("dow", (F.col("epoch_day") + 3) % 7)
     cell = e.groupBy("event_type", "dow").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),

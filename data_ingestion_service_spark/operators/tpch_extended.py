@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_service_spark.catalog import load_table
+from data_ingestion_service_spark.functions import money
 from data_ingestion_service_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -127,7 +128,7 @@ def q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("l_quantity") < F.col("qty_threshold"))
         .agg(
             F.round(
-                F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
+                F.sum(money.cents("l_extendedprice"))
                 .cast("double")
                 / 100
                 / 7.0,
@@ -234,11 +235,8 @@ def q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
             & F.col("l_quantity").between(20, 50)
         )
     )
-    e4 = F.round(F.col("l_extendedprice") * 100).cast("bigint") * F.round(
-        (1 - F.col("l_discount")) * 100
-    ).cast("bigint")
     return joined.filter(alt).agg(
-        F.round(F.sum(e4).cast("double") / 10000, 2).alias("revenue")
+        F.round(F.sum(money.vol_e4()).cast("double") / 10000, 2).alias("revenue")
     )
 
 
@@ -270,7 +268,7 @@ GROUP BY c_nationkey
 def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").select("o_custkey")
-    cents = F.floor(F.col("c_acctbal") * 100 + 0.5).cast("long")
+    cents = money.cents_floor("c_acctbal")
     avg_bal = cust.filter(F.col("c_acctbal") > 0.0).agg(
         (F.sum(cents).cast("double") / 100 / F.count(F.lit(1))).alias("avg_bal")
     )
@@ -281,6 +279,6 @@ def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_nationkey")
         .agg(
             F.count(F.lit(1)).alias("n_customers"),
-            F.round(F.sum(cents) / 100, 2).alias("total_bal"),
+            money.money_sum(cents).alias("total_bal"),
         )
     )

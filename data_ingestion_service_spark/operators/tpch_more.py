@@ -5,9 +5,9 @@ cost/wait predicates are re-expressed on the columns that exist; each
 docstring states the adaptation).
 
 Numeric discipline: revenue terms use exact integer scaling —
-``round(price*100)::BIGINT * round((1-discount)*100)::BIGINT`` is an
-exact e-4 fixed-point product, so sums are integral and cross-engine
-hash-stable with no float-rounding boundary risk (SURVEY.md §5).
+``money.vol_e4`` (price cents × (1-discount) cents) is an exact e-4
+fixed-point product, so sums are integral and cross-engine hash-stable
+with no float-rounding boundary risk (SURVEY.md §5).
 
 Scale notes: every dimension join is broadcast; the only shuffles are
 the fact-side aggregations. The Q21 exists/not-exists pair compiles to
@@ -21,20 +21,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_ingestion_service_spark.catalog import load_table
+from data_ingestion_service_spark.functions import money
 from data_ingestion_service_spark.registry import register
-
-
-def _vol_e4(price: str = "l_extendedprice", disc: str = "l_discount"):
-    """Exact e-4 fixed-point revenue term: price cents × discount pct."""
-    return F.round(F.col(price) * 100, 0).cast("bigint") * F.round(
-        (F.lit(1) - F.col(disc)) * 100, 0
-    ).cast("bigint")
-
-
-_VOL_E4_SQL = (
-    "CAST(round(l_extendedprice * 100, 0) AS BIGINT)"
-    " * CAST(round((1 - l_discount) * 100, 0) AS BIGINT)"
-)
 
 
 # ---------------------------------------------------------------------------
@@ -94,9 +82,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_partkey").alias("partkey"), F.col("l_suppkey").alias("suppkey")
         )
         .agg(
-            F.min(F.round(F.col("l_extendedprice") * 100, 0).cast("bigint")).alias(
-                "cost_cents"
-            )
+            F.min(money.cents("l_extendedprice")).alias("cost_cents")
         )
     )
     m = cost.withColumn(
@@ -134,7 +120,7 @@ SELECT supp_nation, cust_nation, l_year,
 FROM (
   SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
          year(l_shipdate) AS l_year,
-         {_VOL_E4_SQL} AS volume_e4
+         {money.VOL_E4_SQL} AS volume_e4
   FROM supplier
   JOIN lineitem ON s_suppkey = l_suppkey
   JOIN orders   ON o_orderkey = l_orderkey
@@ -180,7 +166,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return joined.groupBy(
         "supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year")
-    ).agg(F.sum(_vol_e4()).alias("revenue_e4"))
+    ).agg(F.sum(money.vol_e4()).alias("revenue_e4"))
 
 
 # ---------------------------------------------------------------------------
@@ -196,7 +182,7 @@ SELECT o_year,
              / sum(volume_e4)::DOUBLE, 6) AS mkt_share
 FROM (
   SELECT year(o_orderdate) AS o_year,
-         {_VOL_E4_SQL} AS volume_e4,
+         {money.VOL_E4_SQL} AS volume_e4,
          n2.n_name AS nation
   FROM part
   JOIN lineitem ON p_partkey = l_partkey
@@ -248,7 +234,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n2), F.col("s_nationkey") == F.col("n2_key"))
         .select(
             F.year("o_orderdate").alias("o_year"),
-            _vol_e4().alias("volume_e4"),
+            money.vol_e4().alias("volume_e4"),
             "nation",
         )
     )
@@ -273,7 +259,7 @@ _Q9_ORACLE = f"""
 SELECT nation, o_year, CAST(sum(volume_e4) AS BIGINT) AS profit_e4
 FROM (
   SELECT n_name AS nation, year(o_orderdate) AS o_year,
-         {_VOL_E4_SQL} AS volume_e4
+         {money.VOL_E4_SQL} AS volume_e4
   FROM part
   JOIN lineitem ON p_partkey = l_partkey
   JOIN supplier ON s_suppkey = l_suppkey
@@ -301,7 +287,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
         .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy(F.col("n_name").alias("nation"), F.year("o_orderdate").alias("o_year"))
-        .agg(F.sum(_vol_e4()).alias("profit_e4"))
+        .agg(F.sum(money.vol_e4()).alias("profit_e4"))
     )
 
 
@@ -343,9 +329,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy(F.col("l_partkey").alias("partkey"))
         .agg(
-            F.sum(F.round(F.col("l_extendedprice") * 100, 0).cast("bigint")).alias(
-                "value_cents"
-            )
+            F.sum(money.cents("l_extendedprice")).alias("value_cents")
         )
     )
     total = pv.agg(
@@ -400,7 +384,7 @@ def q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q15_ORACLE = f"""
 WITH rev AS (
-  SELECT l_suppkey AS suppkey, CAST(sum({_VOL_E4_SQL}) AS BIGINT) AS total_e4
+  SELECT l_suppkey AS suppkey, CAST(sum({money.VOL_E4_SQL}) AS BIGINT) AS total_e4
   FROM lineitem
   WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
     AND l_shipdate <  TIMESTAMP '1996-04-01 00:00:00'
@@ -422,7 +406,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_shipdate") < F.lit("1996-04-01 00:00:00").cast("timestamp_ntz"))
         )
         .groupBy(F.col("l_suppkey").alias("suppkey"))
-        .agg(F.sum(_vol_e4()).alias("total_e4"))
+        .agg(F.sum(money.vol_e4()).alias("total_e4"))
     )
     max_rev = rev.agg(F.max("total_e4").alias("max_e4"))
     return (

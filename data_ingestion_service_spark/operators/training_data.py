@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_ingestion_service_spark.catalog import load_table
+from data_ingestion_service_spark.functions import money
 from data_ingestion_service_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -87,7 +88,7 @@ def q_churn_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.unix_timestamp("ts").cast("bigint").alias("t_s"),
         "event_type",
-        F.round(F.col("value") * 100).cast("bigint").alias("v_cents"),
+        money.cents("value").alias("v_cents"),
     )
     cutoff = ev.agg(
         (F.max("t_s") - F.lit(_CHURN_HORIZON_S)).alias("cut_s")
@@ -447,7 +448,7 @@ def q_temporal_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev0 = events.select(
         "user_id",
         F.unix_timestamp("ts").cast("bigint").alias("t_s"),
-        F.round(F.col("value") * 100).cast("bigint").alias("v_cents"),
+        money.cents("value").alias("v_cents"),
     )
     bounds = ev0.agg(
         F.min("t_s").alias("mn"), F.max("t_s").alias("mx")
@@ -620,7 +621,7 @@ def q_pit_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_custkey",
         F.to_date("o_orderdate").alias("d"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+        money.cents("o_totalprice").alias("cents"),
     )
     w = Window.partitionBy("o_custkey").orderBy("d", "o_orderkey")
     prior = w.rowsBetween(Window.unboundedPreceding, -1)

@@ -18,6 +18,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
 from data_ingestion_service_spark.catalog import load_table
+from data_ingestion_service_spark.functions import money
 from data_ingestion_service_spark.registry import register
 
 
@@ -106,7 +107,7 @@ def q_udtf_installments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey") % 50 == 0
     ).select(
         "o_orderkey",
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
+        money.cents("o_totalprice").alias("cents"),
     ).createOrReplaceTempView("udtf_orders_subset")
     spark.udtf.register("installments_udtf", _make_installments_udtf())
     return spark.sql(
@@ -196,7 +197,7 @@ def q_pandas_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     wavg = _make_wavg_udaf()
     w = (F.col("o_custkey") % 10 + 1).cast("long")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
+    cents = money.cents("o_totalprice")
     return (
         orders.select("o_orderpriority", w.alias("w"), cents.alias("cents"))
         .groupBy("o_orderpriority")

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_ingestion_service_spark.catalog import load_table
+from data_ingestion_service_spark.functions import money
 from data_ingestion_service_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -53,11 +54,7 @@ def q_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Exact-cents total (r10 float-sum audit): rank order must not
         # depend on a double sum's partition-dependent last ulp.
         .agg(
-            F.round(
-                F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long"))
-                / 100,
-                2,
-            ).alias("total")
+            money.money_sum(money.cents_floor("o_totalprice")).alias("total")
         )
     )
     w = Window.partitionBy("c_mktsegment").orderBy(F.desc("total"), F.asc("c_custkey"))
@@ -97,9 +94,7 @@ def q_running_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the integer sum is associative, so the frame evaluation order
     # cannot matter. Divide/round once at projection.
     daily = orders.groupBy("o_orderdate").agg(
-        F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")).alias(
-            "daily_cents"
-        )
+        F.sum(money.cents_floor("o_totalprice")).alias("daily_cents")
     )
     w = Window.orderBy("o_orderdate").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return daily.select(
@@ -133,9 +128,7 @@ def q_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Deltas computed in integer cents (r10 float-sum audit; see
     # q_running_revenue) — division/rounding only at projection.
     daily = orders.groupBy("o_orderdate").agg(
-        F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")).alias(
-            "daily_cents"
-        )
+        F.sum(money.cents_floor("o_totalprice")).alias("daily_cents")
     )
     w = Window.orderBy("o_orderdate")
     return daily.select(
@@ -240,9 +233,7 @@ def q_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_sampled"),
             F.sum(F.round(F.col("l_quantity")).cast("bigint")).alias("sum_qty"),
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("bigint")).alias(
-                "price_cents"
-            ),
+            F.sum(money.cents("l_extendedprice")).alias("price_cents"),
         )
     )
 

@@ -41,7 +41,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from data_ingestion_service_spark.session import ensure_session_confs
+from data_ingestion_service_spark.functions import money
+from data_ingestion_service_spark.session import ensure_session_confs, work_dir
 
 Transform = Callable[[DataFrame], DataFrame]
 
@@ -428,11 +429,9 @@ GROUP BY event_type
 
 @register("q_pipeline_api", oracle=_PIPELINE_ORACLE)
 def q_pipeline_api(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import functions as F
 
-    out = tempfile.mkdtemp(prefix="ingest_pipeline_")
+    out = work_dir("pipeline_")
     p = (
         Pipeline()
         .read_parquet(f"{sf_dir.rstrip('/')}/events.parquet")
@@ -473,11 +472,9 @@ def q_pipeline_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     quarantined to a side parquet sink, clean rows land in the main
     sink, and the result reconciles both against the source — proving
     the gate neither drops nor duplicates anything."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
-    out = tempfile.mkdtemp(prefix="ingest_expect_")
+    out = work_dir("expect_")
     p = (
         Pipeline()
         .read_parquet(f"{sf_dir.rstrip('/')}/customer.parquet")
@@ -540,14 +537,11 @@ GROUP BY event_type
 
 @register("q_pipeline_stream_parity", oracle=_PIPELINE_PARITY_ORACLE)
 def q_pipeline_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from .streaming.stream_queries import _copy_fixture
 
-    work = tempfile.mkdtemp(prefix="ingest_parity_")
+    work = work_dir("parity_")
     src_file = f"{sf_dir.rstrip('/')}/events.parquet"
     os.makedirs(f"{work}/replay")
     for i in range(2):  # duplicate delivery: what .dedupe() must undo
@@ -568,9 +562,7 @@ def q_pipeline_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     def agg(df: DataFrame, n: str, c: str) -> DataFrame:
         return df.groupBy("event_type").agg(
             F.count(F.lit(1)).alias(n),
-            F.sum(F.round(F.col("value") * 100).cast("long"))
-            .cast("long")
-            .alias(c),
+            F.sum(money.cents("value")).cast("long").alias(c),
         )
 
     b = agg(batch, "n_b", "cents_b")

@@ -18,7 +18,11 @@ with cluster size; nothing below hard-codes local-mode assumptions.
 
 from __future__ import annotations
 
+import atexit
+import itertools
 import os
+import shutil
+import tempfile
 import threading
 import weakref
 
@@ -192,6 +196,34 @@ def session_persisted(spark: SparkSession, key, build):
             if df is None:
                 df = per_session[key] = build().persist()
     return df
+
+
+# Every scratch directory the engine writes (stream replay sources and
+# checkpoints, sink and round-trip outputs, staged layouts) lives under one
+# per-process root, made on first use and removed at interpreter exit.
+# The exit handler acts only in the process that made the root: a forked
+# child inherits the path but must not delete its parent's files.
+_WORK_LOCK = threading.Lock()
+_WORK_ROOT: str | None = None
+_WORK_SEQ = itertools.count()
+
+
+def work_dir(prefix: str) -> str:
+    """Create and return a new empty directory ``<root>/<prefix><n>``. It
+    lives until this process exits (or its caller deletes it sooner)."""
+    global _WORK_ROOT
+    with _WORK_LOCK:
+        if _WORK_ROOT is None:
+            _WORK_ROOT = tempfile.mkdtemp(prefix=f"ingest_{os.getpid()}_")
+            atexit.register(_remove_work_root, os.getpid(), _WORK_ROOT)
+        path = os.path.join(_WORK_ROOT, f"{prefix}{next(_WORK_SEQ)}")
+    os.mkdir(path)
+    return path
+
+
+def _remove_work_root(pid: int, root: str) -> None:
+    if os.getpid() == pid:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def ensure_session_confs(spark: SparkSession) -> SparkSession:

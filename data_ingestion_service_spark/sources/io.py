@@ -13,13 +13,13 @@ nothing outside /tmp is touched.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_service_spark.catalog import load_table
+from data_ingestion_service_spark.functions import money
 from data_ingestion_service_spark.registry import register
+from data_ingestion_service_spark.session import work_dir
 
 _CSV_ORACLE = """
 SELECT l_returnflag, count(*) AS n,
@@ -35,7 +35,7 @@ def src_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_quantity", "l_extendedprice"
     )
-    out = tempfile.mkdtemp(prefix="ingest_csv_")
+    out = work_dir("csv_")
     li.write.mode("overwrite").option("header", "true").csv(out)
     back = (
         spark.read.schema("l_returnflag string, l_quantity double, l_extendedprice double")
@@ -48,12 +48,8 @@ def src_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lossless (shortest-round-trip doubles re-parse bit-identically).
     return back.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
-        F.round(F.sum(F.round(F.col("l_quantity") * 100).cast("long")) / 100, 2).alias(
-            "total_qty"
-        ),
-        F.round(
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")) / 100, 2
-        ).alias("total_price"),
+        money.money_sum(money.cents("l_quantity")).alias("total_qty"),
+        money.money_sum(money.cents("l_extendedprice")).alias("total_price"),
     )
 
 
@@ -69,16 +65,14 @@ GROUP BY event_type
 @register("src_json_lines", oracle=_JSONL_ORACLE)
 def src_json_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select("event_type", "value", "user_id")
-    out = tempfile.mkdtemp(prefix="ingest_jsonl_")
+    out = work_dir("jsonl_")
     ev.write.mode("overwrite").json(out)
     back = spark.read.schema("event_type string, value double, user_id bigint").json(out)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         # Exact-cents sum (r10 float-sum audit): value is 2dp and JSON
         # round-trips doubles exactly, so the snap is lossless.
-        F.round(
-            F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long")) / 100, 2
-        ).alias("total_value"),
+        money.money_sum(money.cents_floor("value")).alias("total_value"),
         F.countDistinct("user_id").alias("n_users"),
     )
 
@@ -98,7 +92,7 @@ def src_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingestion (the most common ingestion-service input at scale).
     """
     li = load_table(spark, sf_dir, "lineitem")
-    out = tempfile.mkdtemp(prefix="ingest_text_")
+    out = work_dir("text_")
     li.select(
         F.concat_ws("|", F.col("l_returnflag"), F.col("l_orderkey").cast("string")).alias(
             "value"
@@ -131,16 +125,14 @@ def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderstatus", "o_totalprice"
     )
-    out = tempfile.mkdtemp(prefix="ingest_orc_")
+    out = work_dir("orc_")
     orders.write.mode("overwrite").orc(out)
     back = spark.read.orc(out)
     # Exact cents sum — same last-ulp divergence class as the partitioned
     # sink, caught by the full-registry sf5 run (2.5M-row groups).
     return back.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n"),
-        F.round(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")) / 100, 2
-        ).alias("total_price"),
+        money.money_sum(money.cents("o_totalprice")).alias("total_price"),
     )
 
 
@@ -159,7 +151,7 @@ def src_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     column), read with mergeSchema — older rows surface NULLs for the
     added column. The standard widening path for an evolving feed."""
     ev = load_table(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="ingest_evo_")
+    out = work_dir("evo_")
     gen1 = ev.filter(F.col("event_id") % 2 == 0).select("event_id", "value")
     gen2 = ev.filter(F.col("event_id") % 2 == 1).select(
         "event_id", "value", "event_type"
@@ -171,9 +163,7 @@ def src_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.count("event_type").alias("n_typed"),
         # Exact-cents sum (r10 float-sum audit).
-        F.round(
-            F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long")) / 100, 2
-        ).alias("total_value"),
+        money.money_sum(money.cents_floor("value")).alias("total_value"),
     )
 
 
@@ -198,7 +188,7 @@ def sink_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     count — the maintenance job every streaming ingest needs (thousands
     of micro-batch files → a few scan-efficient ones), then re-read."""
     li = load_table(spark, sf_dir, "lineitem").select("l_linestatus", "l_quantity")
-    out = tempfile.mkdtemp(prefix="ingest_compact_")
+    out = work_dir("compact_")
     li.repartition(4).write.mode("overwrite").parquet(out)
     back = spark.read.parquet(out)
     return back.groupBy("l_linestatus").agg(
@@ -219,7 +209,7 @@ def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_linestatus", "l_extendedprice"
     )
-    out = tempfile.mkdtemp(prefix="ingest_part_")
+    out = work_dir("part_")
     li.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
     back = spark.read.parquet(out)
     # Exact cents sum (the src_csv_roundtrip discipline): plain double
@@ -227,9 +217,7 @@ def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stress tier (3M-row groups crossed a rounding boundary).
     return back.groupBy("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n"),
-        F.round(
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")) / 100, 2
-        ).alias("total_price"),
+        money.money_sum(money.cents("l_extendedprice")).alias("total_price"),
     )
 
 
@@ -310,14 +298,12 @@ def src_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
-    out = tempfile.mkdtemp(prefix="ingest_xml_")
+    out = work_dir("xml_")
     cust.write.format("xml").option("rowTag", "customer").mode("overwrite").save(out)
     back = spark.read.format("xml").option("rowTag", "customer").load(out)
     return back.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.round(F.col("c_acctbal") * 100).cast("long"))
-        .cast("long")
-        .alias("acctbal_cents"),
+        F.sum(money.cents("c_acctbal")).cast("long").alias("acctbal_cents"),
     )
 
 
@@ -346,7 +332,7 @@ def sink_sorted_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_shipdate", "l_extendedprice"
     )
-    out = _SORTED_SINK_DIRS.get(sf_dir) or tempfile.mkdtemp(prefix="ingest_sorted_")
+    out = _SORTED_SINK_DIRS.get(sf_dir) or work_dir("sorted_")
     _SORTED_SINK_DIRS[sf_dir] = out
     (
         li.repartitionByRange(8, "l_shipdate")
@@ -359,9 +345,7 @@ def sink_sorted_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.year("l_shipdate").cast("int").alias("ship_year")
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
-        .cast("long")
-        .alias("price_cents"),
+        F.sum(money.cents("l_extendedprice")).cast("long").alias("price_cents"),
     )
 
 
@@ -394,11 +378,11 @@ def src_csv_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat_ws(
             ",",
             F.col("o_orderkey").cast("string"),
-            F.round(F.col("o_totalprice") * 100).cast("long").cast("string"),
+            money.cents("o_totalprice").cast("string"),
             F.col("o_orderstatus"),
         )
     )
-    out = tempfile.mkdtemp(prefix="ingest_corrupt_csv_")
+    out = work_dir("corrupt_csv_")
     orders.select(line.alias("value")).write.mode("overwrite").text(out)
     schema = (
         "o_orderkey BIGINT, price_cents BIGINT, o_orderstatus STRING, "
@@ -490,7 +474,7 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = _SNAPSHOT_DIRS.get(sf_dir)
     if root is None:
-        root = tempfile.mkdtemp(prefix="ingest_snapshots_")
+        root = work_dir("snapshots_")
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice"
         )
@@ -522,9 +506,7 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         return snap.agg(
             F.lit(ver).alias("version"),
             F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-            .cast("long")
-            .alias("cents"),
+            F.sum(money.cents("o_totalprice")).cast("long").alias("cents"),
         )
 
     return read_version(1).unionAll(read_version(2))
@@ -559,7 +541,7 @@ def src_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
         .collect()
     )
-    stage = tempfile.mkdtemp(prefix="ingest_binfiles_")
+    stage = work_dir("binfiles_")
     for r in docs:
         with open(os.path.join(stage, f"doc_{r.doc_id}.bin"), "wb") as f:
             f.write(r.text.encode("utf-8"))
@@ -611,7 +593,7 @@ def q_checksum_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("|"),
         F.col("o_custkey").cast("string"),
         F.lit("|"),
-        F.round(F.col("o_totalprice") * 100).cast("long").cast("string"),
+        money.cents("o_totalprice").cast("string"),
         F.lit("|"),
         F.unix_timestamp(F.col("o_orderdate").cast("timestamp")).cast("string"),
         F.lit("|"),
@@ -718,15 +700,13 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     spark.dataSource.register(_make_jsonl_sink())
-    out = tempfile.mkdtemp(prefix="ingest_pysink_") + "/sink"
+    out = work_dir("pysink_") + "/sink"
     agg = (
         load_table(spark, sf_dir, "orders")
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-            .cast("long")
-            .alias("total_cents"),
+            F.sum(money.cents("o_totalprice")).cast("long").alias("total_cents"),
         )
     )
     # Persist so the sink write and the verification read the SAME
@@ -807,11 +787,11 @@ def q_dead_letter_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat_ws(
             ",",
             F.col("o_orderkey").cast("string"),
-            F.round(F.col("o_totalprice") * 100).cast("long").cast("string"),
+            money.cents("o_totalprice").cast("string"),
             F.col("o_orderstatus"),
         )
     )
-    out = tempfile.mkdtemp(prefix="ingest_dlq_")
+    out = work_dir("dlq_")
     orders.select(line.alias("value")).write.mode("overwrite").text(out)
     schema = (
         "o_orderkey BIGINT, price_cents BIGINT, o_orderstatus STRING, "
@@ -842,7 +822,7 @@ def q_dead_letter_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     repaired = dead.join(orders, "o_orderkey").select(
         "o_orderkey",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
+        money.cents("o_totalprice").alias("price_cents"),
         "o_orderstatus",
         F.lit(1).alias("recovered"),
     )

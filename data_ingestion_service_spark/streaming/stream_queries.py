@@ -23,13 +23,11 @@ same plans run with RocksDB state store and watermarked eviction.
 
 from __future__ import annotations
 
-import atexit
 import contextlib
 import functools
 import importlib.util
 import os
 import shutil
-import tempfile
 import threading
 import time
 import uuid
@@ -40,9 +38,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
 from data_ingestion_service_spark.catalog import load_table, table_path
-from data_ingestion_service_spark.functions import alerts, models
+from data_ingestion_service_spark.functions import alerts, models, money
 from data_ingestion_service_spark.registry import register as _register_raw
-from data_ingestion_service_spark.session import ensure_session_confs
+from data_ingestion_service_spark.session import ensure_session_confs, work_dir
 
 # ---------------------------------------------------------------------------
 # Stream-session isolation (VERDICT r9 item 2 / ADVICE r9): the drain
@@ -213,20 +211,6 @@ def _normalize_ts(df: DataFrame, kind: str) -> DataFrame:
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-# Exact-cents snap for the 2dp ``value`` column (r10 float-sum audit:
-# three keys across r8-r9 failed scale gates because a raw sum(double)'s
-# addition order is partition/scheduling-dependent). Streaming state then
-# sums INTEGERS, so micro-batch boundaries, state-partition count, and
-# partial-agg order cannot move the result; divide and round once at the
-# final projection. floor(x+0.5) == half-up through pure IEEE arithmetic
-# on 2dp data (identical across engines; see q1_pricing_summary's note).
-_VALUE_CENTS_SQL = "CAST(floor(value * 100 + 0.5) AS BIGINT)"
-
-
-def _value_cents(col: str = "value"):
-    return F.floor(F.col(col) * 100 + 0.5).cast("long")
-
-
 # Streaming shuffle right-sizing (r9): a streaming query's shuffle
 # partition count is fixed at query start and becomes the state-store
 # partition count — AQE cannot coalesce it at runtime the way it does
@@ -374,7 +358,7 @@ def events_stream(spark: SparkSession, sf_dir: str, copies: int = 1) -> DataFram
             reader = reader.option("pathGlobFilter", "events.parquet")
             src = sf_dir
     else:
-        src = tempfile.mkdtemp(prefix="ingest_replay_")
+        src = work_dir("replay_")
         for i in range(copies):
             _copy_fixture(fixture, src, f"events_{i}")
     return _normalize_ts(reader.parquet(src), kind)
@@ -388,7 +372,7 @@ def events_stream(spark: SparkSession, sf_dir: str, copies: int = 1) -> DataFram
 # Spark write jobs per invocation — ~70% of the stream bench group was
 # this scaffolding. _ReplayStage builds each layout ONCE per fixture
 # vintage with pyarrow (no Spark jobs at all) and hands out staged file
-# paths; keys copy them into PRIVATE mkdtemp replay dirs (ms), so
+# paths; keys copy them into PRIVATE work_dir replay dirs (ms), so
 # source/checkpoint isolation between keys is unchanged. Row values are
 # identical by construction: the splits partition the same fixture rows,
 # and the file source reads every file through the same explicit schema
@@ -399,15 +383,6 @@ def events_stream(spark: SparkSession, sf_dir: str, copies: int = 1) -> DataFram
 
 _STAGE_LOCK = threading.Lock()
 _STAGES: dict[tuple, "_ReplayStage"] = {}
-_STAGE_DIRS: list[str] = []
-
-
-def _reap_stage_dirs() -> None:
-    while _STAGE_DIRS:
-        shutil.rmtree(_STAGE_DIRS.pop(), ignore_errors=True)
-
-
-atexit.register(_reap_stage_dirs)
 
 
 class _ReplayStage:
@@ -417,8 +392,7 @@ class _ReplayStage:
         self.fixture = table_path(sf_dir, "events")
         self.kind = _events_ts_kind(spark, sf_dir)
         _note_stream_input(self.fixture)
-        self._dir = tempfile.mkdtemp(prefix="ingest_stage_")
-        _STAGE_DIRS.append(self._dir)
+        self._dir = work_dir("stage_")
         self._lock = threading.Lock()
         self._splits: dict[str, list[str]] = {}
         self._scalars: dict[str, object] = {}
@@ -622,20 +596,17 @@ def _stage_chunk_dir(
 _SINK_DIRS: list[str] = []
 
 
-def _reap_sink_dirs(keep_last: int = 0) -> None:
+def _reap_sink_dirs() -> None:
     """Delete drained parquet-sink temp dirs (ADVICE r7: three bench
     samples of a ~36M-row skewed-sf1 join otherwise accumulate in /tmp).
-    Called with keep_last=2 at the start of each new drain and with 0 at
-    interpreter exit for the stragglers. The 2-dir slack assumes a caller
-    reads a result before two more drains start. Sequential callers
-    (``driver_sim.py``, the tests) do; concurrent ones do not:
-    ``bench.py``'s 8-thread pool and perfbench's clients can have a third
-    drain reap a dir another thread is still reading."""
-    while len(_SINK_DIRS) > keep_last:
+    Called at the start of each new drain, it keeps the last 2;
+    ``session.work_dir``'s root takes those at interpreter exit. The slack
+    assumes a caller reads a result before two more drains start.
+    Sequential callers (``driver_sim.py``, the tests) do; concurrent ones
+    do not: ``bench.py``'s 8-thread pool and perfbench's clients can have
+    a third drain reap a dir another thread is still reading."""
+    while len(_SINK_DIRS) > 2:
         shutil.rmtree(_SINK_DIRS.pop(0), ignore_errors=True)
-
-
-atexit.register(_reap_sink_dirs)
 
 
 class _LastDrain(threading.local):
@@ -718,8 +689,8 @@ def run_to_parquet(df: DataFrame, spark: SparkSession) -> DataFrame:
     second copy. The parquet sink writes distributed and the read-back
     scans like any other table; this is also the only sink shape that
     exists at 100 TB."""
-    _reap_sink_dirs(keep_last=2)
-    work = tempfile.mkdtemp(prefix="ingest_sink_")
+    _reap_sink_dirs()
+    work = work_dir("sink_")
     _SINK_DIRS.append(work)
     _drain(
         df.writeStream.format("parquet")
@@ -779,7 +750,7 @@ SELECT
   date_trunc('hour', ts)  AS hour_start,
   event_type,
   count(*)                AS n,
-  round(CAST(sum({_VALUE_CENTS_SQL}) AS DOUBLE) / 100, 2) AS total_value
+  round(CAST(sum({money.cents_floor_sql("value")}) AS DOUBLE) / 100, 2) AS total_value
 FROM events
 GROUP BY 1, 2
 """
@@ -790,7 +761,7 @@ def q_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_stream(spark, sf_dir)
     agg = ev.groupBy(F.window("ts", "1 hour"), "event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(_value_cents()).alias("value_cents"),
+        F.sum(money.cents_floor("value")).alias("value_cents"),
     )
     final = run_to_memory(agg, "complete")
     return final.select(
@@ -809,7 +780,7 @@ def q_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SLIDING_ORACLE = f"""
 SELECT ws AS window_start, event_type, count(*) AS n,
-       round(CAST(sum({_VALUE_CENTS_SQL}) AS DOUBLE) / 100, 2) AS total_value
+       round(CAST(sum({money.cents_floor_sql("value")}) AS DOUBLE) / 100, 2) AS total_value
 FROM (
   SELECT
     make_timestamp((epoch_us(ts) // 1800000000) * 1800000000 - k * 1800000000) AS ws,
@@ -829,7 +800,7 @@ def q_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy(F.window("ts", "1 hour", "30 minutes"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(_value_cents()) / 100, 2).alias("total_value"),
+            money.money_sum(money.cents_floor("value")).alias("total_value"),
         )
         .select(
             F.col("window.start").cast("timestamp_ntz").alias("window_start"),
@@ -866,7 +837,7 @@ SELECT
   min(ts)              AS session_start,
   max(ts)              AS session_end,
   count(*)             AS n_events,
-  round(CAST(sum({_VALUE_CENTS_SQL}) AS DOUBLE) / 100, 2) AS total_value
+  round(CAST(sum({money.cents_floor_sql("value")}) AS DOUBLE) / 100, 2) AS total_value
 FROM sess
 GROUP BY user_id, sess_id
 """
@@ -881,7 +852,7 @@ def q_events_session(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("ts").alias("session_start"),
             F.max("ts").alias("session_end"),
             F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(_value_cents()) / 100, 2).alias("total_value"),
+            money.money_sum(money.cents_floor("value")).alias("total_value"),
         )
         .select("user_id", "session_start", "session_end", "n_events", "total_value")
     )
@@ -917,7 +888,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _STATEFUL_ORACLE = f"""
 SELECT user_id, count(*) AS n_events,
-       round(CAST(sum({_VALUE_CENTS_SQL}) AS DOUBLE) / 100, 2) AS total_value
+       round(CAST(sum({money.cents_floor_sql("value")}) AS DOUBLE) / 100, 2) AS total_value
 FROM events
 GROUP BY user_id
 """
@@ -999,7 +970,7 @@ def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _FOREACH_BATCH_ORACLE = f"""
 SELECT event_type, count(*) AS n,
-       round(CAST(sum({_VALUE_CENTS_SQL}) AS DOUBLE) / 100 / count(*), 4) AS avg_value
+       round(CAST(sum({money.cents_floor_sql("value")}) AS DOUBLE) / 100 / count(*), 4) AS avg_value
 FROM events
 WHERE value >= 250
 GROUP BY event_type
@@ -1009,7 +980,7 @@ GROUP BY event_type
 @register("q_stream_foreach_batch", oracle=_FOREACH_BATCH_ORACLE)
 def q_stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_stream(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="ingest_feb_")
+    out = work_dir("feb_")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -1029,7 +1000,10 @@ def q_stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(
-            F.sum(_value_cents()).cast("double") / 100 / F.count(F.lit(1)), 4
+            F.sum(money.cents_floor("value")).cast("double")
+            / 100
+            / F.count(F.lit(1)),
+            4,
         ).alias("avg_value"),
     )
 
@@ -1047,7 +1021,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_stream(spark, sf_dir)
     agg = ev.groupBy(F.window("ts", "1 hour", "30 minutes"), "event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(_value_cents()).alias("value_cents"),
+        F.sum(money.cents_floor("value")).alias("value_cents"),
     )
     final = run_to_memory(agg, "complete")
     return final.select(
@@ -1117,7 +1091,8 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     joined = ev.join(F.broadcast(cust), ev.user_id == cust.c_custkey)
     agg = joined.groupBy("c_mktsegment", "event_type").agg(
-        F.count(F.lit(1)).alias("n"), F.sum(_value_cents()).alias("value_cents")
+        F.count(F.lit(1)).alias("n"),
+        F.sum(money.cents_floor("value")).alias("value_cents"),
     )
     final = run_to_memory(agg, "complete")
     return final.select(
@@ -1136,7 +1111,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _STREAM_TO_PARQUET_ORACLE = f"""
 SELECT event_type, count(*) AS n,
-       round(CAST(sum({_VALUE_CENTS_SQL}) AS DOUBLE) / 100, 2) AS total_value
+       round(CAST(sum({money.cents_floor_sql("value")}) AS DOUBLE) / 100, 2) AS total_value
 FROM events
 WHERE event_type IN ('purchase', 'signup')
 GROUP BY event_type
@@ -1149,7 +1124,7 @@ def q_stream_to_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered = ev.filter(F.col("event_type").isin("purchase", "signup")).select(
         "event_id", "event_type", "value"
     )
-    out = tempfile.mkdtemp(prefix="ingest_stream_sink_")
+    out = work_dir("stream_sink_")
     _drain(
         filtered.writeStream.format("parquet")
         .option("path", f"{out}/data")
@@ -1160,7 +1135,7 @@ def q_stream_to_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     back = spark.read.parquet(f"{out}/data")
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        F.round(F.sum(_value_cents()) / 100, 2).alias("total_value"),
+        money.money_sum(money.cents_floor("value")).alias("total_value"),
     )
 
 
@@ -1221,7 +1196,7 @@ SELECT
   user_id,
   min(ts)              AS session_start,
   count(*)             AS n_events,
-  round(CAST(sum({_VALUE_CENTS_SQL}) AS DOUBLE) / 100, 2) AS total_value
+  round(CAST(sum({money.cents_floor_sql("value")}) AS DOUBLE) / 100, 2) AS total_value
 FROM sess
 GROUP BY user_id, sess_id
 """
@@ -1233,7 +1208,7 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     kind = _events_ts_kind(spark, sf_dir)
     schema = _events_raw_schema(kind)
     stage = replay_stage(spark, sf_dir)
-    src = tempfile.mkdtemp(prefix="ingest_sess_replay_")
+    src = work_dir("sess_replay_")
     _copy_fixture(table_path(sf_dir, "events"), src, "events")
     # Sentinel 2h past the corpus max: watermark (max - 10min) then clears
     # every real session's end (last ts + 30min gap). Sentinel row carries
@@ -1253,7 +1228,7 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.min("ts").alias("session_start_ltz"),
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(_value_cents()).alias("value_cents"),
+            F.sum(money.cents_floor("value")).alias("value_cents"),
         )
     )
     final = run_to_memory(agg, "append")
@@ -1292,7 +1267,7 @@ def q_stream_ivm_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session_confs(spark)
     kind = _events_ts_kind(spark, sf_dir)
     schema = _events_raw_schema(kind)
-    work = tempfile.mkdtemp(prefix="ingest_ivm_")
+    work = work_dir("ivm_")
     # Four staged event_id-residue chunk files so the file source yields
     # four micro-batches — the multi-batch path is the point of the test,
     # and the MERGE result is split-invariant by construction.
@@ -1311,7 +1286,7 @@ def q_stream_ivm_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
         ).agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.round(F.col("value") * 100, 0).cast("bigint")).alias("value_cents"),
+            F.sum(money.cents("value")).alias("value_cents"),
         )
         sess = batch_df.sparkSession
         if snap_state["version"] >= 0:
@@ -1367,7 +1342,7 @@ def q_stream_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session_confs(spark)
     kind = _events_ts_kind(spark, sf_dir)
     schema = _events_raw_schema(kind)
-    work = tempfile.mkdtemp(prefix="ingest_rocksdb_")
+    work = work_dir("rocksdb_")
     # Staged residue chunks: multi-batch state-store exercise; the
     # complete-mode final aggregate is split-invariant.
     _stage_chunk_dir(spark, sf_dir, work, "eid4")
@@ -1517,7 +1492,7 @@ def q_stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session_confs(spark)
     kind = _events_ts_kind(spark, sf_dir)
     schema = _events_raw_schema(kind)
-    work = tempfile.mkdtemp(prefix="ingest_late_")
+    work = work_dir("late_")
     # bulk / mid / late trio staged once per fixture vintage (late =
     # event_id%50==0 AND ts < max-2h; mid = %50==1 AND ts < max-1h; the
     # bulk file keeps the global max so its watermark covers the late
@@ -1601,7 +1576,7 @@ def q_stream_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _STATE_INSPECT_ORACLE = f"""
 SELECT event_type, count(*) AS n,
-       round(CAST(sum({_VALUE_CENTS_SQL}) AS DOUBLE) / 100, 2) AS total_value
+       round(CAST(sum({money.cents_floor_sql("value")}) AS DOUBLE) / 100, 2) AS total_value
 FROM events
 GROUP BY event_type
 """
@@ -1612,9 +1587,9 @@ def q_stream_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_stream(spark, sf_dir)
     # The inspected state itself holds integer cents (r10 float-sum audit).
     agg = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"), F.sum(_value_cents()).alias("sv")
+        F.count(F.lit(1)).alias("n"), F.sum(money.cents_floor("value")).alias("sv")
     )
-    out = tempfile.mkdtemp(prefix="ingest_state_inspect_")
+    out = work_dir("state_inspect_")
     run_to_memory(agg, "complete", checkpoint=out)
     # Not the sink: the OPERATOR STATE itself, keyed by group, one
     # struct per (key, partition).
@@ -1714,7 +1689,7 @@ def q_stream_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame
     ensure_session_confs(spark)
     kind = _events_ts_kind(spark, sf_dir)
     schema = _events_raw_schema(kind)
-    work = tempfile.mkdtemp(prefix="ingest_restart_")
+    work = work_dir("restart_")
     # Two staged halves by event_id parity, delivered as separate replay
     # files (second lands only after the planned "crash").
     h1, h2 = replay_stage(spark, sf_dir).splits("eid2")
@@ -1728,7 +1703,7 @@ def q_stream_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame
         proj = ev.select(
             "event_id",
             "event_type",
-            F.round(F.col("value") * 100).cast("long").alias("value_cents"),
+            money.cents("value").alias("value_cents"),
         )
         _drain(
             proj.writeStream.format("parquet")
@@ -1785,7 +1760,7 @@ def q_stream_state_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session_confs(spark)
     kind = _events_ts_kind(spark, sf_dir)
     schema = _events_raw_schema(kind)
-    work = tempfile.mkdtemp(prefix="ingest_evolve_")
+    work = work_dir("evolve_")
     h1, h2 = replay_stage(spark, sf_dir).splits("eid2")
     os.makedirs(f"{work}/replay")
     shutil.copy(h1, f"{work}/replay/a_half.parquet")
@@ -1800,7 +1775,7 @@ def q_stream_state_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     count_only = [F.count(F.lit(1)).alias("n")]
     evolved = [
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
+        F.sum(money.cents("value")).alias("cents"),
     ]
     phase1 = run_agg(count_only, f"{work}/ckpt").select(
         "event_type", F.col("n").alias("n_first_half")
@@ -1865,7 +1840,7 @@ except ModuleNotFoundError:  # no `google` namespace package at all
 
 _TWS_ORACLE = f"""
 SELECT user_id, count(*) AS n_events,
-       round(CAST(sum({_VALUE_CENTS_SQL}) AS DOUBLE) / 100, 2) AS total_value
+       round(CAST(sum({money.cents_floor_sql("value")}) AS DOUBLE) / 100, 2) AS total_value
 FROM events
 GROUP BY user_id
 """
@@ -1881,7 +1856,7 @@ def _transform_with_state_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session_confs(spark)
     kind = _events_ts_kind(spark, sf_dir)
     schema = _events_raw_schema(kind)
-    work = tempfile.mkdtemp(prefix="ingest_tws_")
+    work = work_dir("tws_")
     # Staged parity halves: two micro-batches; per-user running state is
     # split-invariant (counts and sums re-aggregate).
     _stage_chunk_dir(spark, sf_dir, work, "eid2")
@@ -1999,7 +1974,7 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session_confs(spark)
     kind = _events_ts_kind(spark, sf_dir)
     schema = _events_raw_schema(kind)
-    work = tempfile.mkdtemp(prefix="ingest_souter_")
+    work = work_dir("souter_")
     stage = replay_stage(spark, sf_dir)
     os.makedirs(f"{work}/replay")
     # The full fixture must land as ONE delivery unit (see
@@ -2084,7 +2059,7 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _STATEFUL_TIMEOUT_ORACLE = f"""
 SELECT user_id, count(*) AS n_events,
-       round(CAST(sum({_VALUE_CENTS_SQL}) AS DOUBLE) / 100, 2) AS total_value
+       round(CAST(sum({money.cents_floor_sql("value")}) AS DOUBLE) / 100, 2) AS total_value
 FROM events
 GROUP BY user_id
 """
@@ -2098,7 +2073,7 @@ def q_stream_stateful_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session_confs(spark)
     kind = _events_ts_kind(spark, sf_dir)
     schema = _events_raw_schema(kind)
-    work = tempfile.mkdtemp(prefix="ingest_sto_")
+    work = work_dir("sto_")
     stage = replay_stage(spark, sf_dir)
     u0, u1 = stage.splits("uid2")
     _stage_replay_dir(work, [(u0, "a_even.parquet"), (u1, "b_odd.parquet")], 60)
@@ -2185,7 +2160,7 @@ GROUP BY event_type
 @register("q_stream_fanout", oracle=_STREAM_FANOUT_ORACLE)
 def q_stream_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_stream(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="ingest_fanout_")
+    out = work_dir("fanout_")
 
     def fan_out(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.filter(F.col("value") >= 100).persist()
@@ -2199,9 +2174,7 @@ def q_stream_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
                 batch_df.groupBy("event_type")
                 .agg(
                     F.count(F.lit(1)).alias("n"),
-                    F.sum(F.round(F.col("value") * 100).cast("long")).alias(
-                        "cents"
-                    ),
+                    F.sum(money.cents("value")).alias("cents"),
                 )
                 .withColumn("batch_id", F.lit(batch_id))
                 .write.mode("append")
@@ -2219,7 +2192,7 @@ def q_stream_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = spark.read.parquet(f"{out}/agg")
     from_raw = raw.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_raw"),
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents_raw"),
+        F.sum(money.cents("value")).alias("cents_raw"),
     )
     from_agg = agg.groupBy("event_type").agg(
         F.sum("n").cast("long").alias("n"),
@@ -2267,7 +2240,7 @@ def q_stream_dim_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session_confs(spark)
     kind = _events_ts_kind(spark, sf_dir)
     schema = _events_raw_schema(kind)
-    work = tempfile.mkdtemp(prefix="ingest_dimref_")
+    work = work_dir("dimref_")
     h0, h1 = replay_stage(spark, sf_dir).splits("eid2")
     _stage_replay_dir(work, [(h0, "a_even.parquet"), (h1, "b_odd.parquet")], 60)
 
@@ -2300,7 +2273,7 @@ def q_stream_dim_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch_df.join(dim, batch_df.user_id == dim.c_custkey)
             .select(
                 "segment",
-                F.round(F.col("value") * 100).cast("long").alias("cents"),
+                money.cents("value").alias("cents"),
             )
             .write.mode("append")
             .parquet(f"{work}/sink")
@@ -2349,7 +2322,7 @@ def q_stream_medallion(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session_confs(spark)
     kind = _events_ts_kind(spark, sf_dir)
     schema = _events_raw_schema(kind)
-    work = tempfile.mkdtemp(prefix="ingest_medal_")
+    work = work_dir("medal_")
 
     def drain(df: DataFrame, path: str, ckpt: str) -> None:
         _drain(
@@ -2384,7 +2357,7 @@ def q_stream_medallion(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
             "event_type",
             "user_id",
-            F.round(F.col("value") * 100).cast("long").alias("value_cents"),
+            money.cents("value").alias("value_cents"),
         )
     )
     drain(silver_df, f"{work}/silver", f"{work}/ckpt_silver")
@@ -2430,7 +2403,7 @@ def q_stream_idempotent_batchid(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session_confs(spark)
     kind = _events_ts_kind(spark, sf_dir)
     schema = _events_raw_schema(kind)
-    work = tempfile.mkdtemp(prefix="ingest_idem_")
+    work = work_dir("idem_")
     h1, h2 = replay_stage(spark, sf_dir).splits("eid2")
     os.makedirs(f"{work}/replay")
     shutil.copy(h1, f"{work}/replay/a_half.parquet")
@@ -2442,7 +2415,7 @@ def q_stream_idempotent_batchid(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch_df.select(
                 "event_id",
                 "event_type",
-                F.round(F.col("value") * 100).cast("long").alias("cents"),
+                money.cents("value").alias("cents"),
             )
             .write.mode("overwrite")
             .parquet(f"{work}/sink/batch_id={batch_id}")
@@ -2546,7 +2519,7 @@ def q_stream_listener(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session_confs(spark)
     kind = _events_ts_kind(spark, sf_dir)
     schema = _events_raw_schema(kind)
-    work = tempfile.mkdtemp(prefix="ingest_listener_")
+    work = work_dir("listener_")
     # Staged residue chunks; explicit increasing mtimes pin replay order
     # = residue order.
     _stage_replay_dir(
@@ -2649,7 +2622,7 @@ def q_stream_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = ev.join(F.broadcast(model), "event_type").select(
         "event_type",
         "p99_cents",
-        (models.value_cents() > F.col("p99_cents")).cast("long").alias("over"),
+        (money.cents("value") > F.col("p99_cents")).cast("long").alias("over"),
     )
     agg = scored.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -2733,7 +2706,7 @@ def q_stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session_confs(spark)
     kind = _events_ts_kind(spark, sf_dir)
     schema = _events_raw_schema(kind)
-    work = tempfile.mkdtemp(prefix="ingest_scm_")
+    work = work_dir("scm_")
     # Staged residue chunks: the sketch is a sum over cells, so the
     # final merged counters are split-invariant.
     _stage_chunk_dir(spark, sf_dir, work, "eid4")
@@ -2868,7 +2841,7 @@ def q_stream_out_of_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session_confs(spark)
     kind = _events_ts_kind(spark, sf_dir)
     schema = _events_raw_schema(kind)
-    work = tempfile.mkdtemp(prefix="ingest_soo_")
+    work = work_dir("soo_")
     # Staged residue chunks replayed in residue order (mtime-pinned).
     _stage_replay_dir(
         work,
@@ -2996,8 +2969,8 @@ def q_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     ev = events_stream(spark, sf_dir)
-    _reap_sink_dirs(keep_last=2)
-    work = tempfile.mkdtemp(prefix="ingest_asof_")
+    _reap_sink_dirs()
+    work = work_dir("asof_")
     _SINK_DIRS.append(work)
     out_dir = f"{work}/out"
     os.makedirs(out_dir)

@@ -1,8 +1,10 @@
 """Report every money sum/avg across the registered oracles and whether
 it carries the exact fixed-point guard (VERDICT r9 item 1 — the
-scheduling-dependent float-sum class). Exit 1 on unguarded, unjustified
-hits; the same analyzer backs the pytest tripwire
-(tests/test_invariants.py::test_no_unguarded_money_sums).
+scheduling-dependent float-sum class), then every cents snap written by
+hand in the package instead of through functions/money.py. Exit 1 on
+unguarded, unjustified hits or on any hand-written snap; the same
+analyzers back the pytest tripwires (tests/test_invariants.py::
+test_no_unguarded_money_sums and ::test_no_handwritten_cents).
 
     python scripts/audit_float_sums.py            # report + gate
 """
@@ -44,7 +46,11 @@ def main() -> int:
         why = f" — {audit.JUSTIFIED[key]}" if key in audit.JUSTIFIED else ""
         for fn, arg in sites:
             print(f"  [{tag}] {key}: {fn}({arg[:110]}){why}")
-    return 1 if bad else 0
+    handwritten = audit.find_handwritten_cents(audit.engine_sources())
+    print(f"{len(handwritten)} hand-written cents snaps outside functions/money.py")
+    for path, line, src in handwritten:
+        print(f"  [FAIL] {os.path.relpath(path)}:{line}: {src[:110]}")
+    return 1 if bad or handwritten else 0
 
 
 if __name__ == "__main__":

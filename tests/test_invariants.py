@@ -1980,7 +1980,9 @@ def test_no_unguarded_money_sums():
     integer CASE arm; anything else needs an entry in audit.JUSTIFIED
     with an in-code reason. Spark and oracle are written in pairs, so an
     unguarded oracle implies an unguarded plan — three keys failed r8/r9
-    scale gates exactly this way (q19 at sf5_full_r9.log:20)."""
+    scale gates exactly this way (q19 at sf5_full_r9.log:20). On the
+    engine side the guard is built by functions/money.py, which
+    test_no_handwritten_cents keeps the only place that spells it."""
     from data_ingestion_service_spark import audit
     from data_ingestion_service_spark.registry import ORACLES
 
@@ -1993,6 +1995,67 @@ def test_no_unguarded_money_sums():
     assert not bad, f"unguarded money aggregates (see audit.py): {bad}"
     stale = set(audit.JUSTIFIED) - set(hits)
     assert not stale, f"JUSTIFIED entries with no remaining hit: {stale}"
+
+
+def test_no_handwritten_cents(tmp_path):
+    """Engine code snaps money to integer cents only through
+    functions/money.py (cents, cents_floor, vol_e4): no
+    ``F.round(x * 100)`` or ``F.floor(x * 100 + 0.5)`` anywhere else in
+    the package. The finder itself must still see a hand-written snap and
+    pass a truncation (``floor(x * 100)``) or a non-cents scale."""
+    from data_ingestion_service_spark import audit
+
+    probe = tmp_path / "probe.py"
+    probe.write_text(
+        'a = F.round(F.col("value") * 100).cast("long")\n'
+        'b = F.floor(F.col("value") * 100 + 0.5)\n'
+        'c = F.round(F.col("value") * 100.0 / F.col("n"))\n'
+        'd = F.floor(F.col("l_tax") * 100).cast("bigint")\n'
+        'e = F.round(100 * F.col("value"), 0)\n'
+    )
+    assert [line for _, line, _ in audit.find_handwritten_cents([probe])] == [1, 2, 5]
+    hits = audit.find_handwritten_cents(audit.engine_sources())
+    assert not hits, "hand-written cents snaps; use functions/money.py: " + "; ".join(
+        f"{path}:{line}: {src}" for path, line, src in hits
+    )
+
+
+def test_work_dirs_removed_at_exit(tmp_path, sf_dir):
+    """Engine work dirs live under one per-process root that the process
+    removes when it exits: a process that ran a source round trip and a
+    RocksDB stream key leaves no ``ingest_*`` entry in its temp dir."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+    from pathlib import Path
+
+    code = textwrap.dedent(
+        f"""
+        import glob, os
+        from data_ingestion_service_spark.registry import QUERIES, load_all_operators
+        from data_ingestion_service_spark.session import get_spark
+
+        load_all_operators()
+        spark = get_spark()
+        for key in ("src_csv_roundtrip", "q_stream_rocksdb"):
+            QUERIES[key](spark, {sf_dir!r}).collect()
+        print("live:", len(glob.glob(os.path.join({str(tmp_path)!r}, "ingest_*"))))
+        """
+    )
+    env = dict(os.environ, TMPDIR=str(tmp_path), SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=Path(__file__).resolve().parents[1],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "live: 0" not in out.stdout, "the keys wrote no work dir under TMPDIR"
+    left = sorted(p.name for p in tmp_path.glob("ingest_*"))
+    assert not left, f"work dirs left after exit: {left}"
 
 
 def test_stream_queries_drain_in_one_place():
