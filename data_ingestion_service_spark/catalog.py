@@ -16,6 +16,7 @@ both engines see identical values for either vintage.
 
 from __future__ import annotations
 
+import os
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,37 +47,80 @@ def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
 
 
-# Analyzed-DataFrame cache, per session. Weak keys stop id-reuse from
-# aliasing a dead session, but each cached DataFrame holds its session, so
-# entries stay for the life of the process. Re-running spark.read.parquet
-# per query re-lists files and re-reads footers (~60-80ms/table, the
-# dominant cost of ms-scale queries); a real ingestion service registers
-# its catalog once. Execution still scans fresh data — only the *plan*
-# (schema + file listing) is reused.
-_TABLE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = (
+def fixture_parts(path: str) -> list[str]:
+    """Physical parquet files of a fixture table, sorted.
+
+    The driver's testdata keeps one file per table, but every real
+    cluster layout (and the multi-file stress rung) is a DIRECTORY of
+    part files, so every helper that touches a table's physical bytes
+    (size notes, replay-dir copies) accepts both shapes. A directory
+    whose parts live in subdirectories (hive-partitioned) raises: the
+    stream replay supports flat directories only, and returning [] would
+    stage an empty replay dir.
+    """
+    if not os.path.isdir(path):
+        return [path]
+    parts = sorted(
+        f"{path}/{f}"
+        for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+    if not parts:
+        raise ValueError(
+            f"fixture directory {path!r} has no top-level *.parquet "
+            "leaf files; nested/partitioned layouts are not "
+            "supported by the replay harness"
+        )
+    return parts
+
+
+def fixture_cache_key(path: str) -> tuple:
+    """Version key for a fixture table (file or directory).
+
+    For a file it is (path, mtime, size). For a directory it covers every
+    file under it: rewriting a part in place leaves the directory's own
+    mtime and size unchanged, so a key built from the directory's stat
+    would serve a plan (or staged replay files) of the old bytes.
+    """
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return (path, st.st_mtime_ns, st.st_size)
+        files = []
+        for root, _, names in os.walk(path):
+            for name in names:
+                f = os.path.join(root, name)
+                st = os.stat(f)
+                files.append((os.path.relpath(f, path), st.st_mtime_ns, st.st_size))
+        return (path, tuple(sorted(files)))
+    except OSError:
+        return (path, 0, 0)
+
+
+# Analyzed-DataFrame cache, per session, keyed by fixture_cache_key: a
+# fixture regenerated in place mid-session gets a fresh plan (new file
+# listing + schema probe). Weak keys stop id-reuse from aliasing a dead
+# session, but each cached DataFrame holds its session, so entries stay
+# for the life of the process. Re-running spark.read.parquet per query
+# re-lists files and re-reads footers (~60-80ms/table, the dominant cost
+# of ms-scale queries); a real ingestion service registers its catalog
+# once. Execution still scans fresh data — only the *plan* (schema + file
+# listing) is reused.
+_TABLE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple, DataFrame]]" = (
     weakref.WeakKeyDictionary()
 )
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table with oracle-parity normalizations applied."""
-    import os
-
     per_session = _TABLE_CACHE.setdefault(spark, {})
-    # Keyed by (path, mtime, size) like stream_queries._TS_KIND_CACHE: a
-    # fixture regenerated in-place mid-session gets a fresh plan (new
-    # file listing + schema probe) instead of the stale cached one.
     path = table_path(sf_dir, name)
-    try:
-        st = os.stat(path)
-        key = (sf_dir.rstrip("/"), name, st.st_mtime_ns, st.st_size)
-    except OSError:
-        key = (sf_dir.rstrip("/"), name, 0, 0)
+    key = fixture_cache_key(path)
     cached = per_session.get(key)
     if cached is not None:
         return cached
     ensure_session_confs(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = spark.read.parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # ns since epoch -> us since epoch -> naive timestamp (UTC session).
         # Integer `div`, NOT `/`: epoch-ns (~1.7e18) exceeds double's 2^53

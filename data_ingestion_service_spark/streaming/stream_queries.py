@@ -3,10 +3,19 @@
 PAPERS.md).
 
 Verification strategy: the oracle cannot run a stream, so each streaming
-query replays ``events.parquet`` through ``readStream``, drains it into
-a sink, and returns the final sink state — which, for these operators,
-provably equals the batch query the oracle runs (SURVEY.md §2.9). Every
-query drains through one function, ``_drain``: it starts the query,
+query replays ``events.parquet`` as a file stream, drains it into a
+sink, and returns the final sink state — which, for these operators,
+provably equals the batch query the oracle runs (SURVEY.md §2.9).
+
+Every events replay is read by one function, ``events_stream`` (or its
+raw-``ts`` twin ``raw_events_stream``): it streams the fixture itself or
+a replay dir the key staged with ``_stage_replay_dir`` from
+``replay_stage``'s split files, takes the fixture's ``ts`` vintage from
+the stage, notes the fixture's size for the drain's shuffle sizing and
+normalizes ``ts`` to event time. A key picks only its split files and
+whether the source delivers one file per micro-batch.
+
+Every query drains through one function, ``_drain``: it starts the query,
 waits with ``processAllAvailable()``, ``awaitTermination()`` under an
 ``availableNow`` trigger, or a bounded poll until a memory sink holds N
 rows, and stops it. ``run_to_memory`` and ``run_to_parquet`` wrap it
@@ -37,7 +46,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
-from data_ingestion_service_spark.catalog import load_table, table_path
+from data_ingestion_service_spark.catalog import (
+    fixture_cache_key,
+    fixture_parts,
+    load_table,
+    table_path,
+)
 from data_ingestion_service_spark.functions import alerts, models, money
 from data_ingestion_service_spark.registry import register as _register_raw
 from data_ingestion_service_spark.session import ensure_session_confs, work_dir
@@ -134,60 +148,6 @@ def register(name: str, oracle: str | None = None):
 
     return deco
 
-# The fixtures' physical type for events.ts has varied across driver
-# regenerations: TIMESTAMP(NANOS) (unreadable by Spark except as raw
-# longs via nanosAsLong) vs TIMESTAMP(MICROS) (plain timestamp_ntz).
-# Probe the parquet footer once per file *version* and adapt, mirroring
-# the batch loader's guard (catalog.py load_table) so stream and batch
-# always see identical values regardless of fixture vintage. Keyed by
-# _fixture_cache_key: for a single file that is (path, mtime, size); for
-# a DIRECTORY table the key covers every leaf part file, because
-# rewriting parts in place need not change the directory inode's
-# mtime/size — a directory-stat key would silently serve a stale
-# ts-kind and stale staged artifacts after an in-place regeneration
-# (ADVICE r10 medium).
-_TS_KIND_CACHE: dict[tuple, str] = {}
-
-
-def _fixture_cache_key(path: str) -> tuple:
-    """Vintage-sensitive cache key for a fixture table (file or dir).
-
-    Any physical change to the table's bytes — including rewriting part
-    files inside a directory without touching the directory entry —
-    must produce a different key, so _TS_KIND_CACHE/_STAGES never serve
-    artifacts staged from a previous fixture vintage.
-    """
-    try:
-        if os.path.isdir(path):
-            parts = []
-            for p in _fixture_parts(path):
-                st = os.stat(p)
-                parts.append((os.path.basename(p), st.st_mtime_ns, st.st_size))
-            return (path, tuple(parts))
-        st = os.stat(path)
-        return (path, st.st_mtime_ns, st.st_size)
-    except OSError:
-        return (path, 0, 0)
-
-
-def _events_ts_kind(spark: SparkSession, sf_dir: str) -> str:
-    """'bigint' (legacy nanos-as-long fixtures) or 'timestamp'."""
-    path = table_path(sf_dir, "events")
-    # Every streaming key probes the kind, so this is the one place that
-    # reliably sees the replay input before any drain — note its size
-    # for the sized-shuffle helper (keys reading the fixture directly,
-    # e.g. medallion's bronze pass, never touch events_stream/the stage).
-    _note_stream_input(path)
-    key = _fixture_cache_key(path)
-    kind = _TS_KIND_CACHE.get(key)
-    if kind is None:
-        ensure_session_confs(spark)
-        dt = dict(spark.read.parquet(path).dtypes)["ts"]
-        kind = "bigint" if dt == "bigint" else "timestamp"
-        _TS_KIND_CACHE[key] = kind
-    return kind
-
-
 def _events_raw_schema(kind: str) -> str:
     ts_ddl = "bigint" if kind == "bigint" else "timestamp_ntz"
     return (
@@ -227,55 +187,24 @@ def _normalize_ts(df: DataFrame, kind: str) -> DataFrame:
 # clamped to the session value, so a 100 TB run still gets the
 # submitter's full setting while a megabyte-scale replay stops paying
 # hundredfold state overhead. The
-# input size is noted per-thread by events_stream/replay_stage; the conf
+# input size is noted per-thread by the events reader; the conf
 # write lands on the isolated drain session only (stream_session above)
 # and is restored to its entered value after, so batch plans on the
 # caller's session can never observe it (VERDICT r9 item 2).
 _STREAM_INPUT = threading.local()
 
 
-def _fixture_parts(path: str) -> list[str]:
-    """Physical parquet files of a fixture table.
-
-    The driver's testdata keeps one file per table, but every real
-    cluster layout (and the r10 multi-file stress rung) is a DIRECTORY
-    of part files — every helper that touches the fixture's physical
-    bytes (size notes, replay-dir copies, pyarrow scalar reads) must
-    accept both shapes. Sorted for deterministic copy naming.
-    """
-    if os.path.isdir(path):
-        parts = sorted(
-            f"{path}/{f}"
-            for f in os.listdir(path)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-        if not parts:
-            # Nested/hive-partitioned layouts keep their parts in
-            # subdirectories; silently returning [] here would make
-            # _note_stream_input record 0 bytes and _copy_fixture stage
-            # an EMPTY replay dir (wrong/hung streams). Fail loudly —
-            # the replay harness supports flat directories only
-            # (ADVICE r10 low).
-            raise ValueError(
-                f"fixture directory {path!r} has no top-level *.parquet "
-                "leaf files; nested/partitioned layouts are not "
-                "supported by the replay harness"
-            )
-        return parts
-    return [path]
-
-
 def _copy_fixture(src: str, dst_dir: str, tag: str) -> None:
     """Copy a fixture table (file or directory of parts) into a replay
     dir as ``{tag}_<k>.parquet`` leaf files."""
-    for k, part in enumerate(_fixture_parts(src)):
+    for k, part in enumerate(fixture_parts(src)):
         shutil.copy(part, f"{dst_dir}/{tag}_{k}.parquet")
 
 
 def _note_stream_input(path: str) -> None:
     try:
         _STREAM_INPUT.nbytes = sum(
-            os.path.getsize(p) for p in _fixture_parts(path)
+            os.path.getsize(p) for p in fixture_parts(path)
         )
     except OSError:
         _STREAM_INPUT.nbytes = None
@@ -335,50 +264,86 @@ def _drain_confs(spark: SparkSession, confs: dict[str, str]):
                 spark.conf.set(k, v)
 
 
-def events_stream(spark: SparkSession, sf_dir: str, copies: int = 1) -> DataFrame:
-    """Replayable stream over events.parquet (optionally duplicated).
+def _events_source(
+    spark: SparkSession,
+    sf_dir: str,
+    replay: str | None,
+    copies: int,
+    file_per_batch: bool,
+) -> tuple[DataFrame, str]:
+    """The one events-shaped file-stream reader: (raw stream, ts kind).
+
+    Reads ``replay`` (a caller-staged dir) or else the fixture itself;
+    the file source needs a directory, so a single-file fixture streams
+    its parent dir under a glob pinned to the one file (a glob matches
+    leaf files only, so a directory table streams as itself). ``copies``
+    > 1 stages that many copies into a fresh replay dir (duplicate
+    delivery for the dedup keys). The drain's shuffle sizing always
+    notes the fixture's bytes, never those of a staged copy.
+    """
+    fixture = table_path(sf_dir, "events")
+    _note_stream_input(fixture)
+    kind = replay_stage(spark, sf_dir).kind
+    reader = spark.readStream.schema(_events_raw_schema(kind))
+    if file_per_batch:
+        reader = reader.option("maxFilesPerTrigger", 1)
+    if copies > 1:
+        replay = work_dir("replay_")
+        for i in range(copies):
+            _copy_fixture(fixture, replay, f"events_{i}")
+    if replay is not None:
+        return reader.parquet(replay), kind
+    if os.path.isdir(fixture):
+        return reader.parquet(fixture), kind
+    return reader.option("pathGlobFilter", "events.parquet").parquet(sf_dir), kind
+
+
+def events_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    replay: str | None = None,
+    *,
+    copies: int = 1,
+    file_per_batch: bool = False,
+) -> DataFrame:
+    """Replayable stream over the events fixture or a staged ``replay``
+    dir of events-shaped files.
 
     ``ts`` is normalized to event time exactly like the batch loader
     (schema probed from the footer), so stream and batch see identical
-    values.
+    values. ``file_per_batch`` delivers one file per micro-batch
+    (``maxFilesPerTrigger=1``, oldest mtime first).
     """
-    ensure_session_confs(spark)
-    _note_stream_input(table_path(sf_dir, "events"))
-    kind = _events_ts_kind(spark, sf_dir)
-    # Spark's file-stream source requires a directory: stream the fixture
-    # dir with a glob filter for the single-copy case; stage copies into a
-    # per-call replay dir when duplicate delivery is wanted (dedup ops).
-    reader = spark.readStream.schema(_events_raw_schema(kind))
-    fixture = table_path(sf_dir, "events")
-    if copies == 1:
-        if os.path.isdir(fixture):
-            # Directory-shaped table (cluster layout): stream it directly.
-            src = fixture
-        else:
-            reader = reader.option("pathGlobFilter", "events.parquet")
-            src = sf_dir
-    else:
-        src = work_dir("replay_")
-        for i in range(copies):
-            _copy_fixture(fixture, src, f"events_{i}")
-    return _normalize_ts(reader.parquet(src), kind)
+    raw, kind = _events_source(spark, sf_dir, replay, copies, file_per_batch)
+    return _normalize_ts(raw, kind)
+
+
+def raw_events_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    replay: str | None = None,
+    *,
+    file_per_batch: bool = False,
+) -> DataFrame:
+    """:func:`events_stream` with ``ts`` left in the fixture's physical
+    type: a landing zone that preserves the source schema, or a key that
+    never reads ``ts``."""
+    return _events_source(spark, sf_dir, replay, 1, file_per_batch)[0]
 
 
 # ---------------------------------------------------------------------------
 # Replay staging (VERDICT r8 item 1): the multi-file replay layouts the
 # streaming keys feed the file source (parity halves, residue chunks,
 # late splits, far-future sentinels) are pure functions of the events
-# fixture, yet before round 9 every key re-derived its layout with 1-4
-# Spark write jobs per invocation — ~70% of the stream bench group was
-# this scaffolding. _ReplayStage builds each layout ONCE per fixture
-# vintage with pyarrow (no Spark jobs at all) and hands out staged file
-# paths; keys copy them into PRIVATE work_dir replay dirs (ms), so
-# source/checkpoint isolation between keys is unchanged. Row values are
-# identical by construction: the splits partition the same fixture rows,
-# and the file source reads every file through the same explicit schema
-# it always used (the fixture itself is streamed raw elsewhere —
-# events_stream copies>1 — so pyarrow-written parquet of the same rows
-# is an equivalence already relied on).
+# fixture. _ReplayStage builds each layout ONCE per fixture vintage with
+# pyarrow (no Spark jobs) and probes the vintage's ts kind; a key picks
+# its split files, copies them into a PRIVATE replay dir with
+# _stage_replay_dir (so source/checkpoint isolation between keys holds)
+# and reads that dir through events_stream, the one reader. Row values
+# are identical by construction: the splits partition the same fixture
+# rows, and the reader applies the same explicit schema to every file
+# (the dedup keys already stream copies of the fixture itself, so
+# pyarrow-written parquet of the same rows is an equivalence relied on).
 # ---------------------------------------------------------------------------
 
 _STAGE_LOCK = threading.Lock()
@@ -390,8 +355,11 @@ class _ReplayStage:
 
     def __init__(self, spark: SparkSession, sf_dir: str) -> None:
         self.fixture = table_path(sf_dir, "events")
-        self.kind = _events_ts_kind(spark, sf_dir)
-        _note_stream_input(self.fixture)
+        # 'bigint' (legacy TIMESTAMP(NANOS) fixtures, readable only as raw
+        # longs under nanosAsLong) or 'timestamp' (µs, read as NTZ).
+        ensure_session_confs(spark)
+        dt = dict(spark.read.parquet(self.fixture).dtypes)["ts"]
+        self.kind = "bigint" if dt == "bigint" else "timestamp"
         self._dir = work_dir("stage_")
         self._lock = threading.Lock()
         self._splits: dict[str, list[str]] = {}
@@ -549,11 +517,9 @@ class _ReplayStage:
 
 def replay_stage(spark: SparkSession, sf_dir: str) -> _ReplayStage:
     """The staged-artifact registry for ``sf_dir``'s current fixture
-    vintage (keyed like _TS_KIND_CACHE: an in-place regeneration gets a
-    fresh stage, never stale files)."""
-    path = table_path(sf_dir, "events")
-    _note_stream_input(path)
-    key = _fixture_cache_key(path)
+    vintage (keyed by ``fixture_cache_key``: an in-place regeneration
+    gets a fresh stage, never stale files or a stale ts kind)."""
+    key = fixture_cache_key(table_path(sf_dir, "events"))
     with _STAGE_LOCK:
         stage = _STAGES.get(key)
     if stage is None:
@@ -564,33 +530,18 @@ def replay_stage(spark: SparkSession, sf_dir: str) -> _ReplayStage:
     return stage
 
 
-def _stage_replay_dir(
-    work: str, entries: list[tuple[str, str]], spacing: int = 30, dest: str = "replay"
-) -> None:
-    """Copy staged files into ``work``/``dest`` with strictly increasing
-    mtimes (the file source consumes oldest-first)."""
-    os.makedirs(f"{work}/{dest}", exist_ok=True)
+def _stage_replay_dir(work: str, entries: list[tuple[str, str]]) -> str:
+    """Copy ``(src, name)`` entries into ``work``/replay with strictly
+    increasing mtimes and return the dir: the file source consumes the
+    oldest file first."""
+    replay = f"{work}/replay"
+    os.makedirs(replay, exist_ok=True)
     now = time.time()
-    n = len(entries)
     for i, (src, name) in enumerate(entries):
-        dst = f"{work}/{dest}/{name}"
-        shutil.copy(src, dst)
-        mt = now - spacing * (n - 1 - i)
-        os.utime(dst, (mt, mt))
-
-
-def _stage_chunk_dir(
-    spark: SparkSession, sf_dir: str, work: str, klass: str
-) -> None:
-    """Copy a staged split class into ``work``/chunks with increasing
-    mtimes — the multi-micro-batch source layout for keys whose final
-    state is split-invariant."""
-    files = replay_stage(spark, sf_dir).splits(klass)
-    _stage_replay_dir(
-        work,
-        [(src, f"chunk_{i}.parquet") for i, src in enumerate(files)],
-        dest="chunks",
-    )
+        shutil.copy(src, f"{replay}/{name}")
+        mt = now - 30 * (len(entries) - 1 - i)
+        os.utime(f"{replay}/{name}", (mt, mt))
+    return replay
 
 
 _SINK_DIRS: list[str] = []
@@ -1204,9 +1155,6 @@ GROUP BY user_id, sess_id
 
 @register("q_stream_session_window", oracle=_STREAM_SESSION_ORACLE)
 def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session_confs(spark)
-    kind = _events_ts_kind(spark, sf_dir)
-    schema = _events_raw_schema(kind)
     stage = replay_stage(spark, sf_dir)
     src = work_dir("sess_replay_")
     _copy_fixture(table_path(sf_dir, "events"), src, "events")
@@ -1218,10 +1166,7 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{src}/z_sentinel.parquet",
         [(-1, stage.plus_hours(2), -1, "sentinel", 0.0, "{}")],
     )
-    raw = spark.readStream.schema(schema).option(
-        "recursiveFileLookup", "true"
-    ).parquet(src)
-    ev = _normalize_ts(raw, kind)
+    ev = events_stream(spark, sf_dir, src)
     agg = (
         ev.withWatermark("ts", "10 minutes")
         .groupBy(F.session_window("ts", "30 minutes"), "user_id")
@@ -1264,20 +1209,15 @@ GROUP BY 1, 2
 
 @register("q_stream_ivm_merge", oracle=_STREAM_IVM_ORACLE)
 def q_stream_ivm_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session_confs(spark)
-    kind = _events_ts_kind(spark, sf_dir)
-    schema = _events_raw_schema(kind)
     work = work_dir("ivm_")
     # Four staged event_id-residue chunk files so the file source yields
     # four micro-batches — the multi-batch path is the point of the test,
     # and the MERGE result is split-invariant by construction.
-    _stage_chunk_dir(spark, sf_dir, work, "eid4")
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/chunks")
+    chunks = replay_stage(spark, sf_dir).splits("eid4")
+    replay = _stage_replay_dir(
+        work, [(p, f"chunk_{i}.parquet") for i, p in enumerate(chunks)]
     )
-    ev = _normalize_ts(raw, kind)
+    ev = events_stream(spark, sf_dir, replay, file_per_batch=True)
     snap_state = {"version": -1}
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1339,19 +1279,14 @@ GROUP BY 1, 2
 
 @register("q_stream_rocksdb", oracle=_ROCKSDB_ORACLE)
 def q_stream_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session_confs(spark)
-    kind = _events_ts_kind(spark, sf_dir)
-    schema = _events_raw_schema(kind)
     work = work_dir("rocksdb_")
     # Staged residue chunks: multi-batch state-store exercise; the
     # complete-mode final aggregate is split-invariant.
-    _stage_chunk_dir(spark, sf_dir, work, "eid4")
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/chunks")
+    chunks = replay_stage(spark, sf_dir).splits("eid4")
+    replay = _stage_replay_dir(
+        work, [(p, f"chunk_{i}.parquet") for i, p in enumerate(chunks)]
     )
-    ev = _normalize_ts(raw, kind)
+    ev = events_stream(spark, sf_dir, replay, file_per_batch=True)
     agg = (
         ev.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour"), "event_type")
@@ -1489,9 +1424,6 @@ GROUP BY 1
 
 @register("q_stream_late_drop", oracle=_LATE_DROP_ORACLE)
 def q_stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session_confs(spark)
-    kind = _events_ts_kind(spark, sf_dir)
-    schema = _events_raw_schema(kind)
     work = work_dir("late_")
     # bulk / mid / late trio staged once per fixture vintage (late =
     # event_id%50==0 AND ts < max-2h; mid = %50==1 AND ts < max-1h; the
@@ -1499,16 +1431,11 @@ def q_stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows). Three replay files with explicit mtimes: the file source
     # (maxFilesPerTrigger=1, latestFirst=false) consumes oldest-first.
     bulk, mid, late = replay_stage(spark, sf_dir).splits("late3")
-    _stage_replay_dir(
+    replay = _stage_replay_dir(
         work,
         [(bulk, "a_bulk.parquet"), (mid, "b_mid.parquet"), (late, "c_late.parquet")],
     )
-    raw_s = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/replay")
-    )
-    ev = _normalize_ts(raw_s, kind)
+    ev = events_stream(spark, sf_dir, replay, file_per_batch=True)
     agg = (
         ev.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour"))
@@ -1545,7 +1472,6 @@ GROUP BY 1
 
 @register("q_stream_rate_source", oracle=_RATE_ORACLE)
 def q_stream_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session_confs(spark)
     src = (
         spark.readStream.format("rate-micro-batch")
         .option("rowsPerBatch", 500)
@@ -1655,7 +1581,6 @@ def _make_counter_stream_source():
 
 @register("src_python_stream_source", oracle=_PY_STREAM_ORACLE)
 def src_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session_confs(spark)
     spark.dataSource.register(_make_counter_stream_source())
     stream = spark.readStream.format("counter_stream").load()
     agg = stream.groupBy("bucket").agg(
@@ -1686,20 +1611,14 @@ GROUP BY event_type
 
 @register("q_stream_restart_exactly_once", oracle=_RESTART_ORACLE)
 def q_stream_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session_confs(spark)
-    kind = _events_ts_kind(spark, sf_dir)
-    schema = _events_raw_schema(kind)
     work = work_dir("restart_")
     # Two staged halves by event_id parity, delivered as separate replay
     # files (second lands only after the planned "crash").
     h1, h2 = replay_stage(spark, sf_dir).splits("eid2")
-    os.makedirs(f"{work}/replay")
-    shutil.copy(h1, f"{work}/replay/a_half.parquet")
+    replay = _stage_replay_dir(work, [(h1, "a_half.parquet")])
 
     def run_pass() -> None:
-        ev = _normalize_ts(
-            spark.readStream.schema(schema).parquet(f"{work}/replay"), kind
-        )
+        ev = events_stream(spark, sf_dir, replay)
         proj = ev.select(
             "event_id",
             "event_type",
@@ -1714,7 +1633,7 @@ def q_stream_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame
         )
 
     run_pass()  # first half drains, query stops (planned "crash" point)
-    shutil.copy(h2, f"{work}/replay/b_half.parquet")
+    shutil.copy(h2, f"{replay}/b_half.parquet")
     run_pass()  # fresh query, same checkpoint: resumes after half one
     sink = spark.read.parquet(f"{work}/sink")
     return sink.groupBy("event_type").agg(
@@ -1757,19 +1676,12 @@ GROUP BY e.event_type
 def q_stream_state_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    ensure_session_confs(spark)
-    kind = _events_ts_kind(spark, sf_dir)
-    schema = _events_raw_schema(kind)
     work = work_dir("evolve_")
     h1, h2 = replay_stage(spark, sf_dir).splits("eid2")
-    os.makedirs(f"{work}/replay")
-    shutil.copy(h1, f"{work}/replay/a_half.parquet")
+    replay = _stage_replay_dir(work, [(h1, "a_half.parquet")])
 
     def run_agg(aggs: list, ckpt: str) -> DataFrame:
-        ev = _normalize_ts(
-            spark.readStream.schema(schema).parquet(f"{work}/replay"), kind
-        )
-        agg = ev.groupBy("event_type").agg(*aggs)
+        agg = events_stream(spark, sf_dir, replay).groupBy("event_type").agg(*aggs)
         return run_to_memory(agg, "complete", checkpoint=ckpt)
 
     count_only = [F.count(F.lit(1)).alias("n")]
@@ -1785,7 +1697,7 @@ def q_stream_state_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fail mid-batch.
     phase1 = spark.createDataFrame(phase1.collect(), phase1.schema)
 
-    shutil.copy(h2, f"{work}/replay/b_half.parquet")
+    shutil.copy(h2, f"{replay}/b_half.parquet")
     refused = False
     try:
         run_agg(evolved, f"{work}/ckpt")
@@ -1853,19 +1765,16 @@ def _transform_with_state_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
         StatefulProcessorHandle,
     )
 
-    ensure_session_confs(spark)
-    kind = _events_ts_kind(spark, sf_dir)
-    schema = _events_raw_schema(kind)
     work = work_dir("tws_")
     # Staged parity halves: two micro-batches; per-user running state is
     # split-invariant (counts and sums re-aggregate).
-    _stage_chunk_dir(spark, sf_dir, work, "eid2")
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/chunks")
+    chunks = replay_stage(spark, sf_dir).splits("eid2")
+    replay = _stage_replay_dir(
+        work, [(p, f"chunk_{i}.parquet") for i, p in enumerate(chunks)]
     )
-    ev = _normalize_ts(raw, kind).select("user_id", "value")
+    ev = events_stream(spark, sf_dir, replay, file_per_batch=True).select(
+        "user_id", "value"
+    )
 
     class UserCounter(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -1971,39 +1880,28 @@ LEFT JOIN (SELECT user_id, ts, unnest([floor(epoch(ts) / 3600),
 
 @register("q_stream_outer_join", oracle=_STREAM_OUTER_ORACLE)
 def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session_confs(spark)
-    kind = _events_ts_kind(spark, sf_dir)
-    schema = _events_raw_schema(kind)
     work = work_dir("souter_")
     stage = replay_stage(spark, sf_dir)
-    os.makedirs(f"{work}/replay")
     # The full fixture must land as ONE delivery unit (see
-    # _ReplayStage.single_file — maxFilesPerTrigger=1 below makes any
+    # _ReplayStage.single_file — file_per_batch below makes any
     # multi-part delivery drop late rows); sentinels are pyarrow-written
     # (staged max(ts) + two tiny files replace four per-call Spark jobs).
-    shutil.copy(stage.single_file(), f"{work}/replay/a_events.parquet")
+    entries = [(stage.single_file(), "a_events.parquet")]
     for tag, uid, hrs in (("b", -1, 24), ("c", -2, 48)):
+        name = f"{tag}_sentinel.parquet"
         stage.write_events_rows(
-            f"{work}/replay/{tag}_sentinel.parquet",
+            f"{work}/{name}",
             [
                 (uid, stage.plus_hours(hrs), uid, "signup", 0.0, "{}"),
                 (uid, stage.plus_hours(hrs), uid, "purchase", 0.0, "{}"),
             ],
         )
-    now = time.time()
-    for i, name in enumerate(
-        ("a_events.parquet", "b_sentinel.parquet", "c_sentinel.parquet")
-    ):
-        os.utime(f"{work}/replay/{name}", (now - 60 + 30 * i, now - 60 + 30 * i))
+        entries.append((f"{work}/{name}", name))
+    replay = _stage_replay_dir(work, entries)
 
     def side(event_type: str, u: str, t: str) -> DataFrame:
-        raw_s = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{work}/replay")
-        )
         return (
-            _normalize_ts(raw_s, kind)
+            events_stream(spark, sf_dir, replay, file_per_batch=True)
             .filter(F.col("event_type") == event_type)
             .select(F.col("user_id").alias(u), F.col("ts").alias(t))
             .withWatermark(t, "1 hour")
@@ -2070,21 +1968,17 @@ def q_stream_stateful_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    ensure_session_confs(spark)
-    kind = _events_ts_kind(spark, sf_dir)
-    schema = _events_raw_schema(kind)
     work = work_dir("sto_")
     stage = replay_stage(spark, sf_dir)
     u0, u1 = stage.splits("uid2")
-    _stage_replay_dir(work, [(u0, "a_even.parquet"), (u1, "b_odd.parquet")], 60)
+    replay = _stage_replay_dir(
+        work, [(u0, "a_even.parquet"), (u1, "b_odd.parquet")]
+    )
     n_users = stage.n_users()
 
-    ev = _normalize_ts(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/replay"),
-        kind,
-    ).select("user_id", "value")
+    ev = events_stream(spark, sf_dir, replay, file_per_batch=True).select(
+        "user_id", "value"
+    )
 
     def flush_on_timeout(key, pdf_iter, state):
         import numpy as np
@@ -2237,12 +2131,11 @@ GROUP BY 1
 
 @register("q_stream_dim_refresh", oracle=_STREAM_DIM_REFRESH_ORACLE)
 def q_stream_dim_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session_confs(spark)
-    kind = _events_ts_kind(spark, sf_dir)
-    schema = _events_raw_schema(kind)
     work = work_dir("dimref_")
     h0, h1 = replay_stage(spark, sf_dir).splits("eid2")
-    _stage_replay_dir(work, [(h0, "a_even.parquet"), (h1, "b_odd.parquet")], 60)
+    replay = _stage_replay_dir(
+        work, [(h0, "a_even.parquet"), (h1, "b_odd.parquet")]
+    )
 
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
@@ -2257,12 +2150,7 @@ def q_stream_dim_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).write.mode("overwrite").parquet(f"{work}/dim")
 
     write_dim("v1")
-    ev = _normalize_ts(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/replay"),
-        kind,
-    )
+    ev = events_stream(spark, sf_dir, replay, file_per_batch=True)
 
     def enrich(batch_df: DataFrame, batch_id: int) -> None:
         # Re-read the dimension EVERY batch: this is the refresh — a
@@ -2319,9 +2207,6 @@ GROUP BY event_type
 
 @register("q_stream_medallion", oracle=_MEDALLION_ORACLE)
 def q_stream_medallion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session_confs(spark)
-    kind = _events_ts_kind(spark, sf_dir)
-    schema = _events_raw_schema(kind)
     work = work_dir("medal_")
 
     def drain(df: DataFrame, path: str, ckpt: str) -> None:
@@ -2334,24 +2219,11 @@ def q_stream_medallion(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # bronze: raw landing zone (append-only, source schema preserved).
-    # Directory-shaped tables stream directly; single-file fixtures
-    # stream the parent dir with a glob pinned to the one file (a glob
-    # filter matches LEAF files only, so it would match nothing inside
-    # a directory table — the r10 multi-file rung caught exactly that:
-    # bronze landed 0 rows and gold emitted an empty rollup).
-    fixture = table_path(sf_dir, "events")
-    if os.path.isdir(fixture):
-        raw = spark.readStream.schema(schema).parquet(fixture)
-    else:
-        raw = spark.readStream.schema(schema).option(
-            "pathGlobFilter", "events.parquet"
-        ).parquet(sf_dir)
-    drain(raw, f"{work}/bronze", f"{work}/ckpt_bronze")
+    drain(raw_events_stream(spark, sf_dir), f"{work}/bronze", f"{work}/ckpt_bronze")
 
     # silver: cleaned + typed, streamed FROM bronze
-    bronze = spark.readStream.schema(schema).parquet(f"{work}/bronze")
     silver_df = (
-        _normalize_ts(bronze, kind)
+        events_stream(spark, sf_dir, f"{work}/bronze")
         .filter((F.col("event_type") != "error") & F.col("user_id").isNotNull())
         .select(
             "event_id",
@@ -2400,13 +2272,9 @@ GROUP BY event_type
 
 @register("q_stream_idempotent_batchid", oracle=_IDEMPOTENT_ORACLE)
 def q_stream_idempotent_batchid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session_confs(spark)
-    kind = _events_ts_kind(spark, sf_dir)
-    schema = _events_raw_schema(kind)
     work = work_dir("idem_")
     h1, h2 = replay_stage(spark, sf_dir).splits("eid2")
-    os.makedirs(f"{work}/replay")
-    shutil.copy(h1, f"{work}/replay/a_half.parquet")
+    replay = _stage_replay_dir(work, [(h1, "a_half.parquet")])
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         # batch_id IS the idempotency key: overwrite-into-own-partition
@@ -2422,11 +2290,9 @@ def q_stream_idempotent_batchid(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def run_pass() -> None:
-        ev = _normalize_ts(
-            spark.readStream.schema(schema).parquet(f"{work}/replay"), kind
-        )
         _drain(
-            ev.writeStream.foreachBatch(write_batch)
+            events_stream(spark, sf_dir, replay)
+            .writeStream.foreachBatch(write_batch)
             .option("checkpointLocation", f"{work}/checkpoint"),
             spark,
         )
@@ -2434,13 +2300,8 @@ def q_stream_idempotent_batchid(spark: SparkSession, sf_dir: str) -> DataFrame:
     run_pass()  # batch 0 lands
     # The RETRY: re-deliver batch 0's exact payload (post-commit crash →
     # the batch runs again on restart). Overwrite semantics must absorb it.
-    write_batch(
-        _normalize_ts(
-            spark.read.schema(schema).parquet(f"{work}/replay"), kind
-        ),
-        0,
-    )
-    shutil.copy(h2, f"{work}/replay/b_half.parquet")
+    write_batch(spark.read.parquet(replay), 0)
+    shutil.copy(h2, f"{replay}/b_half.parquet")
     run_pass()  # same checkpoint: resumes at batch 1
     sink = spark.read.parquet(f"{work}/sink")
     return sink.groupBy("event_type").agg(
@@ -2516,19 +2377,12 @@ GROUP BY 1
 def q_stream_listener(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.streaming.listener import StreamingQueryListener
 
-    ensure_session_confs(spark)
-    kind = _events_ts_kind(spark, sf_dir)
-    schema = _events_raw_schema(kind)
     work = work_dir("listener_")
     # Staged residue chunks; explicit increasing mtimes pin replay order
     # = residue order.
-    _stage_replay_dir(
-        work,
-        [
-            (p, f"chunk_{i}.parquet")
-            for i, p in enumerate(replay_stage(spark, sf_dir).splits("eid4"))
-        ],
-        spacing=1,
+    chunks = replay_stage(spark, sf_dir).splits("eid4")
+    replay = _stage_replay_dir(
+        work, [(p, f"chunk_{i}.parquet") for i, p in enumerate(chunks)]
     )
 
     progress: list[tuple[str, int, int]] = []
@@ -2557,9 +2411,7 @@ def q_stream_listener(spark: SparkSession, sf_dir: str) -> DataFrame:
     listener = _CaptureListener()
     spark.streams.addListener(listener)
     try:
-        ev = spark.readStream.schema(schema).option(
-            "maxFilesPerTrigger", 1
-        ).parquet(f"{work}/replay")
+        ev = events_stream(spark, sf_dir, replay, file_per_batch=True)
         run_to_memory(ev.select("event_id"), "append")
         watched = LAST_DRAIN.record["query_id"]
         # The listener bus is asynchronous: progress events can trail the
@@ -2703,18 +2555,15 @@ def _scm_cell(r_col: str) -> F.Column:
 
 @register("q_stream_countmin", oracle=_STREAM_COUNTMIN_ORACLE)
 def q_stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session_confs(spark)
-    kind = _events_ts_kind(spark, sf_dir)
-    schema = _events_raw_schema(kind)
     work = work_dir("scm_")
     # Staged residue chunks: the sketch is a sum over cells, so the
-    # final merged counters are split-invariant.
-    _stage_chunk_dir(spark, sf_dir, work, "eid4")
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/chunks")
+    # final merged counters are split-invariant. The sketch reads
+    # user_id only, so ts stays raw.
+    chunks = replay_stage(spark, sf_dir).splits("eid4")
+    replay = _stage_replay_dir(
+        work, [(p, f"chunk_{i}.parquet") for i, p in enumerate(chunks)]
     )
+    raw = raw_events_stream(spark, sf_dir, replay, file_per_batch=True)
     snap_state = {"version": -1}
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -2752,8 +2601,7 @@ def q_stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sketch = spark.read.parquet(f"{work}/sketch_v{snap_state['version']}")
     uc = (
-        spark.read.schema(schema)
-        .parquet(table_path(sf_dir, "events"))
+        load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
@@ -2838,25 +2686,14 @@ GROUP BY 1, 2, w.chunk_max_s, w.prior_max_s
 
 @register("q_stream_out_of_order", oracle=_STREAM_OOO_ORACLE)
 def q_stream_out_of_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session_confs(spark)
-    kind = _events_ts_kind(spark, sf_dir)
-    schema = _events_raw_schema(kind)
     work = work_dir("soo_")
     # Staged residue chunks replayed in residue order (mtime-pinned).
-    _stage_replay_dir(
+    chunks = replay_stage(spark, sf_dir).splits("eid4")
+    replay = _stage_replay_dir(
         work,
-        [
-            (p, f"{chr(ord('a') + k)}_chunk.parquet")
-            for k, p in enumerate(replay_stage(spark, sf_dir).splits("eid4"))
-        ],
-        spacing=60,
+        [(p, f"{chr(ord('a') + k)}_chunk.parquet") for k, p in enumerate(chunks)],
     )
-    raw_s = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/replay")
-    )
-    ev = _normalize_ts(raw_s, kind)
+    ev = events_stream(spark, sf_dir, replay, file_per_batch=True)
     state = {"max_s": None}
     rows: list[tuple[int, int, int, int]] = []
 
@@ -2932,7 +2769,6 @@ FROM (
 ) WHERE rn = 1
 """)
 def q_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session_confs(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate"
     )

@@ -2,8 +2,8 @@
 
 The driver has regenerated testdata with events.ts stored as
 TIMESTAMP(NANOS) in past vintages (unreadable by Spark except as raw
-longs via the nanosAsLong conf; see catalog.load_table and
-stream_queries._events_ts_kind). The engine carries a dedicated branch
+longs via the nanosAsLong conf; see catalog.load_table and the vintage
+probe in stream_queries._ReplayStage). The engine carries a dedicated branch
 for that vintage, pinned by unit tests on the two load paths — this
 script makes the FULL-registry rung possible: it rewrites events.ts as
 pyarrow timestamp[ns] (values are µs-aligned, so no truncation ambiguity

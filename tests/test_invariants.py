@@ -2088,3 +2088,59 @@ def test_stream_queries_drain_in_one_place():
     assert starts == [("_drain", "start")], f"stream starts: {starts}"
     outside = [c for c in calls if c[0] != "_drain"]
     assert not outside, f"stream lifecycle calls outside _drain: {outside}"
+
+
+def test_stream_queries_replay_in_one_place():
+    """Every events replay in stream_queries.py is read by one reader,
+    ``_events_source`` (behind ``events_stream``/``raw_events_stream``):
+    only it and ``_ReplayStage`` build the raw events schema, normalize
+    ``ts`` or note the replay input size, and no other function opens a
+    ``readStream`` except the keys whose source is not events-shaped.
+    Session confs are applied once, by ``stream_session`` and the
+    vintage probe. A new key that hand-builds its events reader fails
+    here; stage its files with ``_stage_replay_dir`` and pass the dir
+    to ``events_stream``."""
+    import ast
+    from pathlib import Path
+
+    from data_ingestion_service_spark.streaming import stream_queries as sq
+
+    allowed = {
+        "_events_raw_schema": {"_events_source", "_ReplayStage"},
+        "_normalize_ts": {"events_stream", "_ReplayStage"},
+        "_note_stream_input": {"_events_source"},
+        "ensure_session_confs": {"stream_session", "_ReplayStage.__init__"},
+        # Sources that are not the events replay: a generator, a
+        # Python data source, and medallion's gold pass over silver.
+        "readStream": {
+            "_events_source",
+            "q_stream_rate_source",
+            "src_python_stream_source",
+            "q_stream_medallion",
+        },
+    }
+    found: list[tuple[str, str]] = []  # (name, enclosing scope)
+
+    def visit(node, scope):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.Call) and isinstance(child.func, ast.Name):
+                if child.func.id in allowed:
+                    found.append((child.func.id, scope))
+            if isinstance(child, ast.Attribute) and child.attr == "readStream":
+                found.append(("readStream", scope))
+            inner = scope
+            if isinstance(child, (ast.FunctionDef, ast.ClassDef)):
+                inner = child.name if scope is None else f"{scope}.{child.name}"
+            visit(child, inner)
+
+    visit(ast.parse(Path(sq.__file__).read_text()), None)
+
+    def ok(name, scope):
+        return scope is not None and any(
+            scope == a or scope.startswith(a + ".") for a in allowed[name]
+        )
+
+    bad = sorted({(n, s) for n, s in found if not ok(n, s)})
+    assert not bad, f"events replay built outside the reader: {bad}"
+    assert [s for n, s in found if n == "_normalize_ts"] == ["events_stream"]
+    assert [s for n, s in found if n == "_note_stream_input"] == ["_events_source"]

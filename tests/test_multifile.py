@@ -16,7 +16,13 @@ import os
 import pyarrow.parquet as pq
 import pytest
 
-from data_ingestion_service_spark.catalog import TABLES, table_path
+from data_ingestion_service_spark.catalog import (
+    TABLES,
+    fixture_cache_key,
+    fixture_parts,
+    load_table,
+    table_path,
+)
 from data_ingestion_service_spark.streaming import stream_queries as sq
 
 from __spark_entry__ import queries
@@ -47,9 +53,9 @@ def multi_sf_dir(sf_dir, tmp_path_factory):
 
 
 def test_fixture_parts_file_and_dir(sf_dir, multi_sf_dir):
-    single = sq._fixture_parts(table_path(sf_dir, "events"))
+    single = fixture_parts(table_path(sf_dir, "events"))
     assert single == [table_path(sf_dir, "events")]
-    parts = sq._fixture_parts(table_path(multi_sf_dir, "events"))
+    parts = fixture_parts(table_path(multi_sf_dir, "events"))
     assert len(parts) == 3 and parts == sorted(parts)
     assert all(p.endswith(".parquet") for p in parts)
 
@@ -60,11 +66,11 @@ def test_fixture_parts_rejects_nested_layout(tmp_path):
     tdir = tmp_path / "events.parquet"
     (tdir / "dt=2024-01-01").mkdir(parents=True)
     with pytest.raises(ValueError, match="no top-level"):
-        sq._fixture_parts(str(tdir))
+        fixture_parts(str(tdir))
 
 
 def test_cache_key_tracks_directory_parts(multi_sf_dir, tmp_path):
-    """_fixture_cache_key must change when a part file is rewritten in
+    """fixture_cache_key must change when a part file is rewritten in
     place, even though the directory inode's stat may not (the stale-
     vintage hazard for directory tables — ADVICE r10 medium)."""
     import shutil
@@ -72,20 +78,43 @@ def test_cache_key_tracks_directory_parts(multi_sf_dir, tmp_path):
     src = table_path(multi_sf_dir, "events")
     work = tmp_path / "events.parquet"
     shutil.copytree(src, work, symlinks=False)
-    k1 = sq._fixture_cache_key(str(work))
+    k1 = fixture_cache_key(str(work))
     part = sorted(work.iterdir())[1]
     t = pq.read_table(part)
     pq.write_table(t.slice(0, max(1, t.num_rows - 1)), str(part))
-    k2 = sq._fixture_cache_key(str(work))
+    k2 = fixture_cache_key(str(work))
     assert k1 != k2
     # and it covers every part: keys are stable across repeated calls
-    assert k2 == sq._fixture_cache_key(str(work))
+    assert k2 == fixture_cache_key(str(work))
+
+
+def test_load_table_sees_part_rewritten_in_place(spark, tmp_path):
+    """A part rewritten in place leaves the directory's own mtime and
+    size unchanged; load_table must still plan over the new bytes. A
+    plan cached by the directory's stat keeps the old file listing and
+    silently loses the rewritten part's new rows."""
+    import pyarrow as pa
+
+    tdir = tmp_path / "region.parquet"
+    tdir.mkdir()
+    for k in range(2):
+        pq.write_table(
+            pa.table({"k": list(range(5))}), str(tdir / f"part-{k:05d}.parquet")
+        )
+    assert load_table(spark, str(tmp_path), "region").count() == 10
+    st = os.stat(tdir)
+    pq.write_table(
+        pa.table({"k": list(range(2000))}), str(tdir / "part-00001.parquet")
+    )
+    os.utime(tdir, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert os.stat(tdir).st_mtime_ns == st.st_mtime_ns
+    assert load_table(spark, str(tmp_path), "region").count() == 2005
 
 
 def test_note_stream_input_sums_directory(multi_sf_dir):
     path = table_path(multi_sf_dir, "events")
     sq._note_stream_input(path)
-    total = sum(os.path.getsize(p) for p in sq._fixture_parts(path))
+    total = sum(os.path.getsize(p) for p in fixture_parts(path))
     assert sq._STREAM_INPUT.nbytes == total
     assert total > 1000  # real bytes, not the dir inode size
 
