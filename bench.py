@@ -69,13 +69,10 @@ LLM_OPS = [
 
 # Alternative implementations of capabilities ALREADY counted in
 # llm_ops, reported in a separate `variants` JSON section (r4 verdict
-# item 7): q_dup_clusters_pj is pointer-jumping connected components
-# over the SAME pair index q_dup_clusters already builds and clusters —
-# summing both into llm_ops_total double-counted one capability. The pj
-# variant costs ~2x plain on this diameter-2 fixture (2 shuffles/round
-# to cut ROUND count — the long-chain insurance; the 32-chain test pins
-# <=10 rounds where plain propagation needs 31) and that plain-vs-pj
-# delta IS the measurement, so it stays benched — just not totaled.
+# item 7) so llm_ops_total never double-counts one capability.
+# q_dup_clusters_pj is the same function as q_dup_clusters and reads the
+# same labels store; it runs after llm_ops, so it times the warm probe.
+# The section and its field names stay: the summary contract fixes them.
 VARIANT_OPS = [
     "q_dup_clusters_pj",
 ]

@@ -2,9 +2,10 @@
 round 7 — pure move, no behavior change): LSH/PQ/multiprobe ANN, minhash
 estimation, containment, exact-substring fingerprints (Karp-Rabin windows,
 winnowing), the dedup waterfall and its measurement layer (threshold sweep,
-best-survivor, incremental admission, dup-vs-quality bias), semantic dedup,
-pointer-jumping connected components, and the contamination/decontamination
-tier (test-set leakage, n-gram decontamination, split/cross-source leaks).
+best-survivor, incremental admission, dup-vs-quality bias; its clusters come
+from llm_extended.q_dup_clusters), semantic dedup, and the
+contamination/decontamination tier (test-set leakage, n-gram
+decontamination, split/cross-source leaks).
 
 All candidate generation is bucketed/blocked (bands, posting lists with the
 hot-shingle cap, IVF cells, PQ codes) — nothing all-pairs; shared stores
@@ -34,6 +35,7 @@ from data_ingestion_service_spark.operators.llm_extended import (
     _MH_COL_LIST,
     _MH_MIN_COLS,
     embed_near_dup_pairs,
+    q_dup_clusters,
 )
 
 from data_ingestion_service_spark.registry import register
@@ -659,9 +661,7 @@ def q_near_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     a training-data build actually materializes. Reuses the cached pair
     index and converged labels; the incremental cost is one broadcast
     join of the label table against the corpus scan."""
-    from data_ingestion_service_spark.registry import QUERIES
-
-    comp = QUERIES["q_dup_clusters"](spark, sf_dir).select("doc_id", "rep_id")
+    comp = q_dup_clusters(spark, sf_dir).select("doc_id", "rep_id")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", F.size(tokens("text")).alias("n_tok")
     )
@@ -1082,120 +1082,6 @@ def q_substring_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 # ---------------------------------------------------------------------------
-# q_dup_clusters_pj — connected components by pointer jumping.
-# ---------------------------------------------------------------------------
-
-
-def pointer_jump_components(
-    pairs: DataFrame, max_iter: int = 20
-) -> tuple[DataFrame, int]:
-    """Min-label connected components with pointer jumping.
-
-    Each round does (1) a neighbor-min step (one shuffle keyed by dst —
-    self-loops fold "keep own label" into the same aggregation, as in
-    q_dup_clusters) and then (2) a pointer-jump step label(v) <-
-    label(label(v)) (one self-join shuffle). Jumping halves every
-    label-chain's depth, so a diameter-d component converges in O(log d)
-    rounds instead of O(d) — on a 100 TB corpus where one viral document
-    chains thousands of near-dups together, that is the difference
-    between ~12 and ~1000s of shuffles. Returns (labels, rounds_used);
-    labels = (doc_id, label) for every doc touched by a pair.
-    """
-    touched = (
-        pairs.select(F.col("doc_a").alias("doc_id"))
-        .union(pairs.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    # r12: localCheckpoint, not persist — every round's nbr_min and lut
-    # reference `edges`, and with persist the pair store's ~100-exchange
-    # cached lineage is pasted per reference (the pj store's warm plan
-    # printed 16,334 Exchange nodes; optimizer food, guide §3.3). A
-    # LogicalRDD of the tiny edge list keeps each round's plan
-    # constant-size. Cluster caveat as below: swap for reliable
-    # checkpoint() where executor loss matters.
-    edges = (
-        pairs.select("doc_a", "doc_b")
-        .union(pairs.select(F.col("doc_b"), F.col("doc_a")))
-        .toDF("src", "dst")
-        .union(
-            touched.select(F.col("doc_id").alias("src"), F.col("doc_id").alias("dst"))
-        )
-        .localCheckpoint()
-    )
-    labels = touched.select("doc_id", F.col("doc_id").alias("label")).persist()
-    prev_sum = None
-    rounds = 0
-    for it in range(max_iter):
-        rounds = it + 1
-        nbr_min = (
-            edges.join(labels, edges.src == labels.doc_id)
-            .groupBy(F.col("dst").alias("doc_id"))
-            .agg(F.min("label").alias("label"))
-        )
-        # Pointer jump THROUGH THE PREVIOUS round's labels (already
-        # persisted, so the lookup side is a cache hit instead of a
-        # same-round self-join that would recompute the aggregation
-        # twice per action). prev[x] <= x for every touched x (labels
-        # start at the id and only decrease), so the jump is still
-        # monotone; on a chain it still compounds the lookback
-        # exponentially (pinned by the 32-chain convergence test). A
-        # label always IS some touched doc's id, so the left join only
-        # misses for rows already at a root — coalesce covers it.
-        lut = labels.select(
-            F.col("doc_id").alias("lbl_id"), F.col("label").alias("lbl_label")
-        )
-        new_labels = (
-            nbr_min.join(lut, nbr_min.label == lut.lbl_id, "left")
-            .select(
-                "doc_id", F.coalesce("lbl_label", "label").alias("label")
-            )
-        )
-        # Same lineage-control tradeoff as q_dup_clusters: eager local
-        # checkpoint every 3rd round keeps plan depth O(1); swap for
-        # reliable checkpoint() on a real cluster (executor-loss safety).
-        if (it + 1) % 3 == 0:
-            new_labels = new_labels.localCheckpoint()
-        else:
-            new_labels = new_labels.persist()
-        cur_sum = new_labels.agg(F.sum("label")).collect()[0][0]
-        labels.unpersist()
-        labels = new_labels
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    # Converged labels become a session store consumers paste into their
-    # plans — truncate to a LogicalRDD so those plans stay constant-size
-    # (r12; no-op cost when the last round already localCheckpointed).
-    final = labels.localCheckpoint()
-    labels.unpersist()
-    return final, rounds
-
-
-@register("q_dup_clusters_pj", oracle=_DUP_CLUSTERS_ORACLE)
-def q_dup_clusters_pj(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same result (and same recursive-CTE oracle) as q_dup_clusters,
-    computed with pointer jumping — the variant to reach for when
-    duplicate clusters are long chains rather than dense blobs."""
-    labels = session_persisted(
-        spark,
-        ("dup_cluster_labels_pj", sf_dir),
-        lambda: pointer_jump_components(near_dup_pairs(spark, sf_dir))[0],
-    )
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    comp = docs.join(labels, "doc_id", "left").select(
-        "doc_id", F.coalesce("label", "doc_id").alias("rep_id")
-    )
-    # Cluster size via a count window over rep_id — ONE shuffle, one
-    # pass (r12: the same shape q_dup_clusters ships; the previous
-    # groupBy+broadcast-join-back evaluated the `comp` lineage twice —
-    # once to build the sizes table, once as the probe side — plus a
-    # broadcast job). Cluster sizes are bounded, so no window skew.
-    w = Window.partitionBy("rep_id")
-    return comp.select(
-        "doc_id", "rep_id", F.count(F.lit(1)).over(w).alias("n_members")
-    )
-
-# ---------------------------------------------------------------------------
 # q_ngram_decontaminate — n-gram-level test-set decontamination (the
 # GPT-3-style "13-gram filter", here 8-grams): a TRAIN document is
 # contaminated if it shares ANY token 8-gram with any TEST document —
@@ -1539,11 +1425,7 @@ def q_dedup_best_survivor(spark: SparkSession, sf_dir: str) -> DataFrame:
     # + one groupBy — measured r11, census-profile run). The store build
     # is shared with q_dup_clusters/q_dedup_waterfall and amortizes
     # across the family, so there is no per-key fold left to make.
-    from pyspark.sql import Window
-
-    from data_ingestion_service_spark.registry import QUERIES
-
-    comp = QUERIES["q_dup_clusters"](spark, sf_dir).select("doc_id", "rep_id")
+    comp = q_dup_clusters(spark, sf_dir).select("doc_id", "rep_id")
     t = F.split("text", " ")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
@@ -1655,8 +1537,6 @@ def q_dedup_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stage jobs share one analyzed plan (no per-job py4j/analysis
     # overhead — the r9 fix removed the 5 eager driver actions, which
     # were the expensive kind).
-    from data_ingestion_service_spark.registry import QUERIES
-
     docs = load_table(spark, sf_dir, "documents")
     # r9 action-census fix: the five tier counts used to be five eager
     # .count() actions + driver-side ratio math (5 x the per-action
@@ -1691,7 +1571,7 @@ def q_dedup_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_sub_kept = exact_reps.join(sub_dropped, "doc_id", "left_anti").agg(
         F.count(F.lit(1)).alias("n_substring_kept")
     )
-    comp = QUERIES["q_dup_clusters"](spark, sf_dir).select("doc_id", "rep_id")
+    comp = q_dup_clusters(spark, sf_dir).select("doc_id", "rep_id")
     survivors = comp.filter(F.col("rep_id") == F.col("doc_id")).select("doc_id")
     n_surv = survivors.agg(F.count(F.lit(1)).alias("n_near_survivors"))
     is_train = (

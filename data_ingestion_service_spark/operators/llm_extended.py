@@ -1281,15 +1281,16 @@ def q_knn_ivf_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q_dup_clusters — duplicate-cluster formation: connected components over
 # the n-gram-Jaccard near-dup pair graph (the step after candidate
 # generation in a dedup pipeline: pairs -> clusters -> keep one rep per
-# cluster). Implemented as iterative min-label propagation — each
-# iteration is ONE shuffle (edges join labels, groupBy dst, min) and the
-# iteration count is the component diameter (tiny for similarity
-# clusters: duplicates of one source doc form near-cliques). At 100 TB
-# the same loop holds; the known refinement for adversarial long-chain
-# graphs is the large-star/small-star variant (Kiveris et al., "Connected
-# Components in MapReduce and Beyond"), which this structure extends to
-# directly. Oracle: DuckDB recursive CTE computing min reachable id —
-# exact transitive closure, feasible at oracle scale.
+# cluster). min_label_components is the package's one components loop:
+# min-label propagation, one shuffle per step, three steps per action.
+# From its second action on, each step also jumps through the labels the
+# action started from, so a long chain (one viral document chaining many
+# near-dups) converges in a few actions instead of one action per three
+# hops, while a dense blob (the usual case: duplicates of one source doc
+# form near-cliques) converges in one action of plain propagation. The
+# loop runs until the labels stop moving; there is no round cap. Oracle:
+# DuckDB recursive CTE computing min reachable id — exact transitive
+# closure, feasible at oracle scale.
 # ---------------------------------------------------------------------------
 
 _DUP_CLUSTERS_ORACLE = f"""
@@ -1351,102 +1352,97 @@ JOIN (SELECT rep_id, count(*) AS n_members FROM comp GROUP BY rep_id) s
 """
 
 
-def _dup_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Min-label propagation over the near-dup pair graph: final
-    (doc_id, label) for every doc touched by at least one pair.
-    Session-cached persisted — the converged labels are an index-like
-    artifact (probed by q_dup_clusters and any keep-one dedup stage), and
-    caching keeps the persisted-RDD count flat across repeat invocations."""
+def min_label_components(pairs: DataFrame) -> tuple[DataFrame, int]:
+    """Connected components of the graph whose edges are ``pairs``
+    (doc_a, doc_b). Returns (labels, actions): labels = (doc_id, label)
+    for every doc touched by a pair, label = the least doc_id of its
+    component; actions = how many converge-probe actions the loop ran.
 
-    def build() -> DataFrame:
-        pairs = near_dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
-        touched = (
-            pairs.select(F.col("doc_a").alias("doc_id"))
-            .union(pairs.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
+    A step is a neighbor-min: one join and one groupBy keyed by dst, with
+    self-loops folding "keep your own label" into the aggregation. From
+    the second action on, each step then jumps through the labels the
+    action started from, label(v) <- start(label(v)), which compounds the
+    lookback on a chain. The first action starts from the identity
+    labels, where the jump does nothing, so it runs the plain plan.
+    Labels never increase, so an action that does not converge lowers
+    the label sum by at least 1, and the loop ends without a cap.
+    """
+    pairs = pairs.select("doc_a", "doc_b")
+    touched = (
+        pairs.select(F.col("doc_a").alias("doc_id"))
+        .union(pairs.select(F.col("doc_b").alias("doc_id")))
+        .distinct()
+    )
+    # The pair store's cached lineage is a ~100-exchange analyzed tree,
+    # and every step references `edges` once. localCheckpoint truncates
+    # the tiny edge list to a LogicalRDD (one bounded materialization per
+    # build), so each action's plan is constant-size. Cluster caveat: swap
+    # for reliable checkpoint() where executor loss must not force a
+    # rebuild.
+    edges = (
+        pairs.union(pairs.select(F.col("doc_b"), F.col("doc_a")))
+        .toDF("src", "dst")
+        .union(
+            touched.select(
+                F.col("doc_id").alias("src"), F.col("doc_id").alias("dst")
+            )
         )
-        # Self-loops fold "keep your own label" into the neighbor-min
-        # itself: each iteration is then ONE join + ONE groupBy (a single
-        # shuffle keyed by dst) instead of join→groupBy→left-join — one
-        # exchange fewer per iteration, at any scale.
-        # r12 optimization (guide §3.3 "very large plans", the
-        # q_adamic_adar cut applied to the iteration loop): the pair
-        # store's cached lineage is a ~100-exchange analyzed tree, and
-        # every propagate() below references `edges` once per step — 21
-        # steps deep after 7 rounds, the warm q_dup_clusters plan printed
-        # 5,462 Exchange nodes and optimizer time dominated a result-sized
-        # graph computation. localCheckpoint truncates the tiny edge list
-        # to a LogicalRDD (one bounded materialization per build), so each
-        # round's plan is constant-size. Cluster caveat unchanged: swap
-        # for reliable checkpoint() where executor loss must not force a
-        # rebuild.
-        edges = (
-            pairs.union(pairs.select(F.col("doc_b"), F.col("doc_a")))
-            .toDF("src", "dst")
-            .union(
-                touched.select(
-                    F.col("doc_id").alias("src"), F.col("doc_id").alias("dst")
-                )
-            )
-            .localCheckpoint()
+        .localCheckpoint()
+    )
+    labels = touched.select("doc_id", F.col("doc_id").alias("label")).persist()
+
+    def step(lbl: DataFrame, start: DataFrame | None) -> DataFrame:
+        nbr = (
+            edges.join(lbl, edges.src == lbl.doc_id)
+            .groupBy(F.col("dst").alias("nbr_doc"))
+            .agg(F.min("label").alias("label"))
+            .select(F.col("nbr_doc").alias("doc_id"), "label")
         )
-        labels = touched.select("doc_id", F.col("doc_id").alias("label")).persist()
+        if start is None:
+            return nbr
+        # A label is always some touched doc's id, so the left join only
+        # misses for rows whose label is already a root; coalesce keeps it.
+        return nbr.join(start, nbr.label == start.start_id, "left").select(
+            "doc_id", F.coalesce("start_label", "label").alias("label")
+        )
 
-        def propagate(lbl: DataFrame) -> DataFrame:
-            return (
-                edges.join(lbl, edges.src == lbl.doc_id)
-                .groupBy(F.col("dst").alias("nbr_doc"))
-                .agg(F.min("label").alias("label"))
-                .select(F.col("nbr_doc").alias("doc_id"), "label")
-            )
-
-        for it in range(7):
-            # THREE propagation steps per ACTION, with the convergence
-            # probe folded into that same action: materialize `mid`
-            # (2 steps, persisted) and `nxt` (1 more step, persisted),
-            # and collect sum(mid) UNION sum(nxt) in one job. Labels
-            # only decrease, so sum(mid) == sum(nxt) proves `mid` was
-            # already a fixed point — convergence is OBSERVED without
-            # the former separate confirm-round action. Each action on
-            # this per-iteration-tiny graph costs Spark's fixed
-            # scheduling floor, so a diameter-2 blob now converges in
-            # ONE action (formerly three: two propagate+sum rounds plus
-            # a confirm), and longer graphs advance 3 steps per floor
-            # payment. Lineage per action stays a bounded 3 shuffles on
-            # top of the previous round's PERSISTED labels; the persist
-            # chain keeps recompute O(1) while plan depth grows only
-            # linearly in rounds (bounded: 7 rounds = 21 steps covers
-            # any graph the upstream hot-shingle cap admits; production
-            # long-chain graphs use the pointer-jumping variant).
-            # Cluster caveat (deliberate local-mode tradeoff): on a real
-            # cluster swap the persists for reliable checkpoint() so an
-            # executor loss cannot force recomputing the whole chain.
-            mid = propagate(propagate(labels)).persist()
-            nxt = propagate(mid).persist()
-            tag = F.lit(0).alias("which")
-            sums = (
-                mid.agg(F.sum("label").alias("s"), tag)
-                .unionAll(nxt.agg(F.sum("label").alias("s"), F.lit(1).alias("which")))
-                .collect()
-            )
-            by_tag = {r.which: r.s for r in sums}
-            labels.unpersist()
-            mid.unpersist()
-            labels = nxt
-            if by_tag[0] == by_tag[1]:
-                break
-        # Truncate the converged labels too (they are the session store
-        # every consumer pastes into its plan): a LogicalRDD of the tiny
-        # label table keeps q_dup_clusters' warm plan constant-size. The
-        # checkpoint reads the already-persisted nxt, then the loop
-        # persist is released.
-        final = labels.localCheckpoint()
+    start = None
+    actions = 0
+    while True:
+        actions += 1
+        # Three steps per action, with the convergence probe folded into
+        # that same action: persist `mid` (2 steps) and `nxt` (1 more),
+        # and collect sum(mid) UNION sum(nxt) in one job. Labels only
+        # decrease, so equal sums prove `mid` was already a fixed point.
+        # Each action on this tiny graph pays Spark's fixed scheduling
+        # floor, so a diameter-2 blob converges in ONE action.
+        mid = step(step(labels, start), start).persist()
+        nxt = step(mid, start).persist()
+        sums = (
+            mid.agg(F.sum("label").alias("s"), F.lit(0).alias("which"))
+            .unionAll(nxt.agg(F.sum("label").alias("s"), F.lit(1).alias("which")))
+            .collect()
+        )
+        by_tag = {r.which: r.s for r in sums}
         labels.unpersist()
-        return final
+        mid.unpersist()
+        # Truncate every action's labels to a LogicalRDD: the next
+        # action's jumps reference them once per step, and without the
+        # checkpoint each jump doubles the plan. The converged labels are
+        # the session store consumers paste into their plans, so they
+        # stay constant-size too. Cluster caveat as for `edges`.
+        labels = nxt.localCheckpoint()
+        nxt.unpersist()
+        if by_tag[0] == by_tag[1]:
+            return labels, actions
+        start = labels.select(
+            F.col("doc_id").alias("start_id"), F.col("label").alias("start_label")
+        )
 
-    return session_persisted(spark, ("dup_cluster_labels", sf_dir), build)
 
-
+# q_dup_clusters_pj — the same key under a second name: the components
+# loop jumps pointers itself, so both names read one store.
+@register("q_dup_clusters_pj", oracle=_DUP_CLUSTERS_ORACLE)
 @register("q_dup_clusters", oracle=_DUP_CLUSTERS_ORACLE)
 def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Iterate ONLY over docs that appear in some pair: singleton docs are
@@ -1455,16 +1451,19 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 100 TB the touched set is the tiny near-dup fraction; the corpus is
     # the whole table).
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    labels = _dup_cluster_labels(spark, sf_dir)
+    labels = session_persisted(
+        spark,
+        ("dup_cluster_labels", sf_dir),
+        lambda: min_label_components(near_dup_pairs(spark, sf_dir))[0],
+    )
     # Singletons (docs in no pair) rejoin as their own representative.
     comp = docs.join(labels, "doc_id", "left").select(
         "doc_id", F.coalesce("label", "doc_id").alias("rep_id")
     )
-    # Cluster size via a count window over rep_id — ONE shuffle, one pass.
-    # The previous groupBy+broadcast-join shape evaluated the unpersisted
-    # `comp` lineage twice (once to build the sizes table, once as the
-    # probe side) plus a broadcast job; the window shuffles by the same
-    # key the groupBy would and cluster sizes are bounded, so no skew.
+    # Cluster size via a count window over rep_id — ONE shuffle, one pass;
+    # a groupBy plus join-back would evaluate the unpersisted `comp`
+    # lineage twice and add a broadcast job. A window gets no partial
+    # aggregation, so one mega cluster lands in one task (ROADMAP item 8).
     w = Window.partitionBy("rep_id")
     return comp.select(
         "doc_id", "rep_id", F.count(F.lit(1)).over(w).alias("n_members")

@@ -435,35 +435,48 @@ def test_replay_stage_handles_nanos_vintage(spark, sf_dir, tmp_path):
 
 
 def test_pointer_jump_converges_logarithmically(spark):
-    """A 32-node chain graph (worst case for min-label propagation: the
-    min label crawls one hop per neighbor-min round, needing ~31 rounds)
-    must converge in O(log n) pointer-jumping rounds — the property that
-    makes q_dup_clusters_pj the right variant for long-chain duplicate
-    clusters at scale."""
-    from data_ingestion_service_spark.operators.corpus_dedup import (
-        pointer_jump_components,
+    """Chain graphs are the worst case for min-label propagation: the min
+    label crawls one hop per step, so a 200-node chain needs 199 steps.
+    min_label_components jumps pointers from its second action on and
+    runs until the labels stop moving, so every chain collapses to label
+    0, the 32-chain within 4 actions. A loop capped at 7 actions of 3
+    steps returns unconverged labels on both chains."""
+    from data_ingestion_service_spark.operators.llm_extended import (
+        min_label_components,
     )
 
-    n = 32
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
+    for n, max_actions in ((32, 4), (200, None)):
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
+        )
+        labels, actions = min_label_components(pairs)
+        got = {r.doc_id: r.label for r in labels.collect()}
+        assert got == {i: 0 for i in range(n)}, f"{n}-chain must collapse to 0"
+        if max_actions is not None:
+            assert actions <= max_actions, f"{n}-chain took {actions} actions"
+
+
+def test_dup_cluster_keys_share_one_store(fresh_spark, sf_dir):
+    """q_dup_clusters and q_dup_clusters_pj are one function: running both
+    on a fresh session builds one dup-cluster labels store, and the
+    fixture's blob-shaped graph converges in one action."""
+    from data_ingestion_service_spark import session as session_mod
+    from data_ingestion_service_spark.operators.llm import near_dup_pairs
+    from data_ingestion_service_spark.operators.llm_extended import (
+        min_label_components,
     )
-    labels, rounds = pointer_jump_components(pairs, max_iter=20)
-    got = {r.doc_id: r.label for r in labels.collect()}
-    labels.unpersist()
-    assert got == {i: 0 for i in range(n)}, "chain must collapse to label 0"
-    # log2(32)=5; neighbor-min + jump more than halves depth per round.
-    # Plain propagation needs 31 rounds and would exhaust max_iter=20.
-    assert rounds <= 10, f"pointer jumping took {rounds} rounds on a 32-chain"
 
-
-def test_dup_cluster_variants_agree(run):
-    """q_dup_clusters (plain propagation) and q_dup_clusters_pj (pointer
-    jumping) must produce identical (doc_id, rep_id, n_members) sets —
-    two structurally different algorithms, one answer."""
-    a = sorted((r.doc_id, r.rep_id, r.n_members) for r in run("q_dup_clusters"))
-    b = sorted((r.doc_id, r.rep_id, r.n_members) for r in run("q_dup_clusters_pj"))
-    assert a == b
+    assert QUERIES["q_dup_clusters_pj"] is QUERIES["q_dup_clusters"]
+    for key in ("q_dup_clusters", "q_dup_clusters_pj"):
+        QUERIES[key](fresh_spark, sf_dir).collect()
+    keys = [
+        k[0]
+        for k in session_mod._DF_CACHE[fresh_spark]
+        if isinstance(k, tuple) and str(k[0]).startswith("dup_cluster_labels")
+    ]
+    assert keys == ["dup_cluster_labels"]
+    _, actions = min_label_components(near_dup_pairs(fresh_spark, sf_dir))
+    assert actions == 1
 
 
 def test_knn_lsh_candidates_bounded_by_exact(run):
