@@ -37,7 +37,6 @@ GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
 @register("q_grouping_sets", oracle=_GROUPING_SETS_ORACLE)
 def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    orders.createOrReplaceTempView("orders_gs")
     # GROUPING SETS has no DataFrame-API equivalent — this is the one spot
     # where the engine's own SQL front-end (spark.sql) is the idiomatic path.
     return spark.sql(
@@ -49,9 +48,10 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
             + CAST(grouping(o_orderpriority) AS BIGINT) AS gid,
           count(*)                    AS n_orders,
           round(sum(CAST(round(o_totalprice * 100) AS BIGINT)) / 100, 2) AS total_price
-        FROM orders_gs
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        """
+        """,
+        orders=orders,
     )
 
 

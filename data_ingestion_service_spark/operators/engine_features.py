@@ -17,14 +17,14 @@ import weakref
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_ingestion_service_spark.catalog import load_table
+from data_ingestion_service_spark.catalog import fixture_cache_key, load_table, table_path
 from data_ingestion_service_spark.functions import money
 from data_ingestion_service_spark.registry import register
-from data_ingestion_service_spark.session import work_dir
+from data_ingestion_service_spark.session import staged, work_dir
 
 # ---------------------------------------------------------------------------
 # q_sql_frontend — the same engine through its SQL API (spark.sql over
-# registered temp views): proves the surface is dual DataFrame/SQL.
+# the loaded frames): proves the surface is dual DataFrame/SQL.
 # ---------------------------------------------------------------------------
 
 _SQL_FRONTEND_ORACLE = """
@@ -42,9 +42,6 @@ GROUP BY n.n_name
 
 @register("q_sql_frontend", oracle=_SQL_FRONTEND_ORACLE)
 def q_sql_frontend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "nation").createOrReplaceTempView("v_nation")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("v_customer")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
     return spark.sql(
         """
         SELECT
@@ -54,11 +51,14 @@ def q_sql_frontend(spark: SparkSession, sf_dir: str) -> DataFrame:
           -- exact-cents sum (r10 float-sum audit)
           round(sum(CAST(floor(o.o_totalprice * 100 + 0.5) AS BIGINT)) / 100, 2)
             AS total_spend
-        FROM v_nation n
-        JOIN v_customer c ON c.c_nationkey = n.n_nationkey
-        JOIN v_orders o   ON o.o_custkey = c.c_custkey
+        FROM {nation} n
+        JOIN {customer} c ON c.c_nationkey = n.n_nationkey
+        JOIN {orders} o   ON o.o_custkey = c.c_custkey
         GROUP BY n.n_name
-        """
+        """,
+        nation=load_table(spark, sf_dir, "nation"),
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -458,13 +458,12 @@ WHERE year(o_orderdate) = 1997
 GROUP BY 1
 """
 
-_DPP_CACHE: dict[str, str] = {}
-
 
 def _partitioned_orders(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per sf_dir per process) orders partitioned by month."""
-    out = _DPP_CACHE.get(sf_dir)
-    if out is None:
+    """Write (once per orders fixture version per process) orders
+    partitioned by month."""
+
+    def write() -> str:
         out = work_dir("dpp_")
         (
             load_table(spark, sf_dir, "orders")
@@ -473,8 +472,10 @@ def _partitioned_orders(spark: SparkSession, sf_dir: str) -> str:
             .partitionBy("order_month")
             .parquet(out)
         )
-        _DPP_CACHE[sf_dir] = out
-    return out
+        return out
+
+    key = ("dpp_orders", fixture_cache_key(table_path(sf_dir, "orders")))
+    return staged(key, write)
 
 
 @register("q_dpp_join", oracle=_DPP_ORACLE)
@@ -767,8 +768,7 @@ GROUP BY o_orderpriority
     "q_filtered_agg", oracle=_FILTERED_AGG_SQL.format(orders="orders")
 )
 def q_filtered_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders_fa")
-    return spark.sql(_FILTERED_AGG_SQL.format(orders="v_orders_fa"))
+    return spark.sql(_FILTERED_AGG_SQL, orders=load_table(spark, sf_dir, "orders"))
 
 
 # ---------------------------------------------------------------------------
@@ -1306,35 +1306,25 @@ SELECT CAST(cum_before // {_COMPACTION_TARGET_ROWS} AS BIGINT) AS bin_id,
 FROM packed GROUP BY 1
 """
 
-_COMPACTION_STAGE: dict[tuple, str] = {}
-_COMPACTION_LOCK = threading.Lock()
-
 
 def _bucket_files(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per process per fixture vintage) orders as 40
-    hash-bucket files. Keyed by the orders fixture's (path, mtime, size)
-    so an in-process regeneration gets a fresh stage instead of a stale
-    file layout; the staged dirs live in ``session.work_dir``'s root."""
-    src = f"{sf_dir.rstrip('/')}/orders.parquet"
-    try:
-        st = os.stat(src)
-        key = (src, st.st_mtime_ns, st.st_size)
-    except OSError:
-        key = (src, 0, 0)
-    with _COMPACTION_LOCK:
-        out = _COMPACTION_STAGE.get(key)
-        if out is None:
-            out = work_dir("compactplan_")
-            (
-                load_table(spark, sf_dir, "orders")
-                .select("o_orderkey", (F.col("o_orderkey") % 40).alias("file_key"))
-                .repartition(1)  # one writer task -> exactly one file per dir
-                .write.mode("overwrite")
-                .partitionBy("file_key")
-                .parquet(out)
-            )
-            _COMPACTION_STAGE[key] = out
-    return out
+    """Write (once per orders fixture version per process) orders as 40
+    hash-bucket files."""
+
+    def write() -> str:
+        out = work_dir("compactplan_")
+        (
+            load_table(spark, sf_dir, "orders")
+            .select("o_orderkey", (F.col("o_orderkey") % 40).alias("file_key"))
+            .repartition(1)  # one writer task -> exactly one file per dir
+            .write.mode("overwrite")
+            .partitionBy("file_key")
+            .parquet(out)
+        )
+        return out
+
+    key = ("compaction_buckets", fixture_cache_key(table_path(sf_dir, "orders")))
+    return staged(key, write)
 
 
 @register("q_compaction_plan", oracle=_COMPACTION_ORACLE)

@@ -25,11 +25,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_ingestion_service_spark.catalog import load_table
+from data_ingestion_service_spark.catalog import fixture_cache_key, load_table, table_path
 from data_ingestion_service_spark.functions import money
 from data_ingestion_service_spark.functions.vector import as_double, cosine
 from data_ingestion_service_spark.registry import register
-from data_ingestion_service_spark.session import call_persisted, session_persisted
+from data_ingestion_service_spark.session import call_persisted, session_persisted, staged
 
 # ---------------------------------------------------------------------------
 # q_rfm_segments — classic RFM customer segmentation: recency (days
@@ -2241,38 +2241,27 @@ def _q_label_noise_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _label_noise_votes(spark, sf_dir, scored)
 
 
-# Driver-side memo of the collected probe slice, keyed by the fixture
-# file's identity — the probe fetch is one extra Spark job per call
-# otherwise (~0.15s of pure scheduling at fixture scale).
-_LN_PROBE_CACHE: dict = {}
-
-
 def _label_noise_probes(spark: SparkSession, sf_dir: str):
-    import os
-
+    """The collected probe slice, once per embeddings fixture version:
+    the probe fetch is one extra Spark job per call otherwise (~0.15s of
+    pure scheduling at fixture scale)."""
     import numpy as np
 
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(path)
-        key = (path, st.st_mtime_ns, st.st_size)
-    except OSError:
-        key = (path, 0, 0)
-    hit = _LN_PROBE_CACHE.get(key)
-    if hit is None:
-        emb = load_table(spark, sf_dir, "embeddings")
+    def fetch():
         rows = (
-            emb.filter(F.col("vec_id") < _LN_PROBES)
+            load_table(spark, sf_dir, "embeddings")
+            .filter(F.col("vec_id") < _LN_PROBES)
             .select("vec_id", "label", as_double("embedding").alias("v"))
             .collect()
         )
-        hit = (
+        return (
             np.array([r.vec_id for r in rows], dtype=np.int64),
             np.array([r.label for r in rows], dtype=np.int64),
             np.array([r.v for r in rows], dtype=np.float64),  # P × 64
         )
-        _LN_PROBE_CACHE[key] = hit
-    return hit
+
+    key = ("label_noise_probes", fixture_cache_key(table_path(sf_dir, "embeddings")))
+    return staged(key, fetch)
 
 
 @register("q_label_noise", oracle=_LABEL_NOISE_ORACLE)

@@ -126,22 +126,22 @@ GROUP BY l_returnflag
 
 @register("q_sql_scripting", oracle=_SCRIPTING_ORACLE)
 def q_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("v_lineitem")
     return spark.sql(
         """
         BEGIN
           DECLARE cutoff DOUBLE DEFAULT 0;
-          SET cutoff = (SELECT round(avg(l_quantity), 4) FROM v_lineitem);
+          SET cutoff = (SELECT round(avg(l_quantity), 4) FROM {lineitem});
           SELECT
             l_returnflag,
             count(*) AS n_above,
             CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
               AS price_cents
-          FROM v_lineitem
+          FROM {lineitem}
           WHERE l_quantity > cutoff
           GROUP BY l_returnflag;
         END
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -198,17 +198,15 @@ FROM keys
 
 @register("q_variant_explode", oracle=_VARIANT_EXPLODE_ORACLE)
 def q_variant_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").filter(
-        F.col("event_id") < 2000
-    ).createOrReplaceTempView("v_events_ve")
     return spark.sql(
         """
         SELECT e.event_id,
                v.key                    AS prop_key,
                CAST(v.value AS INT)     AS prop_val
-        FROM v_events_ve e,
+        FROM {events} e,
              LATERAL variant_explode(parse_json(e.props)) v
-        """
+        """,
+        events=load_table(spark, sf_dir, "events").filter(F.col("event_id") < 2000),
     )
 
 
@@ -286,8 +284,7 @@ def q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the recursive-CTE surface, which is this key's purpose; the
     # depth-batched oracle rewrite (see _RECURSIVE_ORACLE note) already
     # removed the analogous cost oracle-side.
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders_rec")
-    return spark.sql(_RECURSIVE_ENGINE_SQL.format(src="v_orders_rec"))
+    return spark.sql(_RECURSIVE_ENGINE_SQL, src=load_table(spark, sf_dir, "orders"))
 
 
 # ---------------------------------------------------------------------------
@@ -312,7 +309,6 @@ GROUP BY l_returnflag
 
 @register("q_sql_udf", oracle=_SQL_UDF_ORACLE)
 def q_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("v_li_udf")
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION to_cents(p DOUBLE) "
         "RETURNS BIGINT RETURN CAST(round(p * 100) AS BIGINT)"
@@ -324,9 +320,10 @@ def q_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
           CAST(sum(to_cents(l_extendedprice)) AS BIGINT) AS gross_cents,
           CAST(sum(to_cents(l_extendedprice) * to_cents(1 - l_discount)) AS BIGINT)
             AS net_e4
-        FROM v_li_udf
+        FROM {lineitem}
         GROUP BY l_returnflag
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -351,16 +348,16 @@ GROUP BY o_orderpriority
 
 @register("q_pipe_syntax", oracle=_PIPE_ORACLE)
 def q_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders_pipe")
     return spark.sql(
         """
-        FROM v_orders_pipe
+        FROM {orders}
         |> WHERE o_orderstatus = 'O'
         |> AGGREGATE count(*) AS n_orders,
                      CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
                        AS cents
            GROUP BY o_orderpriority
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -384,18 +381,18 @@ GROUP BY o_orderpriority
 
 @register("q_parameterized", oracle=_PARAMETERIZED_ORACLE)
 def q_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders_param")
     return spark.sql(
         """
         SELECT
           o_orderpriority,
           count(*) AS n_orders,
           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
-        FROM v_orders_param
+        FROM {orders}
         WHERE o_totalprice >= :min_price AND o_orderstatus = :status
         GROUP BY o_orderpriority
         """,
         args={"min_price": 100000, "status": "F"},
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -412,8 +409,7 @@ def q_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _lateral_sql(customer: str, orders: str) -> str:
-    return f"""
+_LATERAL_SQL = """
 SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
 FROM {customer} c,
 LATERAL (
@@ -427,14 +423,15 @@ WHERE c.c_mktsegment = 'BUILDING'
 """
 
 
-_LATERAL_ORACLE = _lateral_sql("customer", "orders")
-
-
-@register("q_lateral_topk", oracle=_LATERAL_ORACLE)
+@register(
+    "q_lateral_topk", oracle=_LATERAL_SQL.format(customer="customer", orders="orders")
+)
 def q_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("v_cust_lat")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("v_ord_lat")
-    return spark.sql(_lateral_sql("v_cust_lat", "v_ord_lat"))
+    return spark.sql(
+        _LATERAL_SQL,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -464,9 +461,6 @@ ORDER BY ALL
 
 @register("q_group_by_all", oracle=_GROUP_BY_ALL_ORACLE)
 def q_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "v_orders_gba"
-    )
     return spark.sql(
         """
         SELECT o_orderstatus,
@@ -474,8 +468,9 @@ def q_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(count(*) AS BIGINT) AS n_orders,
                CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
                  AS cents
-        FROM v_orders_gba
+        FROM {orders}
         GROUP BY ALL
         ORDER BY ALL
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )

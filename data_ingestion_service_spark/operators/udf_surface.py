@@ -103,19 +103,20 @@ def _make_installments_udtf():
 
 @register("q_udtf_installments", oracle=_UDTF_ORACLE)
 def q_udtf_installments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").filter(
+    subset = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") % 50 == 0
     ).select(
         "o_orderkey",
         money.cents("o_totalprice").alias("cents"),
-    ).createOrReplaceTempView("udtf_orders_subset")
+    )
     spark.udtf.register("installments_udtf", _make_installments_udtf())
     return spark.sql(
         """
         SELECT o.o_orderkey, t.installment, t.amount_cents
-        FROM udtf_orders_subset o,
+        FROM {subset} o,
              LATERAL installments_udtf(o.cents) t
-        """
+        """,
+        subset=subset,
     )
 
 

@@ -21,6 +21,8 @@ from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
+from data_ingestion_service_spark.session import call_scope
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 F = TypeVar("F", bound=QueryFn)
 
@@ -33,11 +35,16 @@ def register(name: str, oracle: str | None = None) -> Callable[[F], F]:
 
     ``oracle=None`` marks a genuinely non-SQL-expressible operator — the
     driver then records a weaker rows-only check (SURVEY.md §2 legend: ◐).
+    Returns ``fn`` wrapped once in ``session.call_scope()``; registering
+    the wrapper under a second name does not wrap it again.
     """
 
     def deco(fn: F) -> F:
         if name in QUERIES:
             raise ValueError(f"duplicate query key: {name}")
+        if not getattr(fn, "_call_scoped", False):
+            fn = call_scope()(fn)
+            fn._call_scoped = True
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle

@@ -16,10 +16,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_ingestion_service_spark.catalog import load_table
+from data_ingestion_service_spark.catalog import fixture_cache_key, load_table, table_path
 from data_ingestion_service_spark.functions import money
 from data_ingestion_service_spark.registry import register
-from data_ingestion_service_spark.session import work_dir
+from data_ingestion_service_spark.session import call_persisted, staged, work_dir
 
 _CSV_ORACLE = """
 SELECT l_returnflag, count(*) AS n,
@@ -307,8 +307,6 @@ def src_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SORTED_SINK_DIRS: dict[str, str] = {}
-
 _SORTED_SINK_ORACLE = """
 SELECT
   CAST(year(l_shipdate) AS INTEGER) AS ship_year,
@@ -332,8 +330,7 @@ def sink_sorted_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_shipdate", "l_extendedprice"
     )
-    out = _SORTED_SINK_DIRS.get(sf_dir) or work_dir("sorted_")
-    _SORTED_SINK_DIRS[sf_dir] = out
+    out = work_dir("sorted_")
     (
         li.repartitionByRange(8, "l_shipdate")
         .sortWithinPartitions("l_shipdate")
@@ -457,9 +454,6 @@ SELECT 2 AS version, count(*) AS n_orders,
 FROM orders
 """
 
-_SNAPSHOT_DIRS: dict[str, str] = {}
-
-
 @register("q_time_travel", oracle=_TIME_TRAVEL_ORACLE)
 def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Manifest-based snapshot reads (the lakehouse time-travel core,
@@ -472,8 +466,7 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
     import os
 
-    root = _SNAPSHOT_DIRS.get(sf_dir)
-    if root is None:
+    def commit_snapshots() -> str:
         root = work_dir("snapshots_")
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice"
@@ -497,7 +490,12 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         for ver, files in ((1, v1), (2, v2)):
             with open(f"{root}/manifests/v{ver}.json", "w") as fh:
                 json.dump({"version": ver, "files": files}, fh)
-        _SNAPSHOT_DIRS[sf_dir] = root
+        return root
+
+    root = staged(
+        ("snapshots", fixture_cache_key(table_path(sf_dir, "orders"))),
+        commit_snapshots,
+    )
 
     def read_version(ver: int) -> DataFrame:
         with open(f"{root}/manifests/v{ver}.json") as fh:
@@ -701,7 +699,12 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.dataSource.register(_make_jsonl_sink())
     out = work_dir("pysink_") + "/sink"
-    agg = (
+    # Persist so the sink write and the verification read the SAME
+    # materialization — one orders scan, not two (VERDICT r9 item 7: of
+    # the key's 3.5s wall, ~0.9s was the duplicate aggregate scan plus
+    # two extra verification actions; the Python-datasource worker
+    # round-trip itself is the feature under test and stays).
+    agg = call_persisted(
         load_table(spark, sf_dir, "orders")
         .groupBy("o_orderpriority")
         .agg(
@@ -709,45 +712,36 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(money.cents("o_totalprice")).cast("long").alias("total_cents"),
         )
     )
-    # Persist so the sink write and the verification read the SAME
-    # materialization — one orders scan, not two (VERDICT r9 item 7: of
-    # the key's 3.5s wall, ~0.9s was the duplicate aggregate scan plus
-    # two extra verification actions; the Python-datasource worker
-    # round-trip itself is the feature under test and stays).
-    agg.persist()
-    try:
-        # coalesce(1): the aggregate is ≤|priorities| rows, but the cached
-        # plan keeps the shuffle's partitioning (AQE does not re-plan
-        # cached output), so the sink write otherwise launches one Python
-        # writer TASK — a worker round-trip and a near-empty part file —
-        # per shuffle partition (measured r12 at sf0.001: 32 part files
-        # for 5 rows, write wall 0.82 → 0.55s with the coalesce; guide §6
-        # output sizing). One task also makes the manifest's two-phase
-        # commit read one part, which is the shape a real manifest sink
-        # wants for a result-sized table.
-        agg.coalesce(1).write.format("jsonl_manifest").option("path", out).mode(
-            "append"
-        ).save()
-        with open(f"{out}/_MANIFEST") as f:
-            manifest = json.load(f)
-        back = spark.read.schema(
-            "o_orderpriority string, n_orders bigint, total_cents bigint"
-        ).json(f"{out}/part-*.jsonl")
-        # Full row-set equality (stronger than the old count/total
-        # probes) in two bounded actions: the group-by output is ≤5 rows.
-        back_rows = {tuple(r) for r in back.collect()}
-        agg_rows = {tuple(r) for r in agg.collect()}
-        if manifest["total_rows"] != len(back_rows) or back_rows != agg_rows:
-            raise AssertionError(
-                f"python sink mismatch: {manifest['total_rows']} manifest "
-                f"rows, {len(back_rows)} read back, sets equal: "
-                f"{back_rows == agg_rows}"
-            )
-        for p in manifest["parts"]:
-            if not os.path.exists(p):
-                raise AssertionError(f"manifest names missing part {p}")
-    finally:
-        agg.unpersist()
+    # coalesce(1): the aggregate is ≤|priorities| rows, but the cached
+    # plan keeps the shuffle's partitioning (AQE does not re-plan
+    # cached output), so the sink write otherwise launches one Python
+    # writer TASK — a worker round-trip and a near-empty part file —
+    # per shuffle partition (measured r12 at sf0.001: 32 part files
+    # for 5 rows, write wall 0.82 → 0.55s with the coalesce; guide §6
+    # output sizing). One task also makes the manifest's two-phase
+    # commit read one part, which is the shape a real manifest sink
+    # wants for a result-sized table.
+    agg.coalesce(1).write.format("jsonl_manifest").option("path", out).mode(
+        "append"
+    ).save()
+    with open(f"{out}/_MANIFEST") as f:
+        manifest = json.load(f)
+    back = spark.read.schema(
+        "o_orderpriority string, n_orders bigint, total_cents bigint"
+    ).json(f"{out}/part-*.jsonl")
+    # Full row-set equality (stronger than the old count/total
+    # probes) in two bounded actions: the group-by output is ≤5 rows.
+    back_rows = {tuple(r) for r in back.collect()}
+    agg_rows = {tuple(r) for r in agg.collect()}
+    if manifest["total_rows"] != len(back_rows) or back_rows != agg_rows:
+        raise AssertionError(
+            f"python sink mismatch: {manifest['total_rows']} manifest "
+            f"rows, {len(back_rows)} read back, sets equal: "
+            f"{back_rows == agg_rows}"
+        )
+    for p in manifest["parts"]:
+        if not os.path.exists(p):
+            raise AssertionError(f"manifest names missing part {p}")
     return back.select("o_orderpriority", "n_orders", "total_cents")
 
 
@@ -797,17 +791,16 @@ def q_dead_letter_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey BIGINT, price_cents BIGINT, o_orderstatus STRING, "
         "_corrupt_record STRING"
     )
-    back = (
+    # Spark refuses filters that reference ONLY the internal corrupt
+    # column on the lazy reader (the raw record would have to be
+    # re-parsed per predicate); persisting materializes the parse once,
+    # which is also what the replay loop wants — quarantine triage
+    # reads the same parsed batch repeatedly.
+    back = call_persisted(
         spark.read.schema(schema)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .csv(out)
-        # Spark refuses filters that reference ONLY the internal corrupt
-        # column on the lazy reader (the raw record would have to be
-        # re-parsed per predicate); caching materializes the parse once,
-        # which is also what the replay loop wants — quarantine triage
-        # reads the same parsed batch repeatedly.
-        .cache()
     )
     clean = back.filter(F.col("_corrupt_record").isNull()).select(
         "o_orderkey", "price_cents", "o_orderstatus", F.lit(0).alias("recovered")

@@ -54,7 +54,12 @@ from data_ingestion_service_spark.catalog import (
 )
 from data_ingestion_service_spark.functions import alerts, models, money
 from data_ingestion_service_spark.registry import register as _register_raw
-from data_ingestion_service_spark.session import ensure_session_confs, work_dir
+from data_ingestion_service_spark.session import (
+    call_persisted,
+    ensure_session_confs,
+    staged,
+    work_dir,
+)
 
 # ---------------------------------------------------------------------------
 # Stream-session isolation (VERDICT r9 item 2 / ADVICE r9): the drain
@@ -346,9 +351,6 @@ def raw_events_stream(
 # pyarrow-written parquet of the same rows is an equivalence relied on).
 # ---------------------------------------------------------------------------
 
-_STAGE_LOCK = threading.Lock()
-_STAGES: dict[tuple, "_ReplayStage"] = {}
-
 
 class _ReplayStage:
     """Staged replay artifacts for one events-fixture vintage."""
@@ -519,15 +521,8 @@ def replay_stage(spark: SparkSession, sf_dir: str) -> _ReplayStage:
     """The staged-artifact registry for ``sf_dir``'s current fixture
     vintage (keyed by ``fixture_cache_key``: an in-place regeneration
     gets a fresh stage, never stale files or a stale ts kind)."""
-    key = fixture_cache_key(table_path(sf_dir, "events"))
-    with _STAGE_LOCK:
-        stage = _STAGES.get(key)
-    if stage is None:
-        # Kind probe may run a Spark read; keep it outside _STAGE_LOCK.
-        stage = _ReplayStage(spark, sf_dir)
-        with _STAGE_LOCK:
-            stage = _STAGES.setdefault(key, stage)
-    return stage
+    key = ("replay_stage", fixture_cache_key(table_path(sf_dir, "events")))
+    return staged(key, lambda: _ReplayStage(spark, sf_dir))
 
 
 def _stage_replay_dir(work: str, entries: list[tuple[str, str]]) -> str:
@@ -542,22 +537,6 @@ def _stage_replay_dir(work: str, entries: list[tuple[str, str]]) -> str:
         mt = now - 30 * (len(entries) - 1 - i)
         os.utime(f"{replay}/{name}", (mt, mt))
     return replay
-
-
-_SINK_DIRS: list[str] = []
-
-
-def _reap_sink_dirs() -> None:
-    """Delete drained parquet-sink temp dirs (ADVICE r7: three bench
-    samples of a ~36M-row skewed-sf1 join otherwise accumulate in /tmp).
-    Called at the start of each new drain, it keeps the last 2;
-    ``session.work_dir``'s root takes those at interpreter exit. The slack
-    assumes a caller reads a result before two more drains start.
-    Sequential callers (``driver_sim.py``, the tests) do; concurrent ones
-    do not: ``bench.py``'s 8-thread pool and perfbench's clients can have
-    a third drain reap a dir another thread is still reading."""
-    while len(_SINK_DIRS) > 2:
-        shutil.rmtree(_SINK_DIRS.pop(0), ignore_errors=True)
 
 
 class _LastDrain(threading.local):
@@ -640,9 +619,7 @@ def run_to_parquet(df: DataFrame, spark: SparkSession) -> DataFrame:
     second copy. The parquet sink writes distributed and the read-back
     scans like any other table; this is also the only sink shape that
     exists at 100 TB."""
-    _reap_sink_dirs()
     work = work_dir("sink_")
-    _SINK_DIRS.append(work)
     _drain(
         df.writeStream.format("parquet")
         .option("path", f"{work}/out")
@@ -2792,7 +2769,7 @@ def q_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to the per-batch join shape this replaced. The broadcast hint
     # below is likewise replay-scale: drop it at 100 TB and let AQE
     # size the join from the persisted dim's runtime stats.
-    dim = (
+    dim = call_persisted(
         orders.groupBy(F.col("o_custkey").alias("dim_user"))
         .agg(
             F.collect_list(
@@ -2802,12 +2779,9 @@ def q_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("os")
         )
-        .persist()
     )
     ev = events_stream(spark, sf_dir)
-    _reap_sink_dirs()
     work = work_dir("asof_")
-    _SINK_DIRS.append(work)
     out_dir = f"{work}/out"
     os.makedirs(out_dir)
 
@@ -2837,17 +2811,11 @@ def q_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(f"{out_dir}/b{batch_id}")
         )
 
-    try:
-        _drain(
-            ev.writeStream.foreachBatch(enrich)
-            .option("checkpointLocation", f"{work}/ckpt"),
-            spark,
-        )
-    finally:
-        # The drain is this operator's terminal action and the
-        # returned DataFrame reads the sink parquet, not the dim —
-        # retire the per-call dim cache eagerly (ADVICE r11 medium).
-        dim.unpersist()
+    _drain(
+        ev.writeStream.foreachBatch(enrich)
+        .option("checkpointLocation", f"{work}/ckpt"),
+        spark,
+    )
     # Explicit schema (zero-row drains have no footer to infer from) +
     # recursive lookup over the per-batch subdirs.
     from pyspark.sql.types import StructField, StructType

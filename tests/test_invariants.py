@@ -2071,6 +2071,211 @@ def test_work_dirs_removed_at_exit(tmp_path, sf_dir):
     assert not left, f"work dirs left after exit: {left}"
 
 
+def test_call_resources_live_until_next_call(spark, sf_dir, monkeypatch):
+    """A registered call's work dirs and per-call persists live until the
+    calling thread's next registered call: a result collects until then,
+    another thread's call never removes it, and a thread's last call is
+    released when the thread exits. Staged (build-once) dirs survive."""
+    import gc
+    import os
+    import threading
+    from urllib.parse import urlparse
+
+    from data_ingestion_service_spark import session
+    from data_ingestion_service_spark.operators import mining
+    from data_ingestion_service_spark.streaming import stream_queries as sq
+
+    def call_dirs(df):
+        return {os.path.dirname(urlparse(f).path) for f in df.inputFiles()}
+
+    def next_call():
+        QUERIES["q_semi_anti"](spark, sf_dir).collect()
+
+    csv = QUERIES["src_csv_roundtrip"](spark, sf_dir)
+    [out] = call_dirs(csv)
+    expected = sorted(csv.collect())
+    assert os.path.isdir(out)
+    next_call()
+    assert not os.path.exists(out)
+
+    held, ready, go = {}, threading.Event(), threading.Event()
+
+    def on_b():
+        df = QUERIES["src_csv_roundtrip"](spark, sf_dir)
+        held["dirs"] = call_dirs(df)
+        ready.set()
+        go.wait(60)
+        held["rows"] = sorted(df.collect())
+
+    b = threading.Thread(target=on_b)
+    b.start()
+    assert ready.wait(300)
+    next_call()
+    go.set()
+    b.join(300)
+    assert held["rows"] == expected
+    gc.collect()
+    assert not any(os.path.exists(d) for d in held["dirs"]), "thread exit kept its dirs"
+
+    frames = []
+
+    def recording(df):
+        frames.append(session.call_persisted(df))
+        return frames[-1]
+
+    monkeypatch.setattr(mining, "call_persisted", recording)
+    QUERIES["q_market_basket"](spark, sf_dir).collect()
+    assert frames and all(f.storageLevel.useMemory for f in frames)
+    next_call()
+    assert all(not f.storageLevel.useMemory and not f.storageLevel.useDisk for f in frames)
+
+    QUERIES["q_events_tumbling"](spark, sf_dir).collect()
+    stage = sq.replay_stage(spark, sf_dir)
+    split = stage.splits("eid2")
+    next_call()
+    QUERIES["q_events_tumbling"](spark, sf_dir).collect()
+    assert sq.replay_stage(spark, sf_dir) is stage
+    assert all(os.path.exists(f) for f in split)
+
+
+def test_staged_builds_once_under_threads():
+    """``staged`` runs ``build`` once per key when more threads than cores
+    ask for it at once, and a work dir made by the build outlives the
+    calling thread's next call and its exit."""
+    import os
+    import sys
+    import threading
+    import uuid
+
+    from data_ingestion_service_spark import session
+
+    key = ("staged_stress", uuid.uuid4().hex)
+    builds, results = [], []
+    start = threading.Barrier(4 * (os.cpu_count() or 1))
+
+    def build():
+        builds.append(1)
+        return session.work_dir("stress_")
+
+    def worker():
+        start.wait(30)
+        results.append(session.staged(key, build))
+        with session.call_scope():
+            pass
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(start.parties)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(builds) == 1 and len(results) == len(threads)
+    assert set(results) == {results[0]} and os.path.isdir(results[0])
+
+
+SQL_SURFACE_KEYS = (
+    "q_udtf_installments",
+    "q_grouping_sets",
+    "q_sql_frontend",
+    "q_filtered_agg",
+    "q_sql_scripting",
+    "q_variant_explode",
+    "q_recursive_cte",
+    "q_sql_udf",
+    "q_pipe_syntax",
+    "q_parameterized",
+    "q_lateral_topk",
+    "q_group_by_all",
+)
+
+
+def test_sql_surface_keys_leave_caller_views(fresh_spark, sf_dir):
+    """The SQL-surface keys pass their frames to ``spark.sql`` as keyword
+    arguments, so they register no fixed-name view on the caller's
+    session: a caller's own ``v_orders`` keeps its rows and the set of
+    temp views is the same after the keys ran."""
+
+    def temp_views():
+        return {t.name for t in fresh_spark.catalog.listTables() if t.isTemporary}
+
+    own = fresh_spark.range(3).toDF("x")
+    own.createOrReplaceTempView("v_orders")
+    before = temp_views()
+    for key in SQL_SURFACE_KEYS:
+        QUERIES[key](fresh_spark, sf_dir).collect()
+    assert temp_views() == before
+    assert sorted(fresh_spark.table("v_orders").collect()) == sorted(own.collect())
+
+
+def test_resource_lifetimes_in_session():
+    """Resource lifetimes have one owner. Outside ``session.py``,
+    ``catalog.py`` and ``registry.py`` no module keeps a module-level
+    container that a cache fills (an empty dict/list/set, a weak
+    dictionary, a deque), except ``_STREAM_SESSIONS`` and
+    ``_BUCKETED_TABLES``; and only ``session.py`` and the warehouse GC
+    (``engine_features._write_bucketed_inputs``) call ``rmtree``. Per-call
+    dirs and frames go through ``work_dir``/``call_persisted``, build-once
+    values through ``staged``/``session_persisted``."""
+    import ast
+    from pathlib import Path
+
+    import data_ingestion_service_spark as pkg
+
+    owners = {"session.py", "catalog.py", "registry.py"}
+    allowed = {"_STREAM_SESSIONS", "_BUCKETED_TABLES"}
+    containers = {
+        "dict", "list", "set", "deque", "OrderedDict", "defaultdict",
+        "WeakKeyDictionary", "WeakValueDictionary", "WeakSet",
+    }
+
+    def is_empty_container(v):
+        if isinstance(v, ast.Dict):
+            return not v.keys
+        if isinstance(v, (ast.List, ast.Set)):
+            return not v.elts
+        if isinstance(v, ast.Call) and not v.args and not v.keywords:
+            f = v.func
+            return (f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")) in containers
+        return False
+
+    caches, rmtrees = [], []
+
+    def visit(node, fn, rel):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.Call) and ast.unparse(child.func).endswith("rmtree"):
+                rmtrees.append((rel, fn))
+            inner = child.name if isinstance(child, ast.FunctionDef) else fn
+            visit(child, inner, rel)
+
+    root = Path(pkg.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        rel = str(path.relative_to(root))
+        tree = ast.parse(path.read_text())
+        visit(tree, None, rel)
+        if path.name in owners:
+            continue
+        for node in tree.body:
+            if isinstance(node, (ast.Assign, ast.AnnAssign)) and is_empty_container(node.value):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                caches += [
+                    f"{rel}:{node.lineno} {ast.unparse(t)}"
+                    for t in targets
+                    if ast.unparse(t) not in allowed
+                ]
+    assert not caches, f"module-level caches outside session.py: {caches}"
+    stray = [
+        r for r in rmtrees
+        if r[0] != "session.py"
+        and r != ("operators/engine_features.py", "_write_bucketed_inputs")
+    ]
+    assert not stray, f"rmtree outside session.py and the warehouse GC: {stray}"
+
+
 def test_stream_queries_drain_in_one_place():
     """Every stream query in stream_queries.py starts, waits and stops in
     ``_drain``: one ``.start()`` call in the module, and no

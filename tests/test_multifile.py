@@ -111,6 +111,54 @@ def test_load_table_sees_part_rewritten_in_place(spark, tmp_path):
     assert load_table(spark, str(tmp_path), "region").count() == 2005
 
 
+def test_staged_layouts_follow_orders_rewritten_in_place(spark, sf_dir, tmp_path):
+    """q_dpp_join, q_time_travel and q_compaction_plan stage files built
+    from orders once per process; the stage is keyed on the table's
+    version. Rewriting orders in place, or one part of a directory-shaped
+    orders, must restage: a stage keyed by sf_dir (or by the directory's
+    own stat) keeps serving the old rows."""
+    import shutil
+
+    import pyarrow.compute as pc
+
+    def fixture_copy(name: str) -> str:
+        out = tmp_path / name
+        out.mkdir()
+        for t in TABLES:
+            if t != "orders":
+                os.symlink(table_path(sf_dir, t), out / f"{t}.parquet")
+        return str(out)
+
+    def rows(key: str, sf: str) -> list:
+        return QUERIES[key](spark, sf).collect()
+
+    single = fixture_copy("single")
+    shutil.copy(table_path(sf_dir, "orders"), table_path(single, "orders"))
+    orders = pq.read_table(table_path(single, "orders"))
+    before = {k: rows(k, single) for k in ("q_dpp_join", "q_time_travel")}
+    half = orders.slice(0, orders.num_rows // 2)
+    pq.write_table(half, table_path(single, "orders"))
+    n_1997 = pc.sum(pc.equal(pc.year(half.column("o_orderdate")), 1997)).as_py()
+    dpp = rows("q_dpp_join", single)
+    assert dpp != before["q_dpp_join"]
+    assert sum(r.n_orders for r in dpp) == n_1997
+    travel = {r.version: r.n_orders for r in rows("q_time_travel", single)}
+    assert rows("q_time_travel", single) != before["q_time_travel"]
+    assert travel[2] == half.num_rows
+
+    multi = fixture_copy("multi")
+    tdir = tmp_path / "multi" / "orders.parquet"
+    tdir.mkdir()
+    n = orders.num_rows // 2
+    for k in range(2):
+        pq.write_table(orders.slice(k * n, n), str(tdir / f"part-{k:05d}.parquet"))
+    assert sum(r.bin_rows for r in rows("q_compaction_plan", multi)) == orders.num_rows
+    st = os.stat(tdir)
+    pq.write_table(orders.slice(0, 10), str(tdir / "part-00001.parquet"))
+    os.utime(tdir, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert sum(r.bin_rows for r in rows("q_compaction_plan", multi)) == n + 10
+
+
 def test_note_stream_input_sums_directory(multi_sf_dir):
     path = table_path(multi_sf_dir, "events")
     sq._note_stream_input(path)

@@ -193,19 +193,18 @@ def test_sorted_write_rowgroup_stats(spark, sf_dir):
     row-group min/max stats on l_shipdate are non-overlapping across the
     sorted ranges, so a time-range scan prunes to a handful of row
     groups via footer stats alone (the 100 TB time-series layout)."""
-    import glob
+    from urllib.parse import urlparse
 
     import pyarrow.parquet as pq
 
-    from data_ingestion_service_spark.sources.io import (
-        _SORTED_SINK_DIRS,
-        sink_sorted_parquet,
-    )
+    from data_ingestion_service_spark.sources.io import sink_sorted_parquet
 
-    sink_sorted_parquet(spark, sf_dir).collect()
-    out = _SORTED_SINK_DIRS[sf_dir]
+    result = sink_sorted_parquet(spark, sf_dir)
+    result.collect()
+    files = sorted(urlparse(f).path for f in result.inputFiles())
+    assert files and all(f.endswith(".parquet") for f in files), files
     ranges = []
-    for f in sorted(glob.glob(f"{out}/*.parquet")):
+    for f in files:
         md = pq.ParquetFile(f).metadata
         idx = next(
             i for i in range(len(md.schema)) if md.schema.column(i).name == "l_shipdate"
